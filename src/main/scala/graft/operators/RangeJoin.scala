@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
+  /** Name of the derived bin column on both join sides. The planner rule
+    * [[graft.plans.RangeBinJoinRule]] bins under the same name and leaves
+    * a join alone when either side already carries it, so a join built
+    * here is binned once. */
+  val BinCol = "__graft_bin"
+
   /** Re-project every column through an alias, minting fresh attribute
     * IDs. When both join sides derive from the SAME base frame (a self
     * range-join, e.g. gene×gene overlap), the key columns otherwise
@@ -55,16 +61,16 @@ object RangeJoin {
       binWidth: Long = 1000000L): DataFrame = {
     val w = lit(binWidth)
     val ivBinned = freshAttrs(intervals).withColumn(
-      "__bin",
+      BinCol,
       explode(sequence(floor(col(start) / w).cast("long"),
                        floor(col(stop) / w).cast("long"))))
-    val ptBinned = points.withColumn("__bin", floor(col(pos) / w).cast("long"))
-    val joinCond = (keys :+ "__bin")
+    val ptBinned = points.withColumn(BinCol, floor(col(pos) / w).cast("long"))
+    val joinCond = (keys :+ BinCol)
       .map(k => ptBinned(k) === ivBinned(k))
       .reduce(_ && _) && ivBinned(start) <= ptBinned(pos) && ptBinned(pos) <= ivBinned(stop)
     val raw = ptBinned.join(ivBinned, joinCond, "inner")
     val dupCols: Seq[Column] =
-      Seq(ivBinned("__bin"), ptBinned("__bin")) ++ keys.map(ivBinned(_))
+      Seq(ivBinned(BinCol), ptBinned(BinCol)) ++ keys.map(ivBinned(_))
     dupCols.foldLeft(raw)(_ drop _)
   }
 
@@ -89,17 +95,17 @@ object RangeJoin {
       keys: Seq[String] = Nil,
       binWidth: Long = 1000000L): DataFrame = {
     val w = lit(binWidth)
-    val aB = a.withColumn("__bin",
+    val aB = a.withColumn(BinCol,
       explode(sequence(floor(col(startA) / w).cast("long"),
         floor(col(stopA) / w).cast("long"))))
-    val bB = freshAttrs(b).withColumn("__bin",
+    val bB = freshAttrs(b).withColumn(BinCol,
       explode(sequence(floor(col(startB) / w).cast("long"),
         floor(col(stopB) / w).cast("long"))))
-    val joinCond = (keys :+ "__bin")
+    val joinCond = (keys :+ BinCol)
       .map(k => aB(k) === bB(k)).reduce(_ && _) &&
       aB(startA) <= bB(stopB) && bB(startB) <= aB(stopA) &&
-      aB("__bin") === floor(greatest(aB(startA), bB(startB)) / w).cast("long")
+      aB(BinCol) === floor(greatest(aB(startA), bB(startB)) / w).cast("long")
     val raw = aB.join(bB, joinCond, "inner")
-    (Seq(aB("__bin"), bB("__bin")) ++ keys.map(bB(_))).foldLeft(raw)(_ drop _)
+    (Seq(aB(BinCol), bB(BinCol)) ++ keys.map(bB(_))).foldLeft(raw)(_ drop _)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DnaOps
@@ -15,19 +15,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * VariantPostProcessing.java:472-492), translate both strands and call
   * the AA change, synonymous status and frameshift.
   *
-  * Spark shape vs the reference's: GeneCache/TranscriptCache HashMaps →
-  * joins (the gene containment via [[RangeJoin]]'s binned equi-join);
-  * per-variant cursor loop → one narrow pass after a per-(variant,
-  * transcript) aggregation; chromosome FASTA file reads → a pluggable
-  * [[GenomeSource]] evaluated inside the final distributed map (real
-  * deployments back it with a broadcast FASTA index, see
-  * [[graft.sources.FastaGenome]]; tests use [[FixedGenome]]; the
-  * synthetic default [[Md5Genome]] is deterministic AND reproducible in
-  * SQL, so the full pipeline has a DuckDB oracle).
+  * Spark shape vs the reference's: the GeneCache / TranscriptCache
+  * HashMaps → a per-transcript model (exon array, UTR bounds, UTR-trimmed
+  * exons, reference CDS) built once per call in one tr_id-keyed pass and
+  * broadcast; the per-variant cursor loop → one narrow pass over
+  * [[RangeJoin]]'s binned gene containment joined to that model, with no
+  * exchange on the variant stream; chromosome FASTA file reads → a
+  * pluggable [[GenomeSource]] read in the model pass, once per coding
+  * transcript (real deployments back it with a broadcast FASTA index,
+  * see [[graft.sources.FastaGenome]] and [[graft.sources.PackedGenome]];
+  * tests use [[FixedGenome]]; the synthetic default [[Md5Genome]] is
+  * deterministic AND reproducible in SQL, so the full pipeline has a
+  * DuckDB oracle).
   */
 object TranscriptAnnotator {
 
-  /** 1-based inclusive genomic sequence access. */
+  /** 1-based inclusive genomic sequence access. Every source answers an
+    * out-of-range request the same way and never throws: positions
+    * below 1 and past the chromosome's end do not exist, so the range is
+    * clamped to the chromosome, and an empty or inverted range, or a
+    * chromosome the source does not hold, gives "". Sources are
+    * therefore interchangeable even on malformed gene models. */
   trait GenomeSource extends Serializable {
     def chunk(chr: String, start: Long, stopInclusive: Long): String
   }
@@ -36,17 +44,21 @@ object TranscriptAnnotator {
   case class FixedGenome(chrs: Map[String, String]) extends GenomeSource {
     def chunk(chr: String, start: Long, stop: Long): String = {
       val s = chrs.getOrElse(chr, "")
-      if (s.isEmpty) "" else s.substring(
-        math.max(0, (start - 1).toInt), math.min(s.length, stop.toInt))
+      val b = math.max(0L, start - 1)
+      val e = math.min(s.length.toLong, stop)
+      if (e <= b) "" else s.substring(b.toInt, e.toInt)
     }
   }
 
-  /** Deterministic synthetic genome: base at (chr,pos) from a mixed hash. */
+  /** Deterministic synthetic genome: base at (chr,pos) from a mixed hash.
+    * Chromosomes have no end. */
   case class HashGenome() extends GenomeSource {
     private val bases = "ACGT"
     def chunk(chr: String, start: Long, stop: Long): String = {
-      val sb = new java.lang.StringBuilder((stop - start + 1).toInt)
-      var p = start
+      val from = math.max(1L, start)
+      if (stop < from) return ""
+      val sb = new java.lang.StringBuilder((stop - from + 1).toInt)
+      var p = from
       val ch = chr.hashCode.toLong
       while (p <= stop) {
         var h = p * 0x9E3779B97F4A7C15L + ch * 0xC2B2AE3D27D4EB4FL
@@ -63,23 +75,24 @@ object TranscriptAnnotator {
     * DuckDB's `translate(substr(md5(chr||':'||pos),1,1),
     * '0123456789abcdef','ACGTACGTACGTACGT')`, so an external SQL engine
     * can rebuild the identical genome and oracle-check the whole
-    * annotation pipeline. */
+    * annotation pipeline. Chromosomes have no end. */
   case class Md5Genome() extends GenomeSource {
     private val bases = "ACGTACGTACGTACGT"
     def chunk(chr: String, start: Long, stop: Long): String = {
+      val from = math.max(1L, start)
+      if (stop < from) return ""
       val md = java.security.MessageDigest.getInstance("MD5")
-      val sb = new java.lang.StringBuilder((stop - start + 1).toInt)
+      val sb = new java.lang.StringBuilder((stop - from + 1).toInt)
       // byte-identical input to (chr + ":" + p).getBytes("UTF-8"), built
       // without the per-base String + byte[] allocations (this loop runs
       // once per genome BASE and dominates the annotator's CPU)
       val prefix = (chr + ":").getBytes("UTF-8")
       val digits = new Array[Byte](20)
       val out = new Array[Byte](16)
-      var p = start
+      var p = from
       while (p <= stop) {
         md.update(prefix)
         var i = 20; var q = p
-        if (q == 0) { i -= 1; digits(i) = '0' }
         while (q > 0) { i -= 1; digits(i) = ('0' + (q % 10)).toByte; q /= 10 }
         md.update(digits, i, 20 - i)
         md.digest(out, 0, 16)
@@ -90,9 +103,10 @@ object TranscriptAnnotator {
     }
   }
 
-  /** One (variant, transcript) pair ready for the CDS step, with the
-    * transcript's reference CDS attached (null only for rows that never
-    * reach the coding branch). */
+  /** One (variant, transcript) pair ready for the AA call. `exons` and
+    * `cds_plus` (the transcript's reference CDS) ride only on rows that
+    * can reach it — exonic rows of coding transcripts — and are empty /
+    * None on every other row. */
   case class VarTr(
       var_id: Long, chr: String, pos: Long, var_stop: Long,
       ref_nuc: String, var_nuc: String,
@@ -100,10 +114,6 @@ object TranscriptAnnotator {
       in_exon: Boolean, in_u3: Boolean, in_u5: Boolean, near_splice: Boolean,
       exons: Seq[ExonIv], cds_plus: Option[String])
   case class ExonIv(start: Long, stop: Long)
-  /** CDS kernel input/output rows (dimension side; public — Spark's
-    * generated encoder code cannot touch private classes). */
-  case class CdsIn(tr_id: Long, chr: String, trimmed: Seq[ExonIv])
-  case class CdsOut(tr_id: Long, cds_plus: String)
 
   /** Output row — the VARIANT_TRANSCRIPT analog (natural variant key
     * carried through so results are joinable/verifiable without var_id).
@@ -151,105 +161,20 @@ object TranscriptAnnotator {
     val spark = variants.sparkSession
     import spark.implicits._
 
-    // variant ∈ gene range (binned equi-join), then fan out to transcripts
+    // variant ∈ gene range (binned equi-join). RangeJoin emits each
+    // (variant, gene row) pair exactly once (the point side maps to a
+    // single bin) and the model is one row per (gene_id, chr, tr_id), so
+    // the stream below is unique per (variant, gene row, transcript) and
+    // needs no aggregation
     val vg = RangeJoin.joined(
       variants.select(col("var_id"), col("chr"), col("pos"),
         col("ref_nuc"), col("var_nuc"),
         varStopCol(col("pos"), col("ref_nuc"), col("var_nuc")).as("var_stop")),
       genes.select("gene_id", "chr", "gstart", "gstop"),
       "pos", "gstart", "gstop", keys = Seq("chr"), binWidth = binWidth)
-    val vt = vg.join(transcripts, "gene_id")
-      .select("var_id", "chr", "pos", "var_stop", "ref_nuc", "var_nuc",
-        "tr_id", "strand", "non_coding")
-
-    // Per-transcript feature tables (variant-independent). RangeJoin
-    // emits each (variant, gene) pair exactly once (the point side maps
-    // to a single bin) and transcripts are one row per (gene, tr), so
-    // `vt` is already unique on (var_id, tr_id): the old exon-row
-    // explosion + (var_id, tr_id) ObjectHashAggregate existed only to
-    // undo the fan-out. Collapsing the exon list to a per-transcript
-    // ARRAY up front turns every per-exon flag into a whole-stage-
-    // codegen array expression on the annotation stream (guide §2.3
-    // "aggregate before you shuffle", §2.4 "remove shuffles outright" —
-    // the stream-wide Exchange and the two non-codegen object
-    // aggregates disappear).
-    val exArr = features.filter(col("ftype") === "EXONS")
-      .groupBy("tr_id")
-      .agg(array_sort(collect_list(struct(
-        col("fstart").cast("long").as("fstart"),
-        col("fstop").cast("long").as("fstop")))).as("ex"))
-    // at most one UTR of each kind per transcript (reference assumption)
-    val utrs = features.filter(col("ftype").isin("3UTRS", "5UTRS"))
-      .groupBy("tr_id")
-      .agg(min(when(col("ftype") === "3UTRS", col("fstart"))).as("u3s"),
-        min(when(col("ftype") === "3UTRS", col("fstop"))).as("u3e"),
-        min(when(col("ftype") === "5UTRS", col("fstart"))).as("u5s"),
-        min(when(col("ftype") === "5UTRS", col("fstop"))).as("u5e"))
-
-    // on '-' strand the 3' and 5' UTRs swap roles before exon trimming
-    // (VariantPostProcessing.java:405-412)
-    val minus = col("strand") === "-"
-    val e3s = when(minus, col("u5s")).otherwise(col("u3s"))
-    val e5e = when(minus, col("u3e")).otherwise(col("u5e"))
-
-    // handleUTRs (VariantPostProcessing.java:626-668): trim each exon
-    // against the 3'UTR tail and 5'UTR head; fully-covered exons drop.
-    // Exons are disjoint and fstart-sorted, trimming only shrinks spans,
-    // so the result stays sorted — array_sort kept for caller-supplied
-    // overlapping exon models (matches the old sort_array(collect_list)).
-    def trimmedOf(ex: Column): Column = array_sort(filter(
-      transform(ex, e => {
-        val ts = when(e5e.isNull || e.getField("fstart") > e5e,
-            e.getField("fstart"))
-          .when(e.getField("fstop") > e5e, e5e + 1)
-          .otherwise(lit(null))
-        val te = when(e3s.isNull || e.getField("fstop") < e3s,
-            e.getField("fstop"))
-          .when(e.getField("fstart") < e3s, e3s - 1)
-          .otherwise(lit(null))
-        struct(ts.cast("long").as("start"), te.cast("long").as("stop"))
-      }),
-      s => s.getField("start").isNotNull && s.getField("stop").isNotNull &&
-        s.getField("start") <= s.getField("stop")))
-
-    // Reference CDS per CODING transcript, computed once on the
-    // dimension side and broadcast — the guide §8 shape: decide with
-    // small rows, keep the heavy per-base genome kernel off the
-    // annotation stream. The stream then needs NO keyed exchange at all
-    // (the old repartition(tr_id) + per-partition CDS cache), and a
-    // transcript with millions of variants can no longer skew one task.
-    // Total genome work is identical: one chunk pass per transcript.
-    val trForCds = transcripts.filter(!col("non_coding"))
-      .join(genes.select("gene_id", "chr").dropDuplicates("gene_id"),
-        "gene_id")
-      .join(exArr, Seq("tr_id"), "left")
-      .join(utrs, Seq("tr_id"), "left")
-      .select(col("tr_id").cast("long").as("tr_id"),
-        col("chr").cast("string").as("chr"),
-        trimmedOf(col("ex")).as("trimmed"))
-      .filter(size(col("trimmed")) > 0)
-      // spread the md5-per-base work evenly. The partition count is
-      // EXPLICIT: this exchange carries ~50 bytes/transcript but the
-      // stage above it does per-BASE genome work, so AQE's byte-sized
-      // coalescing would fold it onto one core (measured: 1 task,
-      // 1.7 s of the query's 4.3 s)
-      .repartition(spark.sparkContext.defaultParallelism, col("tr_id"))
-    val g = genome
-    val trCds = trForCds.as[CdsIn]
-      .mapPartitions(_.map(t => CdsOut(t.tr_id,
-        t.trimmed.map(e => g.chunk(t.chr, e.start, e.stop))
-          .mkString.toLowerCase)))
-      .toDF()
-
-    // LEFT join: a transcript with no EXONS features still yields a row
-    // (the reference emits an INTRON VARIANT_TRANSCRIPT for those —
-    // VariantPostProcessing.processChromosome "not found means INTRON")
-    val vtf = vt.join(exArr, Seq("tr_id"), "left")
-      .join(utrs, Seq("tr_id"), "left")
 
     // per-row flags against the variant [pos, var_stop] — codegen array
-    // predicates over the exon array (old shape: per-exon-row booleans
-    // re-collapsed by max() in the object aggregate)
+    // predicates over the transcript's exon array
     val pos = col("pos"); val varStop = col("var_stop")
     val inExon = coalesce(exists(col("ex"),
         e => e.getField("fstart") <= pos && e.getField("fstop") >= varStop),
@@ -267,17 +192,110 @@ object TranscriptAnnotator {
       lit(false))
     val inU5 = coalesce(col("u5s") <= pos && col("u5e") >= varStop,
       lit(false))
+    // only exonic rows of coding transcripts reach the AA call; every
+    // other row leaves the CDS and exon payload behind
+    val coding = inExon && !col("non_coding")
 
-    vtf.select(
+    vg.join(broadcast(transcriptModel(genes, transcripts, features, genome)),
+        Seq("gene_id", "chr"))
+      .select(
         col("var_id"), col("chr"), col("pos"), col("var_stop"),
         col("ref_nuc"), col("var_nuc"), col("tr_id"), col("strand"),
         col("non_coding"),
         inExon.as("in_exon"), inU3.as("in_u3"), inU5.as("in_u5"),
         nearSplice.as("near_splice"),
-        coalesce(trimmedOf(col("ex")), typedLit(Seq.empty[ExonIv]))
-          .as("exons"))
-      .join(broadcast(trCds), Seq("tr_id"), "left")
+        when(coding, col("trimmed"))
+          .otherwise(typedLit(Seq.empty[ExonIv])).as("exons"),
+        when(coding, col("cds_plus")).as("cds_plus"))
       .as[VarTr].map(annotateOne)
+  }
+
+  /** The variant-independent side: one row per (gene_id, chr, tr_id) of
+    * the genes passed in — strand, non_coding, the fstart-sorted exon
+    * array `ex`, the UTR bounds `u3s/u3e/u5s/u5e`, the UTR-trimmed exons
+    * `trimmed` and, for coding transcripts with a non-empty trimmed list,
+    * the plus-strand reference CDS `cds_plus`.
+    *
+    * Transcript rows (carrying their gene's chromosome) and feature rows
+    * meet in ONE tr_id-hashed exchange; the aggregation, the trimming and
+    * the per-base genome reads all run in the stage after it, so each
+    * transcript's CDS is read once and the result is broadcast once. A
+    * transcript listed under several genes (GFF3 `Parent=a,b`) yields
+    * one row per gene, a gene_id listed on two chromosomes one row per
+    * chromosome (each CDS read from its own); identical duplicate
+    * transcript or gene rows collapse.
+    */
+  private def transcriptModel(genes: DataFrame, transcripts: DataFrame,
+                              features: DataFrame,
+                              genome: GenomeSource): DataFrame = {
+    val spark = genes.sparkSession
+    val txRows = transcripts
+      .join(broadcast(genes.select("gene_id", "chr")), "gene_id")
+      .select(col("tr_id"), struct(col("gene_id"), col("chr"),
+        col("strand"), col("non_coding")).as("tx"))
+    val rows = txRows
+      .unionByName(features.select(col("tr_id"), col("ftype"),
+          col("fstart").cast("long").as("fstart"),
+          col("fstop").cast("long").as("fstop")),
+        allowMissingColumns = true)
+      // The partition count is EXPLICIT: this exchange carries tens of
+      // bytes per row but the stage after it does per-BASE genome work,
+      // so AQE's byte-sized coalescing would fold it onto one core
+      // (measured: 1 task, 1.7 s of a 4.3 s query)
+      .repartition(spark.sparkContext.defaultParallelism, col("tr_id"))
+
+    val ftype = col("ftype")
+    def utr(kind: String, c: String) = min(when(ftype === kind, col(c)))
+    val perTr = rows.groupBy("tr_id").agg(
+      collect_set(col("tx")).as("txs"),
+      array_sort(collect_list(when(ftype === "EXONS",
+        struct(col("fstart"), col("fstop"))))).as("ex"),
+      // at most one UTR of each kind per transcript (reference assumption)
+      utr("3UTRS", "fstart").as("u3s"), utr("3UTRS", "fstop").as("u3e"),
+      utr("5UTRS", "fstart").as("u5s"), utr("5UTRS", "fstop").as("u5e"))
+
+    val g = genome
+    val cds = udf((chr: String, ex: Seq[Row]) =>
+      ex.map(e => g.chunk(chr, e.getLong(0), e.getLong(1))).mkString
+        .toLowerCase)
+    // explode drops tr_ids with features but no transcript under the
+    // genes passed in; a transcript with no EXONS features keeps its row
+    // with an empty `ex` (the reference emits an INTRON VARIANT_TRANSCRIPT
+    // for it — processChromosome "not found means INTRON")
+    perTr.withColumn("tx", explode(col("txs")))
+      .select(col("tx.*"), col("tr_id"), col("ex"),
+        col("u3s"), col("u3e"), col("u5s"), col("u5e"))
+      .withColumn("trimmed", trimmedOf(col("ex")))
+      .withColumn("cds_plus", when(!col("non_coding") &&
+        size(col("trimmed")) > 0,
+        cds(col("chr").cast("string"), col("trimmed"))))
+  }
+
+  /** handleUTRs (VariantPostProcessing.java:626-668): trim each exon of
+    * `ex` against the 3'UTR tail and 5'UTR head (columns u3s/u5e, or
+    * u5s/u3e on the '-' strand, where the UTRs swap roles —
+    * VariantPostProcessing.java:405-412); fully-covered exons drop.
+    * Exons are disjoint and fstart-sorted, trimming only shrinks spans,
+    * so the result stays sorted — array_sort kept for caller-supplied
+    * overlapping exon models. */
+  private def trimmedOf(ex: Column): Column = {
+    val minus = col("strand") === "-"
+    val e3s = when(minus, col("u5s")).otherwise(col("u3s"))
+    val e5e = when(minus, col("u3e")).otherwise(col("u5e"))
+    array_sort(filter(
+      transform(ex, e => {
+        val ts = when(e5e.isNull || e.getField("fstart") > e5e,
+            e.getField("fstart"))
+          .when(e.getField("fstop") > e5e, e5e + 1)
+          .otherwise(lit(null))
+        val te = when(e3s.isNull || e.getField("fstop") < e3s,
+            e.getField("fstop"))
+          .when(e.getField("fstart") < e3s, e3s - 1)
+          .otherwise(lit(null))
+        struct(ts.cast("long").as("start"), te.cast("long").as("stop"))
+      }),
+      s => s.getField("start").isNotNull && s.getField("stop").isNotNull &&
+        s.getField("start") <= s.getField("stop")))
   }
 
   /** `--verifyIfInRgd` (the EVA runs, postProcessingEva.sh): drop
@@ -336,22 +354,14 @@ object TranscriptAnnotator {
     }
     if (!found) return locationOnly(Nil)
 
-    // found ⇒ the trimmed exon list is non-empty ⇒ the transcript is in
-    // the CDS dimension table (built over exactly the coding transcripts
-    // with a non-empty trimmed exon list); a null here means an
-    // inconsistent gene model — quarantine like the rp bounds check
-    var refDna = v.cds_plus match {
-      case Some(s) => s
-      case None =>
-        return Annotated(v.var_id, v.chr, v.pos, v.ref_nuc, v.var_nuc,
-          v.tr_id, "ERROR", nearSplice, None, None, None, None, "T", None)
-    }
-    val rp = relPos.toInt
-    // invariant: relPos is bounded by the CDS length when var_id is unique
-    // per (chr,pos,ref,var); duplicate variant ids would merge two exon
-    // lists in the groupBy above and corrupt the relative position.
-    // Quarantine the row (one malformed gene model must not kill a
+    // found ⇒ the trimmed exon list is non-empty, so the model carries
+    // this coding transcript's CDS, and relPos is bounded by its length
+    // unless the genome holds fewer bases than the exons span (a model
+    // reaching past the chromosome end, where every source clamps).
+    // Quarantine such a row (one malformed gene model must not kill a
     // 100 TB job) — counted downstream via location='ERROR'.
+    var refDna = v.cds_plus.getOrElse("")
+    val rp = relPos.toInt
     if (rp < 1 || rp > refDna.length)
       return Annotated(v.var_id, v.chr, v.pos, v.ref_nuc, v.var_nuc, v.tr_id,
         "ERROR", nearSplice, None, None, None, None, "T", None)

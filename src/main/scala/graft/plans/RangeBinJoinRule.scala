@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.RangeJoin.BinCol
+
 /** Transparent range-join optimization: rewrites an inner join whose
   * condition contains a containment pattern `start <= p AND p <= stop`
   * (point on one side, interval bounds on the other) into the binned
@@ -20,13 +22,15 @@ import org.apache.spark.sql.types.LongType
   * unchanged: every containment match shares a bin by construction, and
   * the original predicate is still applied.
   *
+  * A join whose side already carries the bin column (one built by
+  * [[graft.operators.RangeJoin]], or one this rule rewrote) is left as is.
+  *
   * Bin width: `spark.graft.rangejoin.binWidth` (default 2^20); disable
   * with `spark.graft.rangejoin.enabled=false`.
   */
 case class RangeBinJoinRule(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val BinCol = "__graft_bin"
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.rangejoin.enabled", "true").toBoolean

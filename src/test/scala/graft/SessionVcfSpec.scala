@@ -83,17 +83,8 @@ class VcfFormatSpec extends AnyFunSuite {
 
 class ExtensionsSpec extends AnyFunSuite {
   test("graft functions are callable from SQL via SparkSessionExtensions") {
-    import org.apache.spark.sql.SparkSession
-    TestSpark.spark // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
     // a sibling session over the same SparkContext, with extensions applied
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    try {
+    TestSpark.withExtensions() { spark =>
       val r = spark.sql(
         """SELECT translate_dna('ATGGCCTAA') AS aa,
           |  reverse_complement('AAGG') AS rc,
@@ -117,12 +108,6 @@ class ExtensionsSpec extends AnyFunSuite {
       // "aa bb aa": 3 words, 2 distinct, 6 word chars; top bigram covers
       // 5 chars of 10; the single trigram is unique (0 of 8 duplicated)
       assert(r.getSeq[Long](9) == Seq(3L, 2L, 6L, 5L, 10L, 0L, 8L))
-    } finally {
-      // don't stop(): the SparkContext is shared with the other suites
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      org.apache.spark.sql.SparkSession.setDefaultSession(TestSpark.spark)
-      org.apache.spark.sql.SparkSession.setActiveSession(TestSpark.spark)
     }
   }
 }

@@ -457,6 +457,34 @@ class SourcesSpec extends AnyFunSuite {
     assert(a.ref_aa.contains("A") && a.var_aa.contains("V"))
   }
 
+  test("every genome source answers out-of-range requests with \"\"") {
+    import graft.sources.PackedGenome
+    val seq = "ATGGCCTAAGGGTTTCCC" // 18 bases
+    val finite = Seq(
+      "FixedGenome" -> TranscriptAnnotator.FixedGenome(Map("1" -> seq)),
+      "BroadcastGenome" -> FastaGenome.fromText(spark, s">chr1\n$seq"),
+      "PackedGenome" -> PackedGenome.fromChrs(spark, Map("1" -> seq)))
+    val endless = Seq(
+      "Md5Genome" -> TranscriptAnnotator.Md5Genome(),
+      "HashGenome" -> TranscriptAnnotator.HashGenome())
+    for ((name, g) <- finite ++ endless) {
+      // empty (start = stop + 1) and inverted ranges
+      assert(g.chunk("1", 6, 5) == "", name)
+      assert(g.chunk("1", 9, 3) == "", name)
+      assert(g.chunk("1", 0, -4) == "", name)
+      // positions below 1 do not exist: the range starts at 1
+      assert(g.chunk("1", -2, 3) == g.chunk("1", 1, 3), name)
+      assert(g.chunk("1", 1, 3).length == 3, name)
+    }
+    for ((name, g) <- finite) {
+      assert(g.chunk("1", 20, 25) == "", name) // wholly past the end
+      assert(g.chunk("1", 19, 18) == "", name)
+      assert(g.chunk("1", 16, 25) == "CCC", name) // clamped to the end
+      assert(g.chunk("2", 1, 5) == "", name) // chromosome not held
+      assert(g.chunk("1", 1, 18) == seq, name)
+    }
+  }
+
   test("fasta driver-memory guard fails fast over maxBases") {
     val lines = Seq(">chr1", "ACGTACGT", "ACGTACGT").toDS()
     val ok = FastaGenome.fromLines(spark, lines, maxBases = 16L)
