@@ -90,6 +90,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val (pathArg, only) = parseArgs(args)
+    val picked = SparkEntry.select(only)
     val sfDir = pathArg.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // outside load, read before our own executors start contributing
@@ -105,9 +106,7 @@ object Bench {
     // and again after the suite; the min is the best view of outside load
     val sentinelPre = math.min(sentinelOnce(spark), sentinelOnce(spark))
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def timeOnce(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOnce(name: String, fn: SparkEntry.Query): Option[Double] = {
       // queries that persist intermediates (corpus_mix) register plans in
       // the CacheManager, which matches by logical plan — without this a
       // repeat run would read the previous run's cached blocks and
@@ -131,10 +130,6 @@ object Bench {
     // that query's generated code, and one extra repeat absorbs transient
     // machine load (observed run-to-run variance up to ~4x on small
     // queries under contention)
-    // a typo'd name would otherwise silently benchmark nothing and print
-    // a success-looking zero total
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted}")
     // The r9 run shipped 16 >2x-floor flags that were almost certainly
     // one mid-run load burst — invisible to a pre/post-only sentinel.
     // Probe every ~20 queries so a burst lands in the artifact next to
@@ -145,8 +140,6 @@ object Bench {
     val loadPerQuery =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     var sinceProbe = 0
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
     // One UNTIMED warmup pass of the first query before anything is
     // recorded: the alphabetically-first band otherwise absorbs the
     // whole run's cold costs (classloading, parquet footer cache, first

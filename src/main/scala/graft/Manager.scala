@@ -137,8 +137,8 @@ object Manager {
               s"bad --genders entry '$kv' (want STRAIN=M|F)\n$usage")
           }
         }.toMap).getOrElse(Map.empty)
-        val lines = spark.read.textFile(opt("inputFile"))
-        val cf2 = VcfParser.parse(lines, VcfParser.headerStrains(lines),
+        // each file's strain columns come from its own #CHROM header
+        val cf2 = VcfParser.fromPathPerFile(spark, opt("inputFile"),
           processLinesWithMissingADDP = addp)
         write(VariantPipeline.score(cf2, genders), "variants")
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** ONE source for the library's session-level tuning, shared by every
-  * entry point (Bench, Verify, Manager, Explain, graft.tools.*) so a
+  * entry point (Bench, Verify, Manager, graft.tools.*) so a
   * performance-relevant config cannot live only in the bench harness
   * (VERDICT r14 item 2: the AQE coalesce floor shipped in Bench/Profile
   * but not Verify/Manager, so user sessions never got the tune).

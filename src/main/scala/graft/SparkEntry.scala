@@ -621,6 +621,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The graded queries named in `only` (every one when it is empty),
+    * sorted by name: the one selection every main that walks the
+    * registry runs. A typo'd name throws instead of selecting nothing. */
+  def select(only: Set[String]): Seq[(String, Query)] = {
+    val all = queries
+    val unknown = only -- all.keySet
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted}")
+    all.toSeq.sortBy(_._1).filter { case (n, _) => only.isEmpty || only(n) }
+  }
+
   /** Shared q24/q32 derivation: synthetic variant + gene-model inputs fed
     * through the full VariantPostProcessing-analog annotator. One builder
     * (same rule as the shared oracle CTE builders) so the verifyAA audit
@@ -686,7 +698,7 @@ object SparkEntry {
     (ann, transcripts)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, Query] = Map(
 
     "q1_pricing_summary" -> ((s, dir) => {
       Tables.lineitem(s, dir)

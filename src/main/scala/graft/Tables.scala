@@ -99,7 +99,7 @@ object Tables {
       case _ =>
         // µs-precision TIMESTAMP[_NTZ]: the NTZ→TZ cast reads the wall
         // time in the SESSION zone, so it is the identity only under
-        // UTC. Every entry point (Bench/Verify/Manager/Explain/tests)
+        // UTC. Every entry point (Bench/Verify/Manager/Inspect/tests)
         // pins UTC at builder time; this set is a belt-and-braces for
         // foreign sessions and is a no-op in ours.
         spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -5,16 +5,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted}")
+    val Array(sfDir, outDir) = args.take(2)
+    // optional trailing args: run only the named queries (local iteration)
+    val picked = SparkEntry.select(args.drop(2).toSet)
     val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional trailing args: run only the named queries (local iteration)
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    picked.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

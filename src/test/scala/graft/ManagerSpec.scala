@@ -67,6 +67,18 @@ class ManagerSpec extends AnyFunSuite {
     assert(row.getAs[String]("zygosity_status") == "homozygous")
   }
 
+  test("VariantLoad3 tool: each file's rows carry its own header's strains") {
+    val dir = Files.createTempDirectory("graft-in")
+    for ((f, strain, pos) <- Seq(("a.vcf", "S1", 100), ("b.vcf", "S2", 200)))
+      Files.writeString(dir.resolve(f), "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\t" +
+        s"FORMAT\t$strain\n1\t$pos\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t1/1:0,10:10\n")
+    val out = tmpDir()
+    Manager.runTool(spark, "VariantLoad3", Array("--inputFile", dir.toString, "--outDir", out))
+    val got = spark.read.parquet(s"$out/variants").collect()
+      .map(r => r.getAs[Int]("pos") -> r.getAs[String]("strain")).toMap
+    assert(got == Map(100 -> "S1", 200 -> "S2"))
+  }
+
   test("FrameShiftFixUp tool: recomputed column over a variants parquet") {
     val dir = tmpDir()
     import spark.implicits._

@@ -16,6 +16,14 @@ object TestSpark {
     s
   }
 
+  /** Runs `f` with the given SQL confs set on the shared session, then
+    * restores their previous values. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   /** Runs `body` in a sibling session over the shared context with
     * [[graft.plans.GraftExtensions]] applied (the planner rule and SQL
     * functions a user session gets) and the given SQL confs, then makes
