@@ -117,7 +117,7 @@ object Manager {
 
     tool match {
       case "VcfConverter2" =>
-        write(VcfParser.fromPathPerFile(spark, opt("inputFile"),
+        write(VcfParser.fromPath(spark, opt("inputFile"),
           processVariantsSameAsRef = sameAsRef,
           processLinesWithMissingADDP = addp), "common_format2")
 
@@ -126,7 +126,7 @@ object Manager {
           spark.read.textFile(opt("inputFile")), sameAsRef), "common_format2")
 
       case "GenotypeCounts" =>
-        write(VcfParser.genotypeCountsPerFile(spark, opt("inputFile"),
+        write(VcfParser.genotypeCountsFromPath(spark, opt("inputFile"),
           processLinesWithMissingADDP = addp), "genotype_counts")
 
       case "VariantLoad3" =>
@@ -138,7 +138,7 @@ object Manager {
           }
         }.toMap).getOrElse(Map.empty)
         // each file's strain columns come from its own #CHROM header
-        val cf2 = VcfParser.fromPathPerFile(spark, opt("inputFile"),
+        val cf2 = VcfParser.fromPath(spark, opt("inputFile"),
           processLinesWithMissingADDP = addp)
         write(VariantPipeline.score(cf2, genders), "variants")
 
@@ -176,11 +176,11 @@ object Manager {
       case "VariantPostProcessing" =>
         // the full variant↔transcript annotation flow
         // (VariantPostProcessing.java:168-668): gene models from GFF3,
-        // reference sequence from FASTA (driver-guarded broadcast),
+        // reference sequence from FASTA (driver-guarded 2-bit broadcast),
         // optional --verifyIfInRgd drops already-loaded pairs
         val models = graft.sources.Gff3.modelTables(
           spark.read.textFile(opt("gff3")))
-        val genome = graft.sources.FastaGenome.fromLines(spark,
+        val genome = graft.sources.PackedGenome.fromLines(spark,
           spark.read.textFile(opt("fasta")))
         val ann = TranscriptAnnotator.annotate(
           spark.read.parquet(opt("variants")),

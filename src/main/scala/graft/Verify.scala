@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,17 +13,28 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     picked.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      dump(spark, s"$outDir/$name", name, fn(spark, sfDir))
       // queries that persist intermediates would otherwise hold their
       // blocks for the remaining ~60 dumps
       spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
+  }
+
+  /** Writes one query's result to `dir` as a single parquet part. `dir`
+    * is deleted first, so a query that fails, even while its DataFrame
+    * is being built, leaves no earlier run's result there to be graded
+    * as its own. A failure is reported on stderr and does not stop the
+    * dump. */
+  def dump(spark: SparkSession, dir: String, name: String,
+           build: => DataFrame): Unit = {
+    val path = new Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    try build.coalesce(1).write.parquet(dir)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    }
   }
 
   /** `SparkEntry.oracleSql` as the JSON object the driver's compare

@@ -22,11 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[RangeJoin]]'s binned gene containment joined to that model, with no
   * exchange on the variant stream; chromosome FASTA file reads → a
   * pluggable [[GenomeSource]] read in the model pass, once per coding
-  * transcript (real deployments back it with a broadcast FASTA index,
-  * see [[graft.sources.FastaGenome]] and [[graft.sources.PackedGenome]];
-  * tests use [[FixedGenome]]; the synthetic default [[Md5Genome]] is
-  * deterministic AND reproducible in SQL, so the full pipeline has a
-  * DuckDB oracle).
+  * transcript (real deployments back it with the broadcast 2-bit FASTA
+  * genome, [[graft.sources.PackedGenome]]; tests use [[FixedGenome]];
+  * the synthetic default [[Md5Genome]] is deterministic AND reproducible
+  * in SQL, so the full pipeline has a DuckDB oracle).
   */
 object TranscriptAnnotator {
 
@@ -47,26 +46,6 @@ object TranscriptAnnotator {
       val b = math.max(0L, start - 1)
       val e = math.min(s.length.toLong, stop)
       if (e <= b) "" else s.substring(b.toInt, e.toInt)
-    }
-  }
-
-  /** Deterministic synthetic genome: base at (chr,pos) from a mixed hash.
-    * Chromosomes have no end. */
-  case class HashGenome() extends GenomeSource {
-    private val bases = "ACGT"
-    def chunk(chr: String, start: Long, stop: Long): String = {
-      val from = math.max(1L, start)
-      if (stop < from) return ""
-      val sb = new java.lang.StringBuilder((stop - from + 1).toInt)
-      var p = from
-      val ch = chr.hashCode.toLong
-      while (p <= stop) {
-        var h = p * 0x9E3779B97F4A7C15L + ch * 0xC2B2AE3D27D4EB4FL
-        h ^= h >>> 29; h *= 0xBF58476D1CE4E5B9L; h ^= h >>> 32
-        sb.append(bases.charAt((h & 3).toInt))
-        p += 1
-      }
-      sb.toString
     }
   }
 

@@ -39,7 +39,8 @@ object VariantPipeline {
   /** The VariantLoad3 scoring stage over common-format rows: typing,
     * end-pos, quality, dbSnp class, the zygosity column family. All
     * narrow column expressions — stateless, so the same call works on a
-    * Structured Streaming frame (see [[graft.streaming.StreamVcf]]). */
+    * Structured Streaming frame: [[VcfParser.parse]] over streamed lines,
+    * then this, gives scored rows in append mode with no state. */
   def score(cf2: DataFrame, genders: Map[String, String],
             parRegions: Seq[Par.Region] = Par.grch37): DataFrame = {
     val gender = genders.foldRight(lit("F")) { case ((s, g), acc) =>

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.io.{BufferedReader, InputStreamReader}
+import java.net.URI
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed VCF → "common format 2" conversion.
@@ -12,11 +18,12 @@ import org.apache.spark.sql.functions._
   * the AD field, total depth from DP, rsId / RGD id parsing.
   *
   * The reference streams one file through one JVM and keeps one output
-  * file per strain. Here the whole VCF is a line Dataset: header
-  * discovery is a tiny driver-side read of the first non-## line, and the
-  * per-line fan-out (strains × alleles) is a pair of lateral explodes that
-  * whole-stage-codegen compiles into one narrow pass — shuffle-free,
-  * scaling to any number of files × strains.
+  * file per strain. Here the VCF files are one line Dataset: header
+  * discovery ([[fromPath]]) is a driver-side read of each file up to its
+  * #CHROM line, with no Spark job, and the per-line fan-out (strains ×
+  * alleles) is one narrow pass per partition — shuffle-free, scaling to
+  * any number of files × strains. [[parse]] and [[genotypeCounts]] take
+  * lines and strains directly, for streams and in-memory lines.
   */
 object VcfParser {
 
@@ -34,7 +41,8 @@ object VcfParser {
                     allele_count: Int, allele_depth: Int, read_depth: Int)
 
   /** Parse VCF text lines. `strainNames` are the sample columns from the
-    * #CHROM header (column 10 onward); pass what `headerStrains` returns.
+    * #CHROM header (column 10 onward); [[fromPath]] reads them from each
+    * file's own header.
     *
     * Implemented as a single imperative pass per partition (the same shape
     * as Spark's own text-format datasources): a first declarative draft
@@ -58,13 +66,12 @@ object VcfParser {
     val spark = lines.sparkSession
     import spark.implicits._
     val strains = strainNames.toArray
-    val sameAsRef = processVariantsSameAsRef
-    val missingADDP = processLinesWithMissingADDP
-    val accMap = accessionMap
-    lines.mapPartitions { it =>
-      it.flatMap(parseLine(_, strains, sameAsRef, missingADDP, accMap))
-    }.toDF().select(outputColumns.map(col): _*)
+    asCommonFormat(lines.mapPartitions(_.flatMap(parseLine(_, strains,
+      processVariantsSameAsRef, processLinesWithMissingADDP, accessionMap))))
   }
+
+  private def asCommonFormat(rows: Dataset[Cf2Row]): DataFrame =
+    rows.toDF().select(outputColumns.map(col): _*)
 
   private def toIntOpt(s: String): Option[Int] =
     try Some(s.toInt) catch { case _: NumberFormatException => None }
@@ -117,14 +124,15 @@ object VcfParser {
   private def genotypeOf(data: String): String =
     if (data.length >= 3) data.substring(0, 3) else data
 
-  /** One (strain, genotype) tally per sample cell of a gated line —
-    * shared by the single-header and per-file tally paths so the two
-    * cannot drift. */
-  private def tallyCells(g: GatedLine,
-                         strains: Array[String]): Iterator[(String, String)] = {
-    val n = math.min(strains.length, g.v.length - 9)
-    (0 until n).iterator.map(si => (strains(si), genotypeOf(g.v(9 + si))))
-  }
+  /** One (strain, genotype) tally per sample cell of a line that passes
+    * the gate. */
+  private def tallyLine(line: String, strains: Array[String],
+      missingADDP: Boolean,
+      accessionMap: Map[String, String]): Iterator[(String, String)] =
+    gateLine(line, missingADDP, accessionMap).iterator.flatMap { g =>
+      val n = math.min(strains.length, g.v.length - 9)
+      (0 until n).iterator.map(si => (strains(si), genotypeOf(g.v(9 + si))))
+    }
 
   /** Reference behavior: VcfToCommonFormat2Converter.processLine /
     * processStrain (lines 161-318). */
@@ -219,18 +227,13 @@ object VcfParser {
     val spark = lines.sparkSession
     import spark.implicits._
     val strains = strainNames.toArray
-    val missingADDP = processLinesWithMissingADDP
-    val accMap = accessionMap
-    lines.mapPartitions { it =>
-      it.flatMap { line =>
-        gateLine(line, missingADDP, accMap) match {
-          case None => Iterator.empty
-          case Some(g) => tallyCells(g, strains)
-        }
-      }
-    }.toDF("strain", "genotype")
-      .groupBy("strain", "genotype").agg(count(lit(1)).as("n"))
+    tallied(lines.mapPartitions(_.flatMap(
+      tallyLine(_, strains, processLinesWithMissingADDP, accessionMap))))
   }
+
+  private def tallied(cells: Dataset[(String, String)]): DataFrame =
+    cells.toDF("strain", "genotype")
+      .groupBy("strain", "genotype").agg(count(lit(1)).as("n"))
 
   /** Parse 8-column (sample-less) VCF — Vcf8ColToCommonFormat2Converter:
     * depths come from the INFO field (DP total, AC per ALT allele), the
@@ -307,87 +310,68 @@ object VcfParser {
       }
   }
 
-  /** Strain names from the #CHROM header line (columns 10+).
-    *
-    * Single-header assumption: when `lines` spans several VCF files this
-    * picks one arbitrary header and applies it positionally to every
-    * file's sample columns — like the reference, which converts one file
-    * per run. For multi-file loads with differing headers, parse per
-    * file (key by `input_file_name()`) or pass explicit strain names. */
-  def headerStrains(lines: Dataset[String]): Seq[String] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    lines.filter(l => l.startsWith("#") && !l.startsWith("##"))
-      .take(1).headOption
-      .map(_.drop(1).split("\t", -1).drop(9).toSeq)
-      .getOrElse(Nil)
-  }
-
-  /** Convenience: read VCF file(s) from a path. */
+  /** Read VCF file(s) from a path — a file, a directory or a glob. Each
+    * file's sample columns bind to the strains of that file's own
+    * #CHROM header, as the reference converter does for the one file it
+    * reads, so VCFs with different strain sets load together correctly.
+    * The headers are read on the driver before any job runs (see
+    * [[parse]] for the options). */
   def fromPath(spark: SparkSession, path: String,
-               processVariantsSameAsRef: Boolean = false): DataFrame = {
+               processVariantsSameAsRef: Boolean = false,
+               processLinesWithMissingADDP: Boolean = false,
+               accessionMap: Map[String, String] = Map.empty): DataFrame = {
+    import spark.implicits._
+    asCommonFormat(withFileStrains(spark, path)(parseLine(_, _,
+      processVariantsSameAsRef, processLinesWithMissingADDP, accessionMap)))
+  }
+
+  /** [[genotypeCounts]] over VCF file(s) from a path, each file's cells
+    * tallied under its own header's strains (as in [[fromPath]]). */
+  def genotypeCountsFromPath(spark: SparkSession, path: String,
+                             processLinesWithMissingADDP: Boolean = false,
+                             accessionMap: Map[String, String] = Map.empty): DataFrame = {
+    import spark.implicits._
+    tallied(withFileStrains(spark, path)(
+      tallyLine(_, _, processLinesWithMissingADDP, accessionMap)))
+  }
+
+  /** Runs `f` over every line of the files under `path`, each line with
+    * the strains of its own file's #CHROM header. The header map is a
+    * few bytes per file and rides in the task closure; each line carries
+    * `input_file_name()`, which names its file exactly as `inputFiles`
+    * does. */
+  private def withFileStrains[T: Encoder](spark: SparkSession, path: String)(
+      f: (String, Array[String]) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
     val lines = spark.read.textFile(path)
-    parse(lines, headerStrains(lines), processVariantsSameAsRef)
+    val conf = spark.sessionState.newHadoopConf()
+    val codecs = new CompressionCodecFactory(conf)
+    val byFile = lines.inputFiles.map(file => file -> fileStrains(file, conf, codecs)).toMap
+    lines.select(col("value"), input_file_name()).as[(String, String)]
+      .mapPartitions(_.flatMap { case (line, file) =>
+        f(line, byFile.getOrElse(file, Array.empty))
+      })
   }
 
-  /** (line, file) pairs plus the broadcast file → strain-columns map:
-    * the header set is tiny (one line per file) — collected once and
-    * broadcast; data lines never leave their partitions. */
-  private def linesWithFileStrains(spark: SparkSession, path: String)
-      : (Dataset[(String, String)], Broadcast[Map[String, Array[String]]]) = {
-    import spark.implicits._
-    val lines = spark.read.textFile(path)
-      .select(col("value").as("line"),
-        input_file_name().as("file"))
-    val perFileStrains: Map[String, Array[String]] = lines
-      .filter(col("line").startsWith("#") && !col("line").startsWith("##"))
-      .as[(String, String)].collect()
-      .map { case (hdr, file) =>
-        file -> hdr.drop(1).split("\t", -1).drop(9)
-      }.toMap
-    (lines.as[(String, String)],
-      spark.sparkContext.broadcast(perFileStrains))
-  }
-
-  /** Multi-file read with per-file headers: each file's #CHROM header
-    * binds its own sample columns, so VCFs with different strain sets
-    * load together correctly (the single-header `fromPath` applies one
-    * header to every file). */
-  def fromPathPerFile(spark: SparkSession, path: String,
-                      processVariantsSameAsRef: Boolean = false,
-                      processLinesWithMissingADDP: Boolean = false,
-                      accessionMap: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val (lines, bc) = linesWithFileStrains(spark, path)
-    val sameAsRef = processVariantsSameAsRef
-    val missingADDP = processLinesWithMissingADDP
-    val accMap = accessionMap
-    lines.mapPartitions { it =>
-      it.flatMap { case (line, file) =>
-        parseLine(line, bc.value.getOrElse(file, Array.empty),
-          sameAsRef, missingADDP, accMap)
-      }
-    }.toDF().select(outputColumns.map(col): _*)
-  }
-
-  /** Multi-file genotype tallies with per-file headers — the per-file
-    * twin of [[genotypeCounts]], same shared line gate. */
-  def genotypeCountsPerFile(spark: SparkSession, path: String,
-                            processLinesWithMissingADDP: Boolean = false,
-                            accessionMap: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val (lines, bc) = linesWithFileStrains(spark, path)
-    val missingADDP = processLinesWithMissingADDP
-    val accMap = accessionMap
-    lines.mapPartitions { it =>
-      it.flatMap { case (line, file) =>
-        gateLine(line, missingADDP, accMap) match {
-          case None => Iterator.empty
-          case Some(g) => tallyCells(g, bc.value.getOrElse(file, Array.empty))
-        }
-      }
-    }.toDF("strain", "genotype")
-      .groupBy("strain", "genotype").agg(count(lit(1)).as("n"))
+  /** Strain names (columns 10+) of the #CHROM line that ends one file's
+    * header. Reads the file only up to its first line that does not
+    * start with "##", decompressing by file extension through the same
+    * codec lookup as Spark's text source; a file whose header does not
+    * end in a "#" line has no strains. `file` is an `inputFiles` URI. */
+  private def fileStrains(file: String, conf: Configuration,
+                          codecs: CompressionCodecFactory): Array[String] = {
+    val p = new Path(URI.create(file))
+    val raw = p.getFileSystem(conf).open(p)
+    val codec = codecs.getCodec(p)
+    val in = new BufferedReader(new InputStreamReader(
+      if (codec == null) raw else codec.createInputStream(raw),
+      StandardCharsets.UTF_8))
+    try {
+      Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .find(!_.startsWith("##"))
+        .filter(_.startsWith("#"))
+        .map(_.drop(1).split("\t", -1).drop(9))
+        .getOrElse(Array.empty)
+    } finally in.close()
   }
 }

@@ -25,26 +25,18 @@ import graft.operators.RangeJoin.BinCol
   * A join whose side already carries the bin column (one built by
   * [[graft.operators.RangeJoin]], or one this rule rewrote) is left as is.
   *
-  * Bin width: `spark.graft.rangejoin.binWidth` (default 2^20); disable
-  * with `spark.graft.rangejoin.enabled=false`.
+  * Bins are [[RangeBinJoinRule.BinWidth]] positions wide.
   */
 case class RangeBinJoinRule(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
+  import RangeBinJoinRule.BinWidth
 
-
-  private def enabled: Boolean =
-    spark.conf.get("spark.graft.rangejoin.enabled", "true").toBoolean
-  private def binWidth: Long =
-    spark.conf.get("spark.graft.rangejoin.binWidth", (1L << 20).toString).toLong
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if j.resolved && !alreadyBinned(left) && !alreadyBinned(right) =>
         rewrite(j, left, right, cond, hint).getOrElse(j)
     }
-  }
 
   private def alreadyBinned(p: LogicalPlan): Boolean =
     p.output.exists(_.name == BinCol)
@@ -86,7 +78,7 @@ case class RangeBinJoinRule(spark: SparkSession)
              (fromOnly(p, right) && fromOnly(s, left) && fromOnly(e, left)) =>
         val pointOnLeft = fromOnly(p, left)
         val (pointSide, ivSide) = if (pointOnLeft) (left, right) else (right, left)
-        val w = Literal(binWidth, LongType)
+        val w = Literal(BinWidth, LongType)
 
         def divW(x: Expression) =
           IntegralDivide(Cast(x, LongType), w, evalMode = EvalMode.LEGACY)
@@ -117,4 +109,9 @@ case class RangeBinJoinRule(spark: SparkSession)
         Project(j.output, newJoin)
     }
   }
+}
+
+object RangeBinJoinRule {
+  /** 2^20 positions: a gene-sized interval spans one or two bins. */
+  val BinWidth: Long = 1L << 20
 }

@@ -1,16 +1,23 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.operators.TranscriptAnnotator.GenomeSource
 
-/** 2-bit packed [[GenomeSource]] — the memory-lean variant of
-  * [[FastaGenome.BroadcastGenome]] for whole-genome broadcasts.
+/** FASTA-backed [[GenomeSource]], packed at 2 bits per base — the
+  * reference reads per-chromosome `chr<N>.fa.gz` files through a
+  * memory-mapped `.nuc` cache (ChrFastaFile.java:20-104: concatenate
+  * non-header non-empty lines).
   *
-  * A mammalian genome held as a JVM String costs ~1-2 bytes per base
-  * per executor (3-6 GB); packing ACGT at 2 bits/base cuts that to
-  * ~0.25 byte/base (~775 MB for human), the same layout as UCSC's .2bit.
+  * Spark shape: parse the FASTA once on the driver, broadcast the packed
+  * chromosome map, and let every executor slice locally — the
+  * distributed analog of the reference's one mmap per JVM. A mammalian
+  * genome held as a JVM String costs ~1-2 bytes per base per executor
+  * (3-6 GB); packing ACGT at 2 bits/base cuts that to ~0.25 byte/base
+  * (~775 MB for human), the same layout as UCSC's .2bit.
   * Non-ACGT symbols (the long telomeric/centromeric N runs, IUPAC
   * codes) are range-encoded in a sorted exception table — real genomes
   * have few, long runs, so the table stays tiny — and resolved by
@@ -18,10 +25,36 @@ import graft.operators.TranscriptAnnotator.GenomeSource
   *
   * Bases are stored case-folded (like .2bit, which keeps case as a
   * separate mask); `chunk` returns uppercase. The transcript annotator
-  * lowercases the rebuilt CDS itself, so annotation output is identical
-  * to the string-backed genome.
+  * lowercases the rebuilt CDS itself, so annotation output does not
+  * depend on the FASTA's case.
   */
 object PackedGenome {
+
+  /** Parse FASTA text into chromosome → sequence. Header names take the
+    * first word after '>' and drop a leading "chr" (the reference's file
+    * naming tolerates chr/Chr/ch/c prefixes — ChrFastaFile.java:49). */
+  def parse(lines: Iterator[String]): Map[String, String] = {
+    val out = scala.collection.mutable.LinkedHashMap.empty[String, java.lang.StringBuilder]
+    var cur: java.lang.StringBuilder = null
+    lines.foreach { raw =>
+      val line = raw.trim
+      if (line.nonEmpty) {
+        if (line.charAt(0) == '>') {
+          var name = line.substring(1).split("\\s+")(0)
+          if (name.length > 3 && name.substring(0, 3).equalsIgnoreCase("chr"))
+            name = name.substring(3)
+          cur = new java.lang.StringBuilder
+          out(name) = cur
+        } else if (cur != null) cur.append(line)
+      }
+    }
+    out.iterator.map { case (k, v) => k -> v.toString }.toMap
+  }
+
+  /** Default cap on driver-side genome materialization: 8 G bases covers
+    * any vertebrate reference (human ~3.1 G) with headroom; past that the
+    * broadcast-map design itself is wrong, not just the collect. */
+  val DefaultMaxBases: Long = 8L << 30
 
   /** One packed chromosome: 2-bit codes + sorted non-ACGT runs. */
   final case class PackedChr(length: Int, packed: Array[Byte],
@@ -93,12 +126,32 @@ object PackedGenome {
     Packed(spark.sparkContext.broadcast(
       chrs.map { case (k, v) => k -> packChr(v) }))
 
-  /** FASTA text → packed broadcast genome (same driver-side streaming
-    * parse and `maxBases` guard as [[FastaGenome.fromLines]]); only the
-    * packed map is ever broadcast — the unpacked strings stay a
-    * transient driver-local value. */
+  /** FASTA text → packed broadcast genome. FASTA files are
+    * header-delimited, so the per-chromosome grouping must see lines in
+    * order: the text streams through the driver once (`toLocalIterator`,
+    * one partition in memory at a time), like the reference's one-time
+    * `.nuc` conversion. Only the packed map is broadcast; the unpacked
+    * strings are a transient driver-local value.
+    *
+    * Memory bound: the driver holds the parsed genome (~1 byte/base plus
+    * StringBuilder overhead) while packing, and every executor one packed
+    * copy. That is the deliberate design point for reference genomes
+    * (≤ a few GB); it is NOT a general FASTA ingestion path. `maxBases`
+    * fails fast with a clear message instead of an eventual driver OOM
+    * when fed something bigger (a metagenome, a concatenated corpus). */
   def fromLines(spark: SparkSession, lines: Dataset[String],
-                maxBases: Long = FastaGenome.DefaultMaxBases): Packed =
-    fromChrs(spark,
-      FastaGenome.parse(FastaGenome.guardedIterator(lines, maxBases)))
+                maxBases: Long = DefaultMaxBases): Packed = {
+    var total = 0L
+    val guarded = lines.toLocalIterator().asScala.map { l =>
+      if (l.nonEmpty && l.charAt(0) != '>') {
+        total += l.length
+        if (total > maxBases) throw new IllegalArgumentException(
+          s"FASTA exceeds maxBases=$maxBases; a genome this large cannot " +
+            "be driver-materialized and broadcast - shard it or raise the " +
+            "cap explicitly if the driver/executors have the memory")
+      }
+      l
+    }
+    fromChrs(spark, parse(guarded))
+  }
 }

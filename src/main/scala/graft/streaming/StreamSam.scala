@@ -12,7 +12,8 @@ import graft.sources.Sam
   * store. The census is a running streaming aggregate whose state is
   * one row per chromosome (bounded by the karyotype, not the read
   * volume), so complete/update output needs no watermark — the same
-  * contract as [[StreamVcf.genotypeCounts]].
+  * contract as [[graft.operators.VcfParser.genotypeCounts]] over a
+  * stream.
   */
 object StreamSam {
 

@@ -29,7 +29,9 @@ import graft.{Sessions, SparkEntry}
   * runs cold (codegen + first touch) and then warm (steady state, the
   * bench's best-of-3 regime). The warm run prints a totals row (jobs,
   * stages, tasks, shuffle-read/spill/input MB) and then one line per
-  * stage (wall/exec/cpu seconds, tasks, shuffle-read MB): a query whose
+  * stage (wall/exec/cpu seconds, tasks, shuffle-read MB, and the job
+  * group, which is the query's name; broadcast and adaptive-stage jobs
+  * inherit it from the thread that starts them): a query whose
   * time is job/stage count wants fewer rounds or exchanges, one dominated
   * by shuffle bytes wants narrower rows, a 1-task stage under heavy
   * per-row work wants spreading. The timing action is Bench's `count()`.
@@ -83,14 +85,22 @@ object Inspect {
       spark.catalog.clearCache()
     }
 
-  /** Jobs started and stages completed since the last reset. */
+  /** Jobs started and stages completed since the last reset, and the
+    * job group of each stage's job. */
   private final class StageLog extends SparkListener {
     @volatile var jobs = 0
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs += 1
+      val group = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse("-")
+      j.stageIds.foreach(groups.put(_, group))
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       stages.add(s.stageInfo)
-    def reset(): Unit = { jobs = 0; stages.clear() }
+    def reset(): Unit = { jobs = 0; stages.clear(); groups.clear() }
   }
 
   private def profile(spark: SparkSession, sfDir: String,
@@ -112,6 +122,7 @@ object Inspect {
     }
     println(f"${"query"}%-28s ${"cold_s"}%7s ${"warm_s"}%7s ${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"shufMB"}%8s ${"spillMB"}%8s ${"inMB"}%7s")
     picked.foreach { case (name, fn) =>
+      spark.sparkContext.setJobGroup(name, name)
       try {
         val cold = timed(fn)
         log.reset()
@@ -131,11 +142,11 @@ object Inspect {
             f"$dur%6.2f s  exec=${m.executorRunTime / 1000.0}%7.2f s " +
             f"cpu=${m.executorCpuTime / 1e9}%7.2f s " +
             f"shufR=${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1f MB " +
-            f"${i.name.take(50)}")
+            log.groups.getOrDefault(i.stageId, "-"))
         }
       } catch {
         case e: Throwable => println(s"$name FAILED: ${e.getMessage}")
-      }
+      } finally spark.sparkContext.clearJobGroup()
     }
   }
 }

@@ -111,8 +111,12 @@ class EntrySpec extends AnyFunSuite {
     facts.toMap
   }
 
-  test("entry returns rows") {
-    assert(SparkEntry.entry(spark).count() > 0)
+  // the sweep below runs q1_pricing_summary; this only pins that the
+  // entry point is that query, without running a job
+  test("entry is q1_pricing_summary on sf0.001") {
+    val entry = SparkEntry.entry(spark).queryExecution.analyzed
+    val q1 = SparkEntry.queries("q1_pricing_summary")(spark, dir)
+    assert(entry.sameResult(q1.queryExecution.analyzed))
   }
 
   test("select: name-sorted, filtered, unknown names rejected") {

@@ -1,41 +1,43 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
+import graft.plans.RangeBinJoinRule
 
 class RangeBinRuleSpec extends AnyFunSuite {
 
   test("natural theta range join is rewritten to a binned equi-join") {
-    TestSpark.withExtensions("spark.graft.rangejoin.binWidth" -> "64") { spark =>
+    // positions stretched so intervals span several bins of the rule's
+    // fixed width, as genomic intervals do
+    val scale = RangeBinJoinRule.BinWidth / 64
+    val rnd = new scala.util.Random(11)
+    val points = (1 to 400).map(_ => rnd.nextInt(5000).toLong * scale)
+    val ivs = (1 to 40).map { i =>
+      val s = rnd.nextInt(4800).toLong * scale
+      (i.toLong, s, s + rnd.nextInt(300).toLong * scale)
+    }
+    def pairs(spark: SparkSession) = {
       import spark.implicits._
-      val rnd = new scala.util.Random(11)
-      val points = (1 to 400).map(_ => rnd.nextInt(5000).toLong).toDF("p")
-      val ivs = (1 to 40).map { i =>
-        val s = rnd.nextInt(4800).toLong
-        (i.toLong, s, s + rnd.nextInt(300))
-      }.toDF("iv", "s", "e")
-
-      val joined = points.join(ivs, $"s" <= $"p" && $"p" <= $"e")
-
+      points.toDF("p").join(ivs.toDF("iv", "s", "e"), $"s" <= $"p" && $"p" <= $"e")
+    }
+    // the naive answer from the shared session, which has no extensions
+    val plain = pairs(TestSpark.spark)
+    assert(!plain.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
+    val naive = plain.select("p", "iv").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    TestSpark.withExtensions { spark =>
+      val joined = pairs(spark)
       val plan = joined.queryExecution.optimizedPlan.toString
       assert(plan.contains("__graft_bin"), s"rule did not fire:\n$plan")
-
-      val got = joined.select("p", "iv").as[(Long, Long)].collect().sorted
-
-      spark.conf.set("spark.graft.rangejoin.enabled", "false")
-      val naive = points.join(ivs, $"s" <= $"p" && $"p" <= $"e")
-        .select("p", "iv").as[(Long, Long)].collect().sorted
+      val got = joined.select("p", "iv").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       assert(naive.nonEmpty && got.toSeq == naive.toSeq)
-      val planOff = points.join(ivs, $"s" <= $"p" && $"p" <= $"e")
-        .queryExecution.optimizedPlan.toString
-      assert(!planOff.contains("__graft_bin"))
     }
   }
 
   test("a RangeJoin.joined plan is binned once, not again by the rule") {
-    TestSpark.withExtensions("spark.graft.rangejoin.binWidth" -> "64") { spark =>
+    TestSpark.withExtensions { spark =>
       import spark.implicits._
       val points = Seq(("1", 5L), ("1", 70L), ("2", 5L)).toDF("chr", "pos")
       val ivs = Seq(("1", 1L, 100L, 7L), ("2", 50L, 60L, 8L))

@@ -84,7 +84,7 @@ class VcfFormatSpec extends AnyFunSuite {
 class ExtensionsSpec extends AnyFunSuite {
   test("graft functions are callable from SQL via SparkSessionExtensions") {
     // a sibling session over the same SparkContext, with extensions applied
-    TestSpark.withExtensions() { spark =>
+    TestSpark.withExtensions { spark =>
       val r = spark.sql(
         """SELECT translate_dna('ATGGCCTAA') AS aa,
           |  reverse_complement('AAGG') AS rc,

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Conservation, Polyphen, SourceConverters, TranscriptAnnotator}
-import graft.sources.FastaGenome
+import graft.sources.PackedGenome
 
 /** Specs for the round-2 source/converter operators: fixedStep wiggle,
   * Polyphen result load-back, source→VCF converters, FASTA genome. */
@@ -172,21 +172,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(out(1L).getAs[String]("fasta") == ">NP_1\nMKLAAVTWYRK")
   }
 
-  test("per-file VCF headers bind each file's own strains") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vcf")
-    java.nio.file.Files.write(dir.resolve("a.vcf"), java.util.Arrays.asList(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tSHR",
-      "1\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:7,3:10"))
-    java.nio.file.Files.write(dir.resolve("b.vcf"), java.util.Arrays.asList(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tBN\tF344",
-      "2\t200\t.\tC\tT\t99\tPASS\t.\tGT:AD:DP\t1/1:0,9:9\t0/1:4,4:8"))
-    val out = graft.operators.VcfParser.fromPathPerFile(spark, dir.toString)
-      .select("strain", "chr", "pos").as[(String, String, Int)].collect().toSet
-    assert(out == Set(("SHR", "1", 100), ("BN", "2", 200), ("F344", "2", 200)))
-  }
-
   // ---- SourceConverters ----
 
   test("clinvar line layout matches ClinVar2Vcf.writeVcfLine") {
@@ -269,10 +254,11 @@ class SourcesSpec extends AnyFunSuite {
 
   test("streaming vcf ingest: parse + score over MemoryStream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamVcf
+    import graft.operators.{VariantPipeline, VcfParser}
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val out = StreamVcf.scored(mem.toDS(), Seq("SHR"), Map("SHR" -> "M"))
+    val out = VariantPipeline.score(VcfParser.parse(mem.toDS(), Seq("SHR")),
+        Map("SHR" -> "M"))
       .select("strain", "chr", "pos", "variant_type", "quality_score",
         "zygosity_status")
     val q = out.writeStream.format("memory").queryName("vcf_scored")
@@ -291,10 +277,10 @@ class SourcesSpec extends AnyFunSuite {
 
   test("streaming genotype tallies accumulate across triggers") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamVcf
+    import graft.operators.VcfParser
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
-    val q = StreamVcf.genotypeCounts(mem.toDS(), Seq("S1"))
+    val q = VcfParser.genotypeCounts(mem.toDS(), Seq("S1"))
       .writeStream.format("memory").queryName("gt_counts")
       .outputMode("complete").start()
     try {
@@ -370,26 +356,32 @@ class SourcesSpec extends AnyFunSuite {
     assert(hit == Set(1L, 100L))
   }
 
-  // ---- FastaGenome ----
+  // ---- FASTA genome ----
 
   test("fasta parse: headers, chr-prefix strip, multi-line concat") {
-    val g = FastaGenome.parse(Iterator(
+    val g = PackedGenome.parse(Iterator(
       ">chr1 Homo sapiens", "ACGT", "TTAA", "", ">MT", "GGCC"))
     assert(g == Map("1" -> "ACGTTTAA", "MT" -> "GGCC"))
   }
 
   test("fasta-backed genome drives the annotator like FixedGenome") {
-    val fa = FastaGenome.fromText(spark, ">chr1\nATGGCCTAAGGGTTTCCC")
+    // soft-masked (lowercase) FASTA text: the annotator lowercases the
+    // CDS itself, so the case of the input does not reach the output
+    val fa = PackedGenome.fromLines(spark,
+      Seq(">chr1 soft-masked", "atggccTAAG", "GGTTTCCC").toDS())
     assert(fa.chunk("1", 4, 6) == "GCC")
-    // out-of-range requests clamp (same as PackedGenome), never throw
+    // out-of-range requests clamp, never throw
     assert(fa.chunk("1", 100, 110) == "" && fa.chunk("1", 10, 5) == "")
     val v = Seq((1L, "1", 5L, "C", "T")).toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc")
     val g = Seq((1L, "1", 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop")
     val t = Seq((10L, 1L, "+", false)).toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = Seq((10L, "EXONS", 1L, 9L)).toDF("tr_id", "ftype", "fstart", "fstop")
-    val a = TranscriptAnnotator.annotate(v, g, t, f, fa, binWidth = 8)
-      .collect().head
-    assert(a.ref_aa.contains("A") && a.var_aa.contains("V"))
+    def annotated(genome: TranscriptAnnotator.GenomeSource) =
+      TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8).collect().toSeq
+    val a = annotated(fa)
+    assert(a.head.ref_aa.contains("A") && a.head.var_aa.contains("V"))
+    assert(a == annotated(TranscriptAnnotator.FixedGenome(
+      Map("1" -> "ATGGCCTAAGGGTTTCCC"))))
   }
 
   // ---- SampleMeta ----
@@ -425,7 +417,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("packed genome round-trips slices, N runs and case folding") {
-    import graft.sources.PackedGenome
     val rnd = new scala.util.Random(11)
     val seq = (1 to 500).map { i =>
       if (i % 97 < 5) 'N'
@@ -444,7 +435,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("packed genome drives the annotator identically to FixedGenome") {
-    import graft.sources.PackedGenome
     val g = PackedGenome.fromChrs(spark, Map("1" -> "ATGGCCTAAGGGTTTCCC"))
     assert(PackedGenome.fromLines(spark,
       Seq(">chr1", "ATGGCC", "TAA").toDS()).chunk("1", 4, 9) == "GCCTAA")
@@ -458,15 +448,11 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("every genome source answers out-of-range requests with \"\"") {
-    import graft.sources.PackedGenome
     val seq = "ATGGCCTAAGGGTTTCCC" // 18 bases
     val finite = Seq(
       "FixedGenome" -> TranscriptAnnotator.FixedGenome(Map("1" -> seq)),
-      "BroadcastGenome" -> FastaGenome.fromText(spark, s">chr1\n$seq"),
       "PackedGenome" -> PackedGenome.fromChrs(spark, Map("1" -> seq)))
-    val endless = Seq(
-      "Md5Genome" -> TranscriptAnnotator.Md5Genome(),
-      "HashGenome" -> TranscriptAnnotator.HashGenome())
+    val endless = Seq("Md5Genome" -> TranscriptAnnotator.Md5Genome())
     for ((name, g) <- finite ++ endless) {
       // empty (start = stop + 1) and inverted ranges
       assert(g.chunk("1", 6, 5) == "", name)
@@ -487,10 +473,10 @@ class SourcesSpec extends AnyFunSuite {
 
   test("fasta driver-memory guard fails fast over maxBases") {
     val lines = Seq(">chr1", "ACGTACGT", "ACGTACGT").toDS()
-    val ok = FastaGenome.fromLines(spark, lines, maxBases = 16L)
+    val ok = PackedGenome.fromLines(spark, lines, maxBases = 16L)
     assert(ok.chunk("1", 1, 4) == "ACGT")
     val e = intercept[IllegalArgumentException] {
-      FastaGenome.fromLines(spark, lines, maxBases = 15L)
+      PackedGenome.fromLines(spark, lines, maxBases = 15L)
     }
     assert(e.getMessage.contains("maxBases"))
   }

@@ -26,10 +26,10 @@ object TestSpark {
 
   /** Runs `body` in a sibling session over the shared context with
     * [[graft.plans.GraftExtensions]] applied (the planner rule and SQL
-    * functions a user session gets) and the given SQL confs, then makes
-    * the shared session the default again. The context is never stopped:
-    * the other suites share it. */
-  def withExtensions[T](conf: (String, String)*)(body: SparkSession => T): T = {
+    * functions a user session gets), then makes the shared session the
+    * default again. The context is never stopped: the other suites share
+    * it. */
+  def withExtensions[T](body: SparkSession => T): T = {
     spark // shared context up first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -37,7 +37,6 @@ object TestSpark {
       .master("local[4]")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
-    conf.foreach { case (k, v) => b.config(k, v) }
     try body(b.getOrCreate())
     finally {
       SparkSession.clearActiveSession()

@@ -323,7 +323,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       ReusedExchangeExec, ShuffleExchangeLike}
     import org.apache.spark.storage.StorageLevel
 
-    TestSpark.withExtensions() { spark =>
+    TestSpark.withExtensions { spark =>
       import spark.implicits._
       val rnd = new scala.util.Random(5)
       val chrs = Seq("1", "2")

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.VcfParser
@@ -28,10 +30,7 @@ class VcfParserSpec extends AnyFunSuite {
     "chrUn_xx\t700\t.\tA\tC\t10\tPASS\t.\tGT:AD:DP\t0/1:3,3:6\t./.")
 
   private lazy val parsed = {
-    val lines = spark.createDataset(vcf)
-    val strains = VcfParser.headerStrains(lines)
-    assert(strains == Seq("SHR", "BN"))
-    VcfParser.parse(lines, strains).collect()
+    VcfParser.parse(spark.createDataset(vcf), Seq("SHR", "BN")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getString(3),
         r.getString(4), r.getInt(6), r.getInt(7), r.getInt(8), r.getInt(9),
         r.getInt(10), r.getInt(15)))
@@ -119,5 +118,93 @@ class VcfParserSpec extends AnyFunSuite {
         Seq("S1", "S2"), processLinesWithMissingADDP = true)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(withAddp(("S1", "0/1")) == 2L && withAddp(("S2", "1/1")) == 2L)
+  }
+
+  private val hdr = "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT"
+
+  /** Two VCFs with different #CHROM strains in `dir`. */
+  private def twoHeaders(dir: Path, a: String = "a.vcf",
+                         b: String = "b.vcf"): Path = {
+    Files.write(dir.resolve(a), java.util.Arrays.asList(
+      "##fileformat=VCFv4.2", s"$hdr\tSHR",
+      "1\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:7,3:10"))
+    Files.write(dir.resolve(b), java.util.Arrays.asList(
+      "##fileformat=VCFv4.2", s"$hdr\tBN\tF344",
+      "2\t200\t.\tC\tT\t99\tPASS\t.\tGT:AD:DP\t1/1:0,9:9\t0/1:4,4:8"))
+    dir
+  }
+
+  private def strainSites(path: String): Set[(String, String, Int)] =
+    VcfParser.fromPath(spark, path).select("strain", "chr", "pos")
+      .as[(String, String, Int)].collect().toSet
+
+  test("per-file VCF headers bind each file's own strains") {
+    val dir = twoHeaders(Files.createTempDirectory("graft_vcf"))
+    assert(strainSites(dir.toString) ==
+      Set(("SHR", "1", 100), ("BN", "2", 200), ("F344", "2", 200)))
+    val tally = VcfParser.genotypeCountsFromPath(spark, dir.toString)
+      .as[(String, String, Long)].collect().toSet
+    assert(tally == Set(("SHR", "0/1", 1L), ("BN", "1/1", 1L), ("F344", "0/1", 1L)))
+  }
+
+  test("fromPath reads the header of a gzipped VCF") {
+    val dir = Files.createTempDirectory("graft_vcf_gz")
+    val gz = new java.util.zip.GZIPOutputStream(
+      Files.newOutputStream(dir.resolve("s.vcf.gz")))
+    try gz.write(Seq("##fileformat=VCFv4.2", s"$hdr\tWKY",
+      "3\t300\t.\tG\tA\t10\tPASS\t.\tGT:AD:DP\t1/1:0,6:6", "")
+      .mkString("\n").getBytes("UTF-8"))
+    finally gz.close()
+    Files.write(dir.resolve("p.vcf"), java.util.Arrays.asList(s"$hdr\tSHR",
+      "1\t100\t.\tA\tG\t50\tPASS\t.\tGT:AD:DP\t0/1:7,3:10"))
+    assert(strainSites(dir.toString) == Set(("WKY", "3", 300), ("SHR", "1", 100)))
+  }
+
+  test("fromPath binds strains under a path that contains a space") {
+    val dir = twoHeaders(Files.createDirectory(
+      Files.createTempDirectory("graft vcf").resolve("data dir")),
+      "a a.vcf", "b b.vcf")
+    val want = Set(("SHR", "1", 100), ("BN", "2", 200), ("F344", "2", 200))
+    assert(strainSites(dir.toString) == want)
+    assert(strainSites(dir.resolve("b b.vcf").toString) ==
+      Set(("BN", "2", 200), ("F344", "2", 200)))
+  }
+
+  test("building fromPath over a directory of VCFs starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = twoHeaders(Files.createTempDirectory("graft_vcf_jobs")).toString
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.put(e.jobId, ())
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val built = try {
+      sc.setJobGroup("vcf-build", "build fromPath")
+      val df = VcfParser.fromPath(spark, dir)
+      val counts = VcfParser.genotypeCountsFromPath(spark, dir)
+      sc.clearJobGroup()
+      // events reach a listener in order: once a later marker job has
+      // ended, every job started while building has been seen
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1), 1).map(identity).collect()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def markerEnded = jobs.asScala.exists { case (id, grp) =>
+        grp == "marker" && ended.containsKey(id) }
+      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerEnded, "listener never saw the marker job")
+      (df, counts)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.asScala.count(_._2 == "vcf-build") == 0)
+    assert(built._1.count() == 3 && built._2.count() == 3)
   }
 }
