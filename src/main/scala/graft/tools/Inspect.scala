@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 
-import graft.{Sessions, SparkEntry}
+import graft.{ListenerBarrier, Sessions, SparkEntry}
+import graft.graded.GradedQuery
 
 /** Looks inside named graded queries (every one with no names given).
   *
@@ -52,8 +53,8 @@ object Inspect {
   }
 
   private def plan(spark: SparkSession, sfDir: String,
-      picked: Seq[(String, SparkEntry.Query)]): Unit =
-    picked.foreach { case (name, fn) =>
+      picked: Seq[GradedQuery]): Unit =
+    picked.foreach { case GradedQuery(name, fn, _) =>
       println(s"\n========== $name ==========")
       try {
         val qe = fn(spark, sfDir).queryExecution
@@ -86,25 +87,29 @@ object Inspect {
     }
 
   /** Jobs started and stages completed since the last reset, and the
-    * job group of each stage's job. */
+    * job group of each stage's job. The listener barrier's marker jobs
+    * and their stages are not counted. */
   private final class StageLog extends SparkListener {
     @volatile var jobs = 0
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
     val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
-      jobs += 1
-      val group = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse("-")
-      j.stageIds.foreach(groups.put(_, group))
-    }
+    private val markerStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      if (ListenerBarrier.isMarker(j)) j.stageIds.foreach(markerStages.add)
+      else {
+        jobs += 1
+        val group = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("-")
+        j.stageIds.foreach(groups.put(_, group))
+      }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      stages.add(s.stageInfo)
+      if (!markerStages.contains(s.stageInfo.stageId)) stages.add(s.stageInfo)
     def reset(): Unit = { jobs = 0; stages.clear(); groups.clear() }
   }
 
   private def profile(spark: SparkSession, sfDir: String,
-      picked: Seq[(String, SparkEntry.Query)]): Unit = {
+      picked: Seq[GradedQuery]): Unit = {
     import scala.jdk.CollectionConverters._
     val log = new StageLog
     spark.sparkContext.addSparkListener(log)
@@ -116,12 +121,11 @@ object Inspect {
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val s = (System.nanoTime() - t0) / 1e9
-      // listener events arrive asynchronously: let the run's settle
-      Thread.sleep(400)
+      ListenerBarrier.await(spark.sparkContext)
       s
     }
     println(f"${"query"}%-28s ${"cold_s"}%7s ${"warm_s"}%7s ${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"shufMB"}%8s ${"spillMB"}%8s ${"inMB"}%7s")
-    picked.foreach { case (name, fn) =>
+    picked.foreach { case GradedQuery(name, fn, _) =>
       spark.sparkContext.setJobGroup(name, name)
       try {
         val cold = timed(fn)

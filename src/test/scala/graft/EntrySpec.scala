@@ -7,6 +7,8 @@ import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graded.GradedQuery
+
 /** What the sweep's plan invariants read off one query: a
   * CartesianProductExec (partitions x partitions, a run-forever plan at
   * 100 TB; the deliberate 1-row scalar crossJoins plan as broadcast
@@ -44,7 +46,7 @@ object PlanFacts {
     }
 }
 
-/** The graded-query sweep: each `SparkEntry.queries` entry is built once
+/** The graded-query sweep: each `SparkEntry.graded` query is built once
   * on sf0.001, its plan facts recorded, and it must return rows. The
   * suite-wide plan invariants then run over the recorded facts. Both
   * whitelists are two-sided: each entry documents its bound, and a stale
@@ -105,7 +107,7 @@ class EntrySpec extends AnyFunSuite {
   /** Every query's facts; a query whose sweep test failed before
     * recording them fails each invariant too, by name. */
   private def swept: Map[String, PlanFacts] = {
-    val missing = SparkEntry.queries.keySet -- facts.keySet
+    val missing = SparkEntry.graded.keySet -- facts.keySet
     assert(missing.isEmpty,
       s"no plan facts (sweep test failed or did not run): ${missing.toSeq.sorted}")
     facts.toMap
@@ -115,17 +117,17 @@ class EntrySpec extends AnyFunSuite {
   // entry point is that query, without running a job
   test("entry is q1_pricing_summary on sf0.001") {
     val entry = SparkEntry.entry(spark).queryExecution.analyzed
-    val q1 = SparkEntry.queries("q1_pricing_summary")(spark, dir)
+    val q1 = SparkEntry.graded("q1_pricing_summary").run(spark, dir)
     assert(entry.sameResult(q1.queryExecution.analyzed))
   }
 
   test("select: name-sorted, filtered, unknown names rejected") {
-    assert(SparkEntry.select(Set.empty).map(_._1) == SparkEntry.queries.keySet.toSeq.sorted)
-    assert(SparkEntry.select(Set("feature_count", "ann_ivf")).map(_._1) == Seq("ann_ivf", "feature_count"))
+    assert(SparkEntry.select(Set.empty).map(_.name) == SparkEntry.graded.keySet.toSeq.sorted)
+    assert(SparkEntry.select(Set("feature_count", "ann_ivf")).map(_.name) == Seq("ann_ivf", "feature_count"))
     intercept[IllegalArgumentException](SparkEntry.select(Set("ann_ivf", "no_such_query")))
   }
 
-  for ((name, fn) <- SparkEntry.select(Set.empty)) {
+  for (GradedQuery(name, fn, _) <- SparkEntry.select(Set.empty)) {
     test(s"query $name runs and returns rows on sf0.001") {
       val (df, f) = PlanFacts.audit(fn(spark, dir))
       facts(name) = f

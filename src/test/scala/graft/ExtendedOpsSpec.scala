@@ -230,7 +230,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
     // pair set must be the full s1 < s2 triangle over the samples
     // present, and a sample paired with itself never appears
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.queries("popgen_ibs")(spark, dir)
+    val rows = SparkEntry.graded("popgen_ibs").run(spark, dir)
       .select("s1", "s2", "n_sites", "n_ibs0", "n_ibs1", "n_ibs2")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty)
@@ -386,7 +386,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
     val out = edges.groupBy(_.substring(0, 7)).map { case (n, ks) => n -> ks.size }
     val in = edges.groupBy(_.substring(1, 8)).map { case (n, ks) => n -> ks.size }
     val nodes = out.keySet ++ in.keySet
-    val got = SparkEntry.queries("dna_debruijn_stats")(spark, dir)
+    val got = SparkEntry.graded("dna_debruijn_stats").run(spark, dir)
       .as[(Long, Long, Long, Long)].collect().head
     assert(got == ((edges.size.toLong, nodes.size.toLong,
       out.count(_._2 >= 2).toLong, in.count(_._2 >= 2).toLong)))
@@ -394,11 +394,11 @@ class ExtendedOpsSpec extends AnyFunSuite {
 
   test("corpus_dup_sources conserves the pair count and triangle order") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.queries("corpus_dup_sources")(spark, dir)
+    val rows = SparkEntry.graded("corpus_dup_sources").run(spark, dir)
       .select("src_a", "src_b", "n_pairs")
       .as[(String, String, Long)].collect()
     assert(rows.forall(r => r._1 <= r._2))
-    val totalPairs = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
+    val totalPairs = SparkEntry.graded("dedup_ngram_jaccard").run(spark, dir)
       .count()
     assert(rows.map(_._3).sum == totalPairs)
   }
@@ -433,7 +433,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
 
   test("popgen_sfs conserves sites and folds below half the alleles") {
     val dir = "/root/testdata/sf0.001"
-    val sfs = SparkEntry.queries("popgen_sfs")(spark, dir)
+    val sfs = SparkEntry.graded("popgen_sfs").run(spark, dir)
       .as[(Long, Long)].collect().toMap
     // every site lands in exactly one folded bin (conservation against
     // the shared ld_pairwise/popgen_ibs cell derivation re-run here),
@@ -474,7 +474,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
 
   test("variant_dnds agrees with a rollup of q24's own annotations") {
     val dir = "/root/testdata/sf0.001"
-    val ann = SparkEntry.queries("q24_annotate_variants")(spark, dir)
+    val ann = SparkEntry.graded("q24_annotate_variants").run(spark, dir)
       .select("tr_id", "syn_status")
       .as[(Long, Option[String])].collect()
     val expect = ann
@@ -486,7 +486,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
         if (syn > 0) Some(g -> ((syn, non, math.round(10000.0 * non / syn))))
         else None
       }
-    val got = SparkEntry.queries("variant_dnds")(spark, dir)
+    val got = SparkEntry.graded("variant_dnds").run(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got == expect)
@@ -521,10 +521,10 @@ class ExtendedOpsSpec extends AnyFunSuite {
     // pair population (and its r2e4 mass) must be identical across the
     // two groupings, and every distance must fall in 1..10
     val dir = "/root/testdata/sf0.001"
-    val decay = SparkEntry.queries("ld_decay")(spark, dir)
+    val decay = SparkEntry.graded("ld_decay").run(spark, dir)
       .select("dist", "n_pairs", "sum_r2e4")
       .as[(Long, Long, Long)].collect()
-    val pair = SparkEntry.queries("ld_pairwise")(spark, dir)
+    val pair = SparkEntry.graded("ld_pairwise").run(spark, dir)
       .select("n_pairs", "sum_r2e4").as[(Long, Long)].collect()
     assert(decay.map(_._2).sum == pair.map(_._1).sum)
     assert(decay.map(_._3).sum == pair.map(_._2).sum)

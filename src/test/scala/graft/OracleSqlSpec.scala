@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graded.GradedQuery
+
 /** Guards the oracle contract BEFORE the driver runs it.
   *
   * The round-4 failure mode: oracle SQL is authored as Scala string
@@ -12,11 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OracleSqlSpec extends AnyFunSuite {
 
-  test("every oracle entry names a real query") {
-    // (the column name/type contract itself is what the driver's DuckDB
-    // compare grades — this only guards against typo'd/orphaned keys)
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql entries with no query: $orphans")
+  test("the registry rejects a repeated query name") {
+    // each query carries its own oracle, so an orphaned oracle cannot be
+    // written; a pasted query under a taken name is what remains to catch
+    val run: SparkEntry.Query = (s, _) => s.range(1).toDF()
+    val err = intercept[IllegalArgumentException](GradedQuery.byName(Seq(
+      GradedQuery("twice", run, "SELECT 1"), GradedQuery("twice", run, "SELECT 2"))))
+    assert(err.getMessage.contains("twice"))
+    assert(GradedQuery.byName(Seq(GradedQuery("once", run, "SELECT 1"))).keySet == Set("once"))
   }
 
   test("SURVEY.md §2 names cover every graded query (no checklist drift)") {
@@ -29,7 +34,7 @@ class OracleSqlSpec extends AnyFunSuite {
     val s2 = survey.substring(survey.indexOf("## §2"),
       survey.indexOf("## §3"))
     val named = "`([A-Za-z0-9_.]+)`".r.findAllMatchIn(s2).map(_.group(1)).toSet
-    val missing = SparkEntry.queries.keySet.filterNot(named.contains)
+    val missing = SparkEntry.graded.keySet.filterNot(named.contains)
     assert(missing.isEmpty,
       s"graded queries with no SURVEY §2 checklist line: $missing")
   }
@@ -42,7 +47,7 @@ class OracleSqlSpec extends AnyFunSuite {
       java.nio.file.Paths.get("BASELINE.md")), "UTF-8")
     val floored = "(?m)^\\| ([A-Za-z0-9_.]+)".r
       .findAllMatchIn(base).map(_.group(1)).toSet
-    val missing = SparkEntry.queries.keySet.filterNot(floored.contains)
+    val missing = SparkEntry.graded.keySet.filterNot(floored.contains)
     assert(missing.isEmpty,
       s"graded queries with no BASELINE floor row: $missing")
   }

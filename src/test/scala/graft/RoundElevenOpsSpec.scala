@@ -355,7 +355,7 @@ class RoundElevenOpsSpec extends AnyFunSuite {
 
   test("variant_burden matches a brute-force collapse at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("variant_burden")(spark, dir)
+    val got = SparkEntry.graded("variant_burden").run(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val li = graft.Tables.lineitem(spark, dir)
@@ -543,7 +543,7 @@ class RoundElevenOpsSpec extends AnyFunSuite {
 
   test("conservation_sliding equals a brute-force window at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("conservation_sliding")(spark, dir)
+    val got = SparkEntry.graded("conservation_sliding").run(spark, dir)
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     val ev = graft.Tables.events(spark, dir)
@@ -570,7 +570,7 @@ class RoundElevenOpsSpec extends AnyFunSuite {
 
   test("vcf_merge_multisample assembles sample-sorted rows at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("vcf_merge_multisample")(spark, dir)
+    val got = SparkEntry.graded("vcf_merge_multisample").run(spark, dir)
       .as[(Long, Long, Long, String)].collect()
       .map(r => (r._1, r._2) -> r._4).toMap
     val cells = graft.Tables.lineitem(spark, dir)
@@ -596,7 +596,7 @@ class RoundElevenOpsSpec extends AnyFunSuite {
     // graded query's per-chr pair counts — proves the ±1-bin probe
     // covers the whole ≤10-bp window (a missed bin edge would undercount)
     val dir = "/root/testdata/sf0.001"
-    val q = SparkEntry.queries("ld_pairwise")(spark, dir)
+    val q = SparkEntry.graded("ld_pairwise").run(spark, dir)
       .select("chr", "n_pairs").as[(Long, Long)].collect().toMap
     val g = (col("l_partkey") * 13 + col("l_suppkey") * 17) % 10
     val cells = graft.Tables.lineitem(spark, dir).select(

@@ -118,7 +118,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
     // compression proxy: a repeated-text source must score a lower
     // distinct/total ratio than a diverse one — structural property on
     // real data rather than a second arithmetic transcription
-    val cp = SparkEntry.queries("text_compression_proxy")(spark, dir)
+    val cp = SparkEntry.graded("text_compression_proxy").run(spark, dir)
       .collect()
     assert(cp.nonEmpty)
     cp.foreach { r =>
@@ -129,7 +129,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
     }
     // CpG: hand sequence checks of the counting identities on the
     // graded output (len is 32 by construction — md5-derived)
-    val cg = SparkEntry.queries("dna_cpg_oe")(spark, dir).collect()
+    val cg = SparkEntry.graded("dna_cpg_oe").run(spark, dir).collect()
     assert(cg.nonEmpty)
     cg.foreach { r =>
       assert(r.getLong(1) == 32L)
@@ -189,7 +189,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
   test("dedup_jaccard_hist: buckets partition the graded pair frame") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir).isDirectory, "testdata unavailable here")
-    val h = SparkEntry.queries("dedup_jaccard_hist")(spark, dir).collect()
+    val h = SparkEntry.graded("dedup_jaccard_hist").run(spark, dir).collect()
     assert(h.nonEmpty)
     // buckets at/above the 0.2 threshold only; min/max inside bucket
     h.foreach { r =>
@@ -198,7 +198,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
       assert(minJ >= b * 1000 && (b == 10 || maxJ < (b + 1) * 1000))
     }
     // total pairs == the graded pair count
-    val n = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir).count()
+    val n = SparkEntry.graded("dedup_ngram_jaccard").run(spark, dir).count()
     assert(h.map(_.getLong(1)).sum == n)
   }
 

@@ -71,9 +71,9 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // aligned base mass (Σ depth·bp) must equal the census's
     // Σ ref_span per chr — the sweep can't lose or invent bases
     val dir = "/root/testdata/sf0.001"
-    val pileup = SparkEntry.queries("sam_pileup")(spark, dir)
+    val pileup = SparkEntry.graded("sam_pileup").run(spark, dir)
       .select("chr", "aligned_bp").as[(String, Long)].collect().toMap
-    val census = SparkEntry.queries("sam_alignment_stats")(spark, dir)
+    val census = SparkEntry.graded("sam_alignment_stats").run(spark, dir)
       .select("chr", "sum_ref_span").as[(String, Long)].collect().toMap
     assert(pileup == census)
     assert(pileup.nonEmpty)
@@ -212,7 +212,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // independent re-derivation: ts iff {ref,var} = {A,G} or {C,T};
     // totals must partition the ref≠var population per chr
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("variant_tstv")(spark, dir)
+    val got = SparkEntry.graded("variant_tstv").run(spark, dir)
       .select("chr", "n_ts", "n_tv").as[(Long, Long, Long)]
       .collect().map { case (c, t, v) => c -> ((t, v)) }.toMap
     val li = Tables.lineitem(spark, dir)
@@ -260,7 +260,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     assert(b == 0xc4ca % 100)
     // the three splits partition every language's documents exactly
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("corpus_split")(spark, dir)
+    val got = SparkEntry.graded("corpus_split").run(spark, dir)
       .groupBy("lang").agg(sum("n_docs").as("n"),
         countDistinct("split").as("k"))
       .as[(String, Long, Long)].collect()
@@ -273,7 +273,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
 
   test("dedup_recall_audit: hit counts bounded and ratios consistent") {
     val dir = "/root/testdata/sf0.001"
-    val r = SparkEntry.queries("dedup_recall_audit")(spark, dir)
+    val r = SparkEntry.graded("dedup_recall_audit").run(spark, dir)
       .as[(Long, Long, Long, Long, Long)].head()
     val (truth, cand, hits, recall4, hitRate4) = r
     assert(hits <= math.min(truth, cand) && truth > 0 && cand > 0)
@@ -286,7 +286,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // het count, n_opp_hom = 0 → φ = het/(2·het) = 0.5 (duplicate);
     // the KING duplicate criterion is exactly φ ≈ 0.5
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("popgen_king")(spark, dir)
+    val got = SparkEntry.graded("popgen_king").run(spark, dir)
     val row = got.filter(col("s1") === 0 && col("s2") === 1)
       .select("n_sites").as[Long].head()
     assert(row > 0)
@@ -371,7 +371,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // +1 mod 3 has no fixed point), so n_sites − n_concordant ==
     // count of (pos + sample) % 17 == 0 cells per sample
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("vcf_genotype_concordance")(spark, dir)
+    val got = SparkEntry.graded("vcf_genotype_concordance").run(spark, dir)
       .select("sample", "n_sites", "n_concordant")
       .as[(Long, Long, Long)].collect()
       .map { case (sm, n, c) => sm -> (n - c) }.toMap
@@ -406,7 +406,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
       .as[Long].collect()
     assert(det.length == 22 && det.forall(_ == 0L))
     // and on the graded query: dow values land in 0..6, n_days ≥ 1
-    val got = SparkEntry.queries("events_seasonal_decompose")(spark,
+    val got = SparkEntry.graded("events_seasonal_decompose").run(spark,
       "/root/testdata/sf0.001")
       .select("dow", "n_days").as[(Long, Long)].collect()
     assert(got.nonEmpty && got.forall { case (d, n) =>
@@ -755,7 +755,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("dupq").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = SparkEntry.queries("corpus_dup_quality")(spark, dir)
+    val got = SparkEntry.graded("corpus_dup_quality").run(spark, dir)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(3L -> ((3L, 3L, 10000L)),
@@ -781,7 +781,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
 
   test("ld_prune_step and sam_mapq_profile: internal identities at sf0.001") {
     // ld: kept + pruned = sites per chr, checksum consistent with kept
-    val ld = SparkEntry.queries("ld_prune_step")(spark,
+    val ld = SparkEntry.graded("ld_prune_step").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(ld.nonEmpty)
     ld.foreach { r =>
@@ -790,7 +790,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     }
     // mapq: decades confined to the synthetic 20..59 range and the
     // low fraction re-derivable from the histogram rows themselves
-    val mq = SparkEntry.queries("sam_mapq_profile")(spark,
+    val mq = SparkEntry.graded("sam_mapq_profile").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(mq.nonEmpty)
     assert(mq.forall(r => (2L to 5L).contains(r.getLong(1))))
@@ -818,7 +818,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
   }
 
   test("variant_density: windows partition the distinct variant set") {
-    val rows = SparkEntry.queries("variant_density")(spark,
+    val rows = SparkEntry.graded("variant_density").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     // coordinate space is 0..99999 → 1 kb windows 0..99
@@ -876,7 +876,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // order than the query's pinned sequence) — agreement within 1e-3
     // of a D unit pins the expression against formula transcription
     // errors without copying it
-    val rows = SparkEntry.queries("popgen_tajima_d")(spark,
+    val rows = SparkEntry.graded("popgen_tajima_d").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     val M = 6
@@ -928,7 +928,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
       .filter(col("ov") > 0).agg(sum("ov")).as[Long].collect()(0)
     assert(inter == 12L)
     // and the graded query's rows are self-consistent at sf0.001
-    val rows = SparkEntry.queries("interval_jaccard")(spark,
+    val rows = SparkEntry.graded("interval_jaccard").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -941,7 +941,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
 
   test("codon usage: RSCU sums to n_syn x 1e4 per amino acid") {
     import graft.functions.DnaOps
-    val rows = SparkEntry.queries("dna_codon_usage")(spark,
+    val rows = SparkEntry.graded("dna_codon_usage").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty && rows.length <= 64)
     val nSyn = DnaOps.codonTable.groupBy(_._2).map { case (a, cs) =>
@@ -959,7 +959,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
   }
 
   test("pi windows: per-site pi bounded, windows confined to the space") {
-    val rows = SparkEntry.queries("popgen_pi_windows")(spark,
+    val rows = SparkEntry.graded("popgen_pi_windows").run(spark,
       "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -994,7 +994,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
         lit(0L).as("event_id"), lit("view").as("event_type"),
         lit(0.0).as("value"), lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val got = SparkEntry.queries("events_new_vs_returning")(spark, tmp)
+    val got = SparkEntry.graded("events_new_vs_returning").run(spark, tmp)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(0L -> ((1L, 0L)), 1L -> ((1L, 1L))))
@@ -1080,7 +1080,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     Seq((1L, "a b a", "en", "src0", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = SparkEntry.queries("text_textrank")(spark, tmp)
+    val got = SparkEntry.graded("text_textrank").run(spark, tmp)
       .as[(Long, String, Double)].collect().toList
     assert(got == List((1L, "a", 0.5), (2L, "b", 0.5)))
   }
@@ -1364,7 +1364,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
         ((chr, pos, alt), cls)
       }.distinct.map(_._2)
       .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val got = SparkEntry.queries("variant_context96")(spark, tmp)
+    val got = SparkEntry.graded("variant_context96").run(spark, tmp)
       .collect().map(r =>
         (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == expected)
@@ -1631,7 +1631,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
             .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
         }
       }.sum
-    val got = SparkEntry.queries("dna_seq_entropy")(spark, tmp)
+    val got = SparkEntry.graded("dna_seq_entropy").run(spark, tmp)
       .collect().map(r => r.getLong(0) -> ((r.getLong(6), r.getLong(7))))
       .toMap
     val exp = Map(

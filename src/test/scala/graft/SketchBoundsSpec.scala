@@ -67,7 +67,7 @@ class SketchBoundsSpec extends AnyFunSuite {
 
   test("kmvQuantiles: estimates inside the bottom-k sampling rank window") {
     assume(new java.io.File(dir01).isDirectory, "testdata unavailable here")
-    val out = SparkEntry.queries("sketch_quantiles")(spark, dir01).collect()
+    val out = SparkEntry.graded("sketch_quantiles").run(spark, dir01).collect()
     val byType = Tables.events(spark, dir01)
       .select(col("event_type"), col("value").cast("double"))
       .as[(String, Double)].collect()

@@ -311,8 +311,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
 
   test("one chromosome over persisted tables: one model pass, no stream " +
     "exchange, at most 6 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -356,14 +355,11 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       }.toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"))
 
       val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val ended = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
           jobs.put(e.jobId, Option(e.properties)
             .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
             .getOrElse(""))
-        override def onJobEnd(e: SparkListenerJobEnd): Unit =
-          ended.put(e.jobId, ())
       }
       val sc = spark.sparkContext
       sc.addSparkListener(listener)
@@ -374,16 +370,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
           FixedGenome(genomeMap))
         val rows = ann.collect()
         sc.clearJobGroup()
-        // events reach a listener in order: once a later marker job has
-        // ended, every job of the call above has been seen
-        sc.setJobGroup("marker", "marker")
-        val marker = sc.parallelize(Seq(1), 1).map(identity)
-        marker.collect(); sc.clearJobGroup()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        def markerEnded = jobs.asScala.exists { case (id, grp) =>
-          grp == "marker" && ended.containsKey(id) }
-        while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(markerEnded, "listener never saw the marker job")
+        ListenerBarrier.await(sc)
         (rows, ann.queryExecution.executedPlan)
       } finally sc.removeSparkListener(listener)
       val (rows, plan) = out

@@ -171,19 +171,15 @@ class VcfParserSpec extends AnyFunSuite {
   }
 
   test("building fromPath over a directory of VCFs starts no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val dir = twoHeaders(Files.createTempDirectory("graft_vcf_jobs")).toString
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.put(e.jobId, Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .getOrElse(""))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        ended.put(e.jobId, ())
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -192,16 +188,7 @@ class VcfParserSpec extends AnyFunSuite {
       val df = VcfParser.fromPath(spark, dir)
       val counts = VcfParser.genotypeCountsFromPath(spark, dir)
       sc.clearJobGroup()
-      // events reach a listener in order: once a later marker job has
-      // ended, every job started while building has been seen
-      sc.setJobGroup("marker", "marker")
-      sc.parallelize(Seq(1), 1).map(identity).collect()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      def markerEnded = jobs.asScala.exists { case (id, grp) =>
-        grp == "marker" && ended.containsKey(id) }
-      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(markerEnded, "listener never saw the marker job")
+      ListenerBarrier.await(sc)
       (df, counts)
     } finally sc.removeSparkListener(listener)
     assert(jobs.asScala.count(_._2 == "vcf-build") == 0)
