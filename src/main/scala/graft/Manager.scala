@@ -61,14 +61,10 @@ object Manager {
     // `Manager ... && next` must not proceed on an invalid invocation
     if (args.length < 2 || args(0) != "--tool")
       throw new IllegalArgumentException(usage)
-    // Manager keeps its own master/partitions contract (SPARK_MASTER,
-    // cpus default 32) but the library tune rides in via Sessions.tuned
-    val spark = Sessions.tuned(SparkSession.builder()
-      .config("spark.master",
-        sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .getOrCreate()
+    // the library session; SPARK_MASTER, when set, points it at a
+    // cluster instead of local[SPARK_GRAFT_CPUS]
+    val b = Sessions.local()
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
     try runTool(spark, args(1), args.drop(2))
     finally spark.stop()
   }

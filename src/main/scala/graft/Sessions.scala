@@ -2,25 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE source for the library's session-level tuning, shared by every
-  * entry point (Bench, Verify, Manager, graft.tools.*) so a
-  * performance-relevant config cannot live only in the bench harness
-  * (VERDICT r14 item 2: the AQE coalesce floor shipped in Bench/Profile
-  * but not Verify/Manager, so user sessions never got the tune).
+import graft.plans.GraftExtensions
+
+/** ONE source for the library's session setup, shared by every entry
+  * point (Bench, Verify, Manager, graft.tools.*, the tests), so a setting
+  * or plan rule cannot live only in one harness.
   *
-  * Scale posture of each setting (optimization guide §2/§9):
-  *  - `coalescePartitions.minPartitionSize = 256k` (default 1m): AQE's
-  *    floor on post-shuffle partition size. With the default, a small
-  *    shuffle (a few MB) coalesces to a handful of partitions and every
-  *    compute-heavy stage ABOVE it (kernel explodes, per-row digests)
-  *    serializes onto a few cores. 256k only binds when shuffle bytes
-  *    per core are under ~1 MB — exactly the small-shuffle-on-many-cores
-  *    regime; at 100 TB the advisory bytes/parallelism target dominates
-  *    and the floor never binds, so this is not a local-only tune.
-  *  - `shuffle.partitions` defaults to the session's core count locally
-  *    and is overridable via `SPARK_GRAFT_SHUFFLE_PARTITIONS` for
-  *    cluster runs (guide §2.2: size partitions to the data, not a
-  *    constant; AQE coalescing then adapts downward per query).
+  *  - [[GraftExtensions]]: the SQL functions and plan rules, so every
+  *    session plans the graded queries as a user session does.
+  *  - `coalescePartitions.minPartitionSize = 256k` (default 1m), so AQE
+  *    does not coalesce a small shuffle onto a few cores under heavy work;
+  *    it only binds below ~1 MB of shuffle per core, never at 100 TB.
+  *  - `shuffle.partitions` = the core count; AQE coalesces down per query.
   *  - UTC session zone: the events table's ns/µs timestamp contract
   *    (see [[Tables.events]]) is only identity under UTC.
   */
@@ -29,19 +22,17 @@ object Sessions {
     * `local[$SPARK_GRAFT_CPUS]`). */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** Library session tuning — applied to EVERY builder, local or
-    * cluster, so the tune ships with the library and not a harness. */
+  /** Library session setup for any builder, local or cluster. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
       .config("spark.sql.session.timeZone", "UTC")
+      .withExtensions(new GraftExtensions)
 
-  /** The standard local-mode builder: `local[cpus]`, shuffle
-    * partitions = cpus (env-overridable for cluster rehearsals), UI off
-    * (headless boxes; the UI server costs startup time and a port). */
+  /** `local[cores]`, shuffle partitions = cores, UI off (headless boxes;
+    * the UI server costs startup time and a port). */
   def local(cores: String = cpus): SparkSession.Builder =
     tuned(SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores))
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false"))
 }

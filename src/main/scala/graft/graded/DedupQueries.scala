@@ -19,10 +19,6 @@ private[graft] object DedupQueries {
     * graph_pagerank), mirroring the oracle-side sharing so the pair
     * graph cannot drift between its consumers. */
   private def docJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    // NOT the spread loader: tried in r15 and the whole family regressed
-    // ~0.6x — ngramJaccardPairs references the docs frame on both sides
-    // of its candidate/verify joins, and the extra exchange re-executes
-    // per reference instead of reusing (the corpus_mix lesson)
     Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
       blockCol = docBlockCol, n = 3, minJaccard = 0.2)
 
@@ -312,7 +308,7 @@ private[graft] object DedupQueries {
       // the banded candidate join — the stage that would go quadratic if
       // banding were wrong; graded against a DuckDB twin that re-derives
       // the band groups from the same md5-window signatures
-      Dedup.minhashCandidates(Tables.documentsSpread(s, dir), "doc_id", "text",
+      Dedup.minhashCandidates(Tables.documents(s, dir), "doc_id", "text",
         numHashes = 16, rowsPerBand = 4, shingleLen = 3)
     },
     // banded-candidate twin: same signatures; a band matches when all 4
@@ -443,7 +439,7 @@ private[graft] object DedupQueries {
       // near-dup decontamination: training docs sharing a minhash LSH
       // band bucket with the benchmark slice — catches lightly-edited
       // test-set leakage the exact n-gram pass misses
-      val docs = Tables.documentsSpread(s, dir)
+      val docs = Tables.documents(s, dir)
       Curation.decontaminateFuzzy(docs.filter(col("doc_id") % 20 =!= 0),
         docs.filter(col("doc_id") % 20 === 0), "doc_id", "text")
     },
@@ -460,7 +456,7 @@ private[graft] object DedupQueries {
       // incremental ingest: batch docs surviving near-dup screening
       // against the existing corpus (batch bands broadcast, corpus
       // never shuffles — decontam with build/probe swapped)
-      val docs = Tables.documentsSpread(s, dir)
+      val docs = Tables.documents(s, dir)
       Curation.dedupIncremental(docs.filter(col("doc_id") % 20 =!= 0),
           docs.filter(col("doc_id") % 20 === 0), "doc_id", "text",
           minSharedBands = 3)

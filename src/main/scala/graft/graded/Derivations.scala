@@ -26,22 +26,13 @@ private[graded] object Derivations {
   val liPosSql = "(l_orderkey*31 + l_linenumber*7) % 100000"
 
   /** Synthetic variant rows derived from lineitem (chr, pos, ref/var nuc). */
-  def liVariantsOf(base: DataFrame): DataFrame =
-    base.select(
+  def liVariants(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir).select(
       liChr.cast("long").as("chr"),
       liPos.cast("long").as("pos"),
       baseOf(col("l_partkey")).as("ref_nuc"),
       baseOf(col("l_suppkey")).as("var_nuc"),
       col("l_linenumber"), col("l_orderkey"))
-  def liVariants(s: SparkSession, dir: String): DataFrame =
-    liVariantsOf(Tables.lineitem(s, dir))
-
-  /** [[liVariants]] over the spread loader — for consumers whose first
-    * stage does heavy per-row or partial-aggregate work above the
-    * single-file scan (guide §2); light consumers keep the plain scan
-    * (the corpus_mix lesson: an unearned exchange is a regression). */
-  def liVariantsSpread(s: SparkSession, dir: String): DataFrame =
-    liVariantsOf(Tables.lineitemSpread(s, dir))
 
   val liVariantsSql =
     s"SELECT CAST($liChrSql AS BIGINT) AS chr, " +
@@ -57,7 +48,7 @@ private[graded] object Derivations {
     * AD=0,s9. */
   def synthVcfLines(s: SparkSession, dir: String) = {
     import s.implicits._
-    Tables.lineitemSpread(s, dir).select(concat_ws("\t",
+    Tables.lineitem(s, dir).select(concat_ws("\t",
       (liChr + 1).cast("string"),
       liPos.cast("string"),
       lit("."),
@@ -103,7 +94,7 @@ private[graded] object Derivations {
         concat(sC, lit("S"), m1, lit("M"), ins, lit("I"),
           m2, lit("M"), del, lit("D"), lit("4M")),
         lit("*"), lit("0"), lit("0"), lit("*"), lit("*")))
-    Tables.lineitemSpread(s, dir).select(line.as("line")).as[String]
+    Tables.lineitem(s, dir).select(line.as("line")).as[String]
   }
 
   /** Oracle twin of [[samSynthLines]] ∘ Sam.alignments: the mapped,

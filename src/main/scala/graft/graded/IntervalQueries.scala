@@ -132,7 +132,7 @@ private[graft] object IntervalQueries {
         .when(col("l_suppkey") % 5 === 3, "GTA").otherwise("GTAC")
       val typeC = Fixups.variantTypeComputed(col("ref_seq"), col("var_seq"))
       val fsC = Fixups.frameShiftComputed(col("ref_seq"), col("var_seq"))
-      val li = Tables.lineitemSpread(s, dir).select(
+      val li = Tables.lineitem(s, dir).select(
           liChr.cast("long").as("chr"),
           liPos.cast("long").as("pos"),
           col("l_orderkey"), ref.as("ref_seq"), vr.as("var_seq"))
@@ -245,7 +245,7 @@ private[graft] object IntervalQueries {
       val blocks = graft.sources.ChainFile.blocks(lines)
         .select(col("chain_id"), col("s_chr").cast("long").as("chr"),
           col("s_start"), col("s_stop"), col("t_first"), col("dir"))
-      val pts = liVariantsSpread(s, dir).groupBy("chr", "pos")
+      val pts = liVariants(s, dir).groupBy("chr", "pos")
         .agg(count(lit(1)).as("cnt"))
       // binWidth ~ block length (20-50 bases here), NOT the gene-scale
       // 4096: a bin pairs every point in it against every block in it,
@@ -478,7 +478,7 @@ private[graft] object IntervalQueries {
         col("gene_id").as("id_a"),
         col("gstart").as("a_start"), col("gstop").as("a_stop"))
       val o = col("o_orderkey").cast("long")
-      val b = Tables.ordersSpread(s, dir).select(
+      val b = Tables.orders(s, dir).select(
         (o % 5).as("chr"), o.as("id_b"),
         ((o * 211) % 100000).as("b_start"),
         ((o * 211) % 100000 + 30 + (o * 53) % 3000).as("b_stop"))
@@ -599,7 +599,7 @@ private[graft] object IntervalQueries {
       // widened binned interval join (NearestFeature.nearestInterval)
       val g = partGenes(s, dir)
       val o = col("o_orderkey").cast("long")
-      val calls = Tables.ordersSpread(s, dir).select(
+      val calls = Tables.orders(s, dir).select(
         (o % 5).as("chr"), o.as("call_id"),
         ((o * 211) % 100000).as("c_start"),
         ((o * 211) % 100000 + 30 + (o * 53) % 3000).as("c_stop"))

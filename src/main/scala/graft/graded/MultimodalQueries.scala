@@ -80,7 +80,7 @@ private[graft] object MultimodalQueries {
       // blocked hamming pairs; the oracle re-derives every hash from
       // the pixel formula and brute-forces pairs, so the graded hash
       // validates the whole codec + hash + blocking pipeline
-      val imgs = Multimodal.syntheticImages(Tables.documentsSpread(s, dir),
+      val imgs = Multimodal.syntheticImages(Tables.documents(s, dir),
         "doc_id")
       Multimodal.imageNearDupPairs(Multimodal.imageHashes(imgs),
           maxHamming = 3)
@@ -121,7 +121,7 @@ private[graft] object MultimodalQueries {
       // so the graded entropy validates codec + histogram + entropy
       // chain end to end (Multimodal.imageEntropy)
       Multimodal.imageEntropy(
-        Multimodal.syntheticImages(Tables.documentsSpread(s, dir), "doc_id"))
+        Multimodal.syntheticImages(Tables.documents(s, dir), "doc_id"))
     },
     // the oracle recomputes expected frame energies straight from the
     // synthetic waveform formula — grading the WAV encode → decode →

@@ -1131,7 +1131,7 @@ private[graft] object PopGenQueries {
           pos.cast("string"))), 1, 1),
           "0123456789abcdef", "ACGTACGTACGTACGT")
       def comp(x: Column): Column = translate(x, "ACGT", "TGCA")
-      val li = Tables.lineitemSpread(s, dir).select(
+      val li = Tables.lineitem(s, dir).select(
         liChr.cast("long").as("chr"),
         liPos.cast("long").as("pos"),
         (col("l_suppkey") % 3 + 1).cast("int").as("rot"))

@@ -270,7 +270,7 @@ private[graft] object ReadQueries {
         .otherwise(array(
           read(lit(99L), lit(65L), pos1, pos2, t),
           read(lit(147L), lit(129L), pos2, pos1, -t)))
-      val lines = Tables.lineitemSpread(s, dir)
+      val lines = Tables.lineitem(s, dir)
         .select(explode(line).as("line")).as[String]
       graft.sources.Sam.pairedAlignments(lines)
         .filter(col("tlen") > 0)
@@ -326,7 +326,7 @@ private[graft] object ReadQueries {
         lit("30"), concat((lit(10L) + p % 30).cast("string"), lit("M")),
         lit("*"), lit("0"), lit("0"), lit("*"), lit("*"))
       val aln = graft.sources.Sam.alignments(
-        Tables.lineitemSpread(s, dir).select(line.as("line")).as[String])
+        Tables.lineitem(s, dir).select(line.as("line")).as[String])
       def hasBit(b: Long) =
         (col("flag").cast("long").bitwiseAND(b) =!= 0L)
       aln.agg(count(lit(1)).as("n_total"),

@@ -255,7 +255,7 @@ private[graft] object RelationalQueries {
         s"'$c', ${c}__n, ${c}__nd, ${c}__min, ${c}__max, ${c}__avg")
         .mkString(", ") +
         ") as (column_name, n, n_distinct, min_val, max_val, avg_val)"
-      Tables.lineitemSpread(s, dir)
+      Tables.lineitem(s, dir)
         .agg(aggs.head, aggs.tail: _*)
         .select(expr(stacked))
     },

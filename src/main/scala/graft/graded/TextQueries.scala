@@ -133,7 +133,7 @@ private[graft] object TextQueries {
 
     GradedQuery("corpus_curate", (s, dir) => {
       CorpusPipeline.stats(
-        CorpusPipeline.curate(Tables.documentsSpread(s, dir), "doc_id", "text",
+        CorpusPipeline.curate(Tables.documents(s, dir), "doc_id", "text",
           docBlockCol))
     },
       {
@@ -353,7 +353,7 @@ private[graft] object TextQueries {
     GradedQuery("text_winnow_pairs", (s, dir) => {
       // the MOSS detection stage: candidate copies from shared
       // fingerprints, ubiquitous fingerprints dropped before expansion
-      TextAnalysis.winnowCandidates(Tables.documentsSpread(s, dir),
+      TextAnalysis.winnowCandidates(Tables.documents(s, dir),
         "doc_id", "text", k = 5, window = 4, minShared = 2, maxDf = 64)
     },
     // winnow-pair twin: same fingerprints, same ubiquity cut (2..64),
@@ -593,7 +593,7 @@ private[graft] object TextQueries {
     GradedQuery("dsir_select", (s, dir) => {
       // DSIR importance scoring (Xie 2023) with lang='en' as the target
       // domain and the whole corpus as the raw distribution
-      Selection.dsirScore(Tables.documentsSpread(s, dir), "doc_id", "text",
+      Selection.dsirScore(Tables.documents(s, dir), "doc_id", "text",
         col("lang") === "en", numBuckets = 64)
     },
     // DSIR: same md5-prefix hash buckets (the minhash discipline),
@@ -667,7 +667,7 @@ private[graft] object TextQueries {
       // Heaps-law vocabulary growth at 50-doc checkpoints over word
       // BIGRAMS (the unigram vocabulary is closed and tiny by
       // construction — only a composite unit grows)
-      TextAnalysis.vocabGrowth(Tables.documentsSpread(s, dir), "doc_id",
+      TextAnalysis.vocabGrowth(Tables.documents(s, dir), "doc_id",
         TextAnalysis.wordBigrams(col("text")), step = 50L)
     },
       s"""WITH d AS (SELECT doc_id, string_split($normTextSql, ' ') AS ps
@@ -704,7 +704,7 @@ private[graft] object TextQueries {
     GradedQuery("text_bigram_ppl", (s, dir) => {
       // bigram-LM surprisal (the KenLM perplexity-filter shape, one
       // word of history up from text_surprisal)
-      TextAnalysis.bigramSurprisal(Tables.documentsSpread(s, dir), "doc_id", "text")
+      TextAnalysis.bigramSurprisal(Tables.documents(s, dir), "doc_id", "text")
     },
       s"""WITH d AS (SELECT doc_id, string_split($normTextSql, ' ') AS ps
          |  FROM documents),
@@ -731,7 +731,7 @@ private[graft] object TextQueries {
       // third classic smoothing next to add-1 (text_bigram_ppl) and
       // Kneser-Ney (text_kn_ppl); same one-explode vocabulary-keyed
       // shape (TextAnalysis.jmBigramSurprisal)
-      TextAnalysis.jmBigramSurprisal(Tables.documentsSpread(s, dir),
+      TextAnalysis.jmBigramSurprisal(Tables.documents(s, dir),
         "doc_id", "text")
     },
     // bigram twin of the text_surprisal chain: history counts
@@ -836,7 +836,7 @@ private[graft] object TextQueries {
       // one graded PLSA EM step from a deterministic init (the
       // kmeansStep discipline for topic models): top-10 words per topic
       // by the M-step's new unnormalized weight
-      Topics.plsaStep(Tables.documentsSpread(s, dir), "doc_id", "text")
+      Topics.plsaStep(Tables.documents(s, dir), "doc_id", "text")
     },
     // the E-step responsibilities are per-row arithmetic (no float
     // aggregation): each num_z and the fixed-z-order denominator are
@@ -935,7 +935,7 @@ private[graft] object TextQueries {
       // discipline. GRADED: the oracle replays every round as a
       // chained CTE (count → argmax → replace), so selection order,
       // tie-breaks and counts are all checked.
-      val merges = TextAnalysis.bpeTrain(Tables.documentsSpread(s, dir),
+      val merges = TextAnalysis.bpeTrain(Tables.documents(s, dir),
         "text", numMerges = 10)
       import s.implicits._
       merges.zipWithIndex
@@ -958,9 +958,9 @@ private[graft] object TextQueries {
       // lowest-rank-first merge loop as a recursive CTE over the
       // word vocabulary.
       val model = graft.functions.BpeOps.BpeModel(
-        TextAnalysis.bpeTrain(Tables.documentsSpread(s, dir), "text",
+        TextAnalysis.bpeTrain(Tables.documents(s, dir), "text",
           numMerges = 10).map(m => (m._1, m._2)))
-      TopK.ranked(Tables.documentsSpread(s, dir)
+      TopK.ranked(Tables.documents(s, dir)
           .select(explode(graft.functions.Bpe.encode(col("text"), model))
             .as("token"))
           .groupBy("token").agg(count(lit(1)).as("n_occ")),
@@ -1023,14 +1023,14 @@ private[graft] object TextQueries {
       // per occurrence), joins back per-(lang, word) frequencies, one
       // lang-sized rollup; integers + one rounded division.
       val model = graft.functions.BpeOps.BpeModel(
-        TextAnalysis.bpeTrain(Tables.documentsSpread(s, dir), "text",
+        TextAnalysis.bpeTrain(Tables.documents(s, dir), "text",
           numMerges = 10).map(m => (m._1, m._2)))
       // encode once per (lang, word) — a word shared across languages
       // encodes ≤ |langs| times (each a µs-scale constant-model kernel
       // call), which buys removing the word-vocab distinct AND the
       // join back (two exchanges + a second corpus explode subtree the
       // old distinct+join shape carried). Same rollup, exact integers.
-      Tables.documentsSpread(s, dir)
+      Tables.documents(s, dir)
         .select(col("lang"),
           explode(split(Dedup.normText(col("text")), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -1083,7 +1083,7 @@ private[graft] object TextQueries {
     GradedQuery("text_kn_ppl", (s, dir) => {
       // interpolated Kneser-Ney bigram surprisal (continuation-count
       // backoff, D = 0.75) — the KenLM-smoothing twin of text_bigram_ppl
-      TextAnalysis.knBigramSurprisal(Tables.documentsSpread(s, dir), "doc_id",
+      TextAnalysis.knBigramSurprisal(Tables.documents(s, dir), "doc_id",
         "text")
     },
     // interpolated Kneser-Ney: continuation/left-context type counts
@@ -1153,7 +1153,7 @@ private[graft] object TextQueries {
       // (the graph_pagerank dataflow on a word graph), top 25 by
       // (pr desc, word) — every frame vocabulary-sized after the one
       // bigram explode
-      val bg = Tables.documentsSpread(s, dir).select(
+      val bg = Tables.documents(s, dir).select(
           explode(TextAnalysis.wordBigrams(col("text"))).as("bg"))
         .select(substring_index(col("bg"), " ", 1).as("wa"),
           substring_index(col("bg"), " ", -1).as("wb"))

@@ -29,10 +29,7 @@ private[graft] object VariantQueries {
     * the audit's strand lookup). */
   private def annotatedVariantTranscripts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // spread loader: the single-file lineitem scan otherwise feeds the
-    // distinct's partial aggregate from 3 tasks (guide §2: one-task scan
-    // under per-row work); identity at the many-file 100 TB layout
-    val variants = liVariantsOf(Tables.lineitemSpread(s, dir))
+    val variants = liVariants(s, dir)
       .select(col("chr").cast("string").as("chr"),
         ((col("l_orderkey") * 6151 + col("l_linenumber") * 131) % 10000000)
           .cast("long").as("pos"),
@@ -385,7 +382,7 @@ private[graft] object VariantQueries {
       // reference's per-sample detail merge): per-site genotype columns
       // in sample order; collect_list order is nondeterministic — the
       // array_sort is what makes retries agree
-      val d = Tables.lineitemSpread(s, dir).select(
+      val d = Tables.lineitem(s, dir).select(
           concat(lit("S"), (col("l_suppkey") % 4).cast("string"))
             .as("sample"),
           liChr.cast("long").as("chr"),
@@ -501,7 +498,7 @@ private[graft] object VariantQueries {
             lit("|upstream_gene_variant|MODIFIER|"), gene,
             lit("|ID|transcript|T2|protein_coding|||"))).otherwise(lit("")))
       SnpEff.parseAnnotations(
-          Tables.lineitemSpread(s, dir).select(info.as("info")), "info")
+          Tables.lineitem(s, dir).select(info.as("info")), "info")
         .groupBy("effect", "impact")
         .agg(count(lit(1)).as("n"),
           countDistinct("gene_symbol").as("n_genes"))
@@ -1142,7 +1139,7 @@ private[graft] object VariantQueries {
       // semantics the cycle has to preserve. Missing samples at a site
       // are written as ./.:0,0:0 (parser-dropped, like the reference).
       import s.implicits._
-      val cells = Tables.lineitemSpread(s, dir).select(
+      val cells = Tables.lineitem(s, dir).select(
           liChr.cast("long").as("chr"),
           liPos.cast("long").as("pos"),
           (col("l_suppkey") % 4).cast("long").as("idx"),
@@ -1258,7 +1255,7 @@ private[graft] object VariantQueries {
         concat((col("l_linenumber") + 2).cast("string"), lit(","),
           (col("l_suppkey") % 5 + 1).cast("string")))
         .otherwise((col("l_linenumber") + 2).cast("string"))
-      val lines = Tables.lineitemSpread(s, dir).select(concat_ws("\t",
+      val lines = Tables.lineitem(s, dir).select(concat_ws("\t",
         (liChr + 1).cast("string"),
         liPos.cast("string"),
         lit("."), baseOf(col("l_partkey")), alt, lit("."), lit("."),
@@ -1310,7 +1307,7 @@ private[graft] object VariantQueries {
         .otherwise("0/1:3,4:7")
       val cellB = when(col("l_orderkey") % 7 === 0, "./.")
         .otherwise("1/1:0,9:9")
-      val lines = Tables.lineitemSpread(s, dir).select(concat_ws("\t",
+      val lines = Tables.lineitem(s, dir).select(concat_ws("\t",
         (liChr + 1).cast("string"),
         liPos.cast("string"),
         lit("."), baseOf(col("l_partkey")), alt, lit("100"), lit("PASS"),
@@ -1385,7 +1382,7 @@ private[graft] object VariantQueries {
         translate(substring(md5(concat(chr.cast("string"), lit(":"),
           pos.cast("string"))), 1, 1),
           "0123456789abcdef", "ACGTACGTACGTACGT")
-      val li = Tables.lineitemSpread(s, dir).select(
+      val li = Tables.lineitem(s, dir).select(
           liChr.cast("long").as("chr"),
           liPos.cast("long").as("pos"),
           (col("l_suppkey") % 3).cast("int").as("c"))

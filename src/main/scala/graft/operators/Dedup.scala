@@ -220,18 +220,10 @@ object Dedup {
     def interCount(a: Column, b: Column): Column =
       if (packed) graft.functions.Shingles.intersectCountLong(a, b)
       else graft.functions.Shingles.intersectCount(a, b)
-    // The (id, block, shingle-set) frame is read THREE times below —
-    // the candidate explode and both verify-join sides — and on a
-    // single-file/checkpointed input each read re-ran the whole shingle
-    // kernel in ONE task (StageProfile: 2-3 serial 1-task stages of
-    // 1.8-2.4 s per consumer at sf0.1). Cut it once: spread the raw
-    // text first when the input has fewer partitions than cores (gate
-    // is identity at a many-file 100 TB layout — no extra exchange at
-    // scale), so the kernel itself parallelizes, then materialize so
-    // the two verify joins read blocks, not lineage. Hash on the
-    // (near-)unique id: deterministic per row, no round-robin sort
-    // prologue. Results are unchanged — every downstream op is a
-    // groupBy/join, partitioning-free.
+    // The (id, block, shingle-set) frame is read THREE times below, so it
+    // is materialized once. Its input may be a checkpointed frame, which
+    // SpreadScanRule (parquet scans only) does not see: with fewer
+    // partitions than cores, spread the raw text first, hashed on the id.
     val raw = docs.select(col(idCol).as("id"), blockCol.as("block"),
       col(textCol).as("__text"))
     val par = docs.sparkSession.sparkContext.defaultParallelism
@@ -481,9 +473,6 @@ object Dedup {
       done = changed == 0L
       labels = jumped.drop("old_gid")
       it += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $it changed=$changed " +
-          s"multBound=$multBound t=${System.nanoTime()}")
     }
     require(done, s"connectedComponents did not converge in $maxIter rounds")
     labels.select(col("id"), col("group_id"))

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,16 +9,11 @@ import graft.functions.{CharShingles, CountWord, DotProductF, IntersectCount,
   MinHash16, NormText, RepStats, ReverseComplement, SimHash60, TranslateDna,
   WinnowFps}
 
-/** SQL surface for graft's native expressions, registered through
-  * `SparkSessionExtensions` so `spark.sql("SELECT translate_dna(...)")`
-  * works in any session built with
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
-  */
+/** graft's plan rules ([[RangeBinJoinRule]], [[SpreadScanRule]]) and SQL
+  * functions (`spark.sql("SELECT translate_dna(...)")`). [[graft.Sessions]]
+  * installs them; other sessions use `.withExtensions(new GraftExtensions)`
+  * or `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", "", name, usage, "", "", "", "", "", "", "built-in")
 
   private def str(e: Expression): String = e match {
     case Literal(s: UTF8String, _) => s.toString
@@ -33,40 +27,38 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"expected an int literal, got $other")
   }
 
+  /** Every graft SQL function: name, usage, builder. */
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("translate_dna", "translate_dna(dna) - codon translation to amino acids",
+      a => TranslateDna(a.head)),
+    ("reverse_complement", "reverse_complement(dna) - strand flip",
+      a => ReverseComplement(a.head)),
+    ("norm_text", "norm_text(s) - trim/lower/collapse whitespace",
+      a => NormText(a.head)),
+    ("char_shingles", "char_shingles(s, n) - distinct character n-grams",
+      a => CharShingles(a.head, int(a(1)))),
+    ("count_word", "count_word(s, word) - word-boundary occurrence count",
+      a => CountWord(a.head, str(a(1)))),
+    ("dot_f", "dot_f(a, b) - float-vector dot product in double",
+      a => DotProductF(a.head, a(1))),
+    ("simhash60", "simhash60(s) - 60-bit SimHash of raw text",
+      a => SimHash60(a.head)),
+    ("minhash16", "minhash16(s, n) - 16 md5-window minhash minima",
+      a => MinHash16(a.head, int(a(1)))),
+    ("winnow_fps", "winnow_fps(s, k, w) - winnowing fingerprints",
+      a => WinnowFps(a.head, int(a(1)), int(a(2)))),
+    ("rep_stats", "rep_stats(s) - 7 exact-integer repetition statistics",
+      a => RepStats(a.head)),
+    ("intersect_count", "intersect_count(a, b) - distinct-array intersection size",
+      a => IntersectCount(a.head, a(1)))
+  )
+
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(session => RangeBinJoinRule(session))
-    e.injectFunction((FunctionIdentifier("translate_dna"),
-      info("translate_dna", "translate_dna(dna) - codon translation to amino acids"),
-      (args: Seq[Expression]) => TranslateDna(args.head)))
-    e.injectFunction((FunctionIdentifier("reverse_complement"),
-      info("reverse_complement", "reverse_complement(dna) - strand flip"),
-      (args: Seq[Expression]) => ReverseComplement(args.head)))
-    e.injectFunction((FunctionIdentifier("norm_text"),
-      info("norm_text", "norm_text(s) - trim/lower/collapse whitespace"),
-      (args: Seq[Expression]) => NormText(args.head)))
-    e.injectFunction((FunctionIdentifier("char_shingles"),
-      info("char_shingles", "char_shingles(s, n) - distinct character n-grams"),
-      (args: Seq[Expression]) => CharShingles(args.head, int(args(1)))))
-    e.injectFunction((FunctionIdentifier("count_word"),
-      info("count_word", "count_word(s, word) - word-boundary occurrence count"),
-      (args: Seq[Expression]) => CountWord(args.head, str(args(1)))))
-    e.injectFunction((FunctionIdentifier("dot_f"),
-      info("dot_f", "dot_f(a, b) - float-vector dot product in double"),
-      (args: Seq[Expression]) => DotProductF(args.head, args(1))))
-    e.injectFunction((FunctionIdentifier("simhash60"),
-      info("simhash60", "simhash60(s) - 60-bit SimHash of raw text"),
-      (args: Seq[Expression]) => SimHash60(args.head)))
-    e.injectFunction((FunctionIdentifier("minhash16"),
-      info("minhash16", "minhash16(s, n) - 16 md5-window minhash minima"),
-      (args: Seq[Expression]) => MinHash16(args.head, int(args(1)))))
-    e.injectFunction((FunctionIdentifier("winnow_fps"),
-      info("winnow_fps", "winnow_fps(s, k, w) - winnowing fingerprints"),
-      (args: Seq[Expression]) => WinnowFps(args.head, int(args(1)), int(args(2)))))
-    e.injectFunction((FunctionIdentifier("rep_stats"),
-      info("rep_stats", "rep_stats(s) - 7 exact-integer repetition statistics"),
-      (args: Seq[Expression]) => RepStats(args.head)))
-    e.injectFunction((FunctionIdentifier("intersect_count"),
-      info("intersect_count", "intersect_count(a, b) - distinct-array intersection size"),
-      (args: Seq[Expression]) => IntersectCount(args.head, args(1))))
+    e.injectPreCBORule(session => SpreadScanRule(session))
+    functions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", "", name, usage, "", "", "", "", "", "", "built-in"), build))
+    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 
-import graft.{ListenerBarrier, Sessions, SparkEntry}
+import graft.{Bench, ListenerBarrier, Sessions, SparkEntry}
 import graft.graded.GradedQuery
 
 /** Looks inside named graded queries (every one with no names given).
@@ -35,7 +35,8 @@ import graft.graded.GradedQuery
   * inherit it from the thread that starts them): a query whose
   * time is job/stage count wants fewer rounds or exchanges, one dominated
   * by shuffle bytes wants narrower rows, a 1-task stage under heavy
-  * per-row work wants spreading. The timing action is Bench's `count()`.
+  * per-row work wants spreading. The timing action is Bench's noop-sink
+  * [[graft.Bench.runWhole]].
   */
 object Inspect {
   private val usage = "usage: Inspect <plan|profile> <sfDir> [query names…]"
@@ -115,11 +116,11 @@ object Inspect {
     spark.sparkContext.addSparkListener(log)
     // one warm-up query so the first profiled name doesn't absorb
     // session-wide cold costs (same reasoning as Bench's untimed pass)
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try Bench.runWhole(SparkEntry.entry(spark)) catch { case _: Throwable => }
     def timed(fn: SparkEntry.Query): Double = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      Bench.runWhole(fn(spark, sfDir))
       val s = (System.nanoTime() - t0) / 1e9
       ListenerBarrier.await(spark.sparkContext)
       s

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,38 +18,31 @@ class RangeBinRuleSpec extends AnyFunSuite {
       val s = rnd.nextInt(4800).toLong * scale
       (i.toLong, s, s + rnd.nextInt(300).toLong * scale)
     }
-    def pairs(spark: SparkSession) = {
-      import spark.implicits._
-      points.toDF("p").join(ivs.toDF("iv", "s", "e"), $"s" <= $"p" && $"p" <= $"e")
-    }
-    // the naive answer from the shared session, which has no extensions
-    val plain = pairs(TestSpark.spark)
-    assert(!plain.queryExecution.optimizedPlan.toString.contains("__graft_bin"))
-    val naive = plain.select("p", "iv").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    TestSpark.withExtensions { spark =>
-      val joined = pairs(spark)
-      val plan = joined.queryExecution.optimizedPlan.toString
-      assert(plan.contains("__graft_bin"), s"rule did not fire:\n$plan")
-      val got = joined.select("p", "iv").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      assert(naive.nonEmpty && got.toSeq == naive.toSeq)
-    }
+    // the naive answer, computed in plain Scala
+    val naive = (for { p <- points; (iv, s, e) <- ivs if s <= p && p <= e } yield (p, iv)).sorted
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val joined = points.toDF("p").join(ivs.toDF("iv", "s", "e"), $"s" <= $"p" && $"p" <= $"e")
+    val plan = joined.queryExecution.optimizedPlan.toString
+    assert(plan.contains("__graft_bin"), s"rule did not fire:\n$plan")
+    val got = joined.select("p", "iv").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(naive.nonEmpty && got.toSeq == naive)
   }
 
   test("a RangeJoin.joined plan is binned once, not again by the rule") {
-    TestSpark.withExtensions { spark =>
-      import spark.implicits._
-      val points = Seq(("1", 5L), ("1", 70L), ("2", 5L)).toDF("chr", "pos")
-      val ivs = Seq(("1", 1L, 100L, 7L), ("2", 50L, 60L, 8L))
-        .toDF("chr", "start", "stop", "id")
-      val joined = RangeJoin.joined(points, ivs, "pos", "start", "stop",
-        keys = Seq("chr"), binWidth = 32)
-      val plan = joined.queryExecution.optimizedPlan
-      // the interval side's explode is the only Generate: the rule saw
-      // the bin column RangeJoin had already added and left the join alone
-      val gens = plan.collect { case g: Generate => g }
-      assert(gens.length == 1, s"expected one interval-side Generate:\n$plan")
-      assert(joined.select("pos", "id").as[(Long, Long)].collect().sorted
-        .toSeq == Seq((5L, 7L), (70L, 7L)))
-    }
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val points = Seq(("1", 5L), ("1", 70L), ("2", 5L)).toDF("chr", "pos")
+    val ivs = Seq(("1", 1L, 100L, 7L), ("2", 50L, 60L, 8L))
+      .toDF("chr", "start", "stop", "id")
+    val joined = RangeJoin.joined(points, ivs, "pos", "start", "stop",
+      keys = Seq("chr"), binWidth = 32)
+    val plan = joined.queryExecution.optimizedPlan
+    // the interval side's explode is the only Generate: the rule saw
+    // the bin column RangeJoin had already added and left the join alone
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.length == 1, s"expected one interval-side Generate:\n$plan")
+    assert(joined.select("pos", "id").as[(Long, Long)].collect().sorted
+      .toSeq == Seq((5L, 7L), (70L, 7L)))
   }
 }

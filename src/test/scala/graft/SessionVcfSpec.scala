@@ -83,31 +83,30 @@ class VcfFormatSpec extends AnyFunSuite {
 
 class ExtensionsSpec extends AnyFunSuite {
   test("graft functions are callable from SQL via SparkSessionExtensions") {
-    // a sibling session over the same SparkContext, with extensions applied
-    TestSpark.withExtensions { spark =>
-      val r = spark.sql(
-        """SELECT translate_dna('ATGGCCTAA') AS aa,
-          |  reverse_complement('AAGG') AS rc,
-          |  norm_text('  Hello   World ') AS nt,
-          |  count_word('the cat the dog', 'the') AS cw,
-          |  dot_f(array(cast(1.0 as float), cast(2.0 as float)),
-          |        array(cast(3.0 as float), cast(4.0 as float))) AS d,
-          |  simhash60('hello world') AS sh,
-          |  size(minhash16('hello world', 3)) AS mh,
-          |  size(winnow_fps('hello world hello world', 5, 4)) AS wf,
-          |  intersect_count(array('a','b','c'), array('b','c','d')) AS ic,
-          |  rep_stats('aa bb aa') AS rs
-          |""".stripMargin).collect()(0)
-      assert(r.getString(0) == "MA*")
-      assert(r.getString(1) == "CCTT")
-      assert(r.getString(2) == "hello world")
-      assert(r.getInt(3) == 2)
-      assert(r.getDouble(4) == 11.0)
-      assert(r.getLong(5) == graft.operators.Dedup.simhashScalar("hello world"))
-      assert(r.getInt(6) == 16 && r.getInt(7) >= 1 && r.getInt(8) == 2)
-      // "aa bb aa": 3 words, 2 distinct, 6 word chars; top bigram covers
-      // 5 chars of 10; the single trigram is unique (0 of 8 duplicated)
-      assert(r.getSeq[Long](9) == Seq(3L, 2L, 6L, 5L, 10L, 0L, 8L))
-    }
+    // the shared session carries the extensions, as every Sessions builder does
+    val spark = TestSpark.spark
+    val r = spark.sql(
+      """SELECT translate_dna('ATGGCCTAA') AS aa,
+        |  reverse_complement('AAGG') AS rc,
+        |  norm_text('  Hello   World ') AS nt,
+        |  count_word('the cat the dog', 'the') AS cw,
+        |  dot_f(array(cast(1.0 as float), cast(2.0 as float)),
+        |        array(cast(3.0 as float), cast(4.0 as float))) AS d,
+        |  simhash60('hello world') AS sh,
+        |  size(minhash16('hello world', 3)) AS mh,
+        |  size(winnow_fps('hello world hello world', 5, 4)) AS wf,
+        |  intersect_count(array('a','b','c'), array('b','c','d')) AS ic,
+        |  rep_stats('aa bb aa') AS rs
+        |""".stripMargin).collect()(0)
+    assert(r.getString(0) == "MA*")
+    assert(r.getString(1) == "CCTT")
+    assert(r.getString(2) == "hello world")
+    assert(r.getInt(3) == 2)
+    assert(r.getDouble(4) == 11.0)
+    assert(r.getLong(5) == graft.operators.Dedup.simhashScalar("hello world"))
+    assert(r.getInt(6) == 16 && r.getInt(7) >= 1 && r.getInt(8) == 2)
+    // "aa bb aa": 3 words, 2 distinct, 6 word chars; top bigram covers
+    // 5 chars of 10; the single trigram is unique (0 of 8 duplicated)
+    assert(r.getSeq[Long](9) == Seq(3L, 2L, 6L, 5L, 10L, 0L, 8L))
   }
 }

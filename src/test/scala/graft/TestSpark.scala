@@ -2,16 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run, built as every
+  * entry point builds its session ([[Sessions.local]]): the same
+  * settings and the same `GraftExtensions` plan rules. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -22,27 +18,5 @@ object TestSpark {
     val old = kv.map { case (k, _) => k -> spark.conf.get(k) }
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally old.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  /** Runs `body` in a sibling session over the shared context with
-    * [[graft.plans.GraftExtensions]] applied (the planner rule and SQL
-    * functions a user session gets), then makes the shared session the
-    * default again. The context is never stopped: the other suites share
-    * it. */
-  def withExtensions[T](body: SparkSession => T): T = {
-    spark // shared context up first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-    try body(b.getOrCreate())
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
   }
 }

@@ -322,100 +322,99 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       ReusedExchangeExec, ShuffleExchangeLike}
     import org.apache.spark.storage.StorageLevel
 
-    TestSpark.withExtensions { spark =>
-      import spark.implicits._
-      val rnd = new scala.util.Random(5)
-      val chrs = Seq("1", "2")
-      val genomeMap = chrs.map(_ -> Seq.fill(4000)("ACGT"(rnd.nextInt(4)))
-        .mkString).toMap
-      // 10 genes per chromosome, 1-2 transcripts each (one non-coding in
-      // five), three exons and both UTRs per transcript
-      val genes = for (c <- chrs; k <- 0 until 10)
-        yield (c.toLong * 100 + k, c, 100L + 350 * k, 400L + 350 * k)
-      val trs = genes.flatMap { case (gid, _, _, _) =>
-        (0 to (gid % 2).toInt).map(j => (gid * 10 + j, gid,
-          if (j == 0) "+" else "-", gid % 5 == 0 && j == 1))
-      }
-      val startOf = genes.map(g => g._1 -> g._3).toMap
-      val feats = trs.flatMap { case (tid, gid, _, _) =>
-        val s = startOf(gid)
-        Seq((tid, "5UTRS", s, s + 10), (tid, "EXONS", s, s + 80),
-          (tid, "EXONS", s + 120, s + 200), (tid, "EXONS", s + 240, s + 300),
-          (tid, "3UTRS", s + 290, s + 300))
-      }
-      def held[T](ds: org.apache.spark.sql.Dataset[T]) = {
-        val h = ds.toDF().persist(StorageLevel.MEMORY_ONLY); h.count(); h
-      }
-      val g = held(genes.toDF("gene_id", "chr", "gstart", "gstop"))
-      val t = held(trs.toDF("tr_id", "gene_id", "strand", "non_coding"))
-      val f = held(feats.toDF("tr_id", "ftype", "fstart", "fstop"))
-      val v = held((1 to 600).map { i =>
-        val c = chrs(i % 2); val p = 1L + rnd.nextInt(3800)
-        (i.toLong, c, p, genomeMap(c).substring(p.toInt - 1, p.toInt), "A")
-      }.toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"))
-
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.put(e.jobId, Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .getOrElse(""))
-      }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      val out = try {
-        sc.setJobGroup("annotate-one-chr", "annotate one chromosome")
-        val ann = TranscriptAnnotator.annotate(
-          v.filter($"chr" === "1"), g.filter($"chr" === "1"), t, f,
-          FixedGenome(genomeMap))
-        val rows = ann.collect()
-        sc.clearJobGroup()
-        ListenerBarrier.await(sc)
-        (rows, ann.queryExecution.executedPlan)
-      } finally sc.removeSparkListener(listener)
-      val (rows, plan) = out
-
-      assert(rows.nonEmpty && rows.forall(_.chr == "1"))
-      assert(rows.exists(_.syn_status.isDefined), "no AA call reached")
-
-      // every node of the plan as it ran, through adaptive wrappers,
-      // query stages and reused exchanges; `into` prunes subtrees
-      def nodes(p: SparkPlan, into: SparkPlan => Boolean): Seq[SparkPlan] = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case s: QueryStageExec => Seq(s.plan)
-          case r: ReusedExchangeExec => Seq(r.child)
-          case _ => p.children
-        }
-        p +: kids.filter(into).flatMap(nodes(_, into))
-      }
-      val all = nodes(plan, _ => true)
-      val featureScans = all.collect {
-        case s: InMemoryTableScanExec
-          if s.relation.output.exists(_.name == "ftype") => s }
-      val finalAggs = all.collect {
-        case a: BaseAggregateExec
-          if a.aggregateExpressions.forall(e => e.mode == Final ||
-            e.mode == Complete) => a }
-      assert(featureScans.length == 1 && finalAggs.length == 1,
-        s"features scanned ${featureScans.length}x, " +
-          s"${finalAggs.length} final aggregates:\n$plan")
-
-      // the stream: everything outside the broadcast subtrees
-      val stream = nodes(plan, {
-        case _: BroadcastQueryStageExec | _: BroadcastExchangeLike => false
-        case _ => true
-      })
-      val streamShuffles = stream.collect {
-        case e: ShuffleExchangeLike => e
-        case s: ShuffleQueryStageExec => s
-      }
-      assert(streamShuffles.isEmpty, s"exchange on the stream side:\n$plan")
-
-      val ours = jobs.asScala.count(_._2 == "annotate-one-chr")
-      assert(ours >= 1 && ours <= 6, s"$ours jobs for one annotate call")
-      Seq(g, t, f, v).foreach(_.unpersist())
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val chrs = Seq("1", "2")
+    val genomeMap = chrs.map(_ -> Seq.fill(4000)("ACGT"(rnd.nextInt(4)))
+      .mkString).toMap
+    // 10 genes per chromosome, 1-2 transcripts each (one non-coding in
+    // five), three exons and both UTRs per transcript
+    val genes = for (c <- chrs; k <- 0 until 10)
+      yield (c.toLong * 100 + k, c, 100L + 350 * k, 400L + 350 * k)
+    val trs = genes.flatMap { case (gid, _, _, _) =>
+      (0 to (gid % 2).toInt).map(j => (gid * 10 + j, gid,
+        if (j == 0) "+" else "-", gid % 5 == 0 && j == 1))
     }
+    val startOf = genes.map(g => g._1 -> g._3).toMap
+    val feats = trs.flatMap { case (tid, gid, _, _) =>
+      val s = startOf(gid)
+      Seq((tid, "5UTRS", s, s + 10), (tid, "EXONS", s, s + 80),
+        (tid, "EXONS", s + 120, s + 200), (tid, "EXONS", s + 240, s + 300),
+        (tid, "3UTRS", s + 290, s + 300))
+    }
+    def held[T](ds: org.apache.spark.sql.Dataset[T]) = {
+      val h = ds.toDF().persist(StorageLevel.MEMORY_ONLY); h.count(); h
+    }
+    val g = held(genes.toDF("gene_id", "chr", "gstart", "gstop"))
+    val t = held(trs.toDF("tr_id", "gene_id", "strand", "non_coding"))
+    val f = held(feats.toDF("tr_id", "ftype", "fstart", "fstop"))
+    val v = held((1 to 600).map { i =>
+      val c = chrs(i % 2); val p = 1L + rnd.nextInt(3800)
+      (i.toLong, c, p, genomeMap(c).substring(p.toInt - 1, p.toInt), "A")
+    }.toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"))
+
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out = try {
+      sc.setJobGroup("annotate-one-chr", "annotate one chromosome")
+      val ann = TranscriptAnnotator.annotate(
+        v.filter($"chr" === "1"), g.filter($"chr" === "1"), t, f,
+        FixedGenome(genomeMap))
+      val rows = ann.collect()
+      sc.clearJobGroup()
+      ListenerBarrier.await(sc)
+      (rows, ann.queryExecution.executedPlan)
+    } finally sc.removeSparkListener(listener)
+    val (rows, plan) = out
+
+    assert(rows.nonEmpty && rows.forall(_.chr == "1"))
+    assert(rows.exists(_.syn_status.isDefined), "no AA call reached")
+
+    // every node of the plan as it ran, through adaptive wrappers,
+    // query stages and reused exchanges; `into` prunes subtrees
+    def nodes(p: SparkPlan, into: SparkPlan => Boolean): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case _ => p.children
+      }
+      p +: kids.filter(into).flatMap(nodes(_, into))
+    }
+    val all = nodes(plan, _ => true)
+    val featureScans = all.collect {
+      case s: InMemoryTableScanExec
+        if s.relation.output.exists(_.name == "ftype") => s }
+    val finalAggs = all.collect {
+      case a: BaseAggregateExec
+        if a.aggregateExpressions.forall(e => e.mode == Final ||
+          e.mode == Complete) => a }
+    assert(featureScans.length == 1 && finalAggs.length == 1,
+      s"features scanned ${featureScans.length}x, " +
+        s"${finalAggs.length} final aggregates:\n$plan")
+
+    // the stream: everything outside the broadcast subtrees
+    val stream = nodes(plan, {
+      case _: BroadcastQueryStageExec | _: BroadcastExchangeLike => false
+      case _ => true
+    })
+    val streamShuffles = stream.collect {
+      case e: ShuffleExchangeLike => e
+      case s: ShuffleQueryStageExec => s
+    }
+    assert(streamShuffles.isEmpty, s"exchange on the stream side:\n$plan")
+
+    val ours = jobs.asScala.count(_._2 == "annotate-one-chr")
+    assert(ours >= 1 && ours <= 6, s"$ours jobs for one annotate call")
+    Seq(g, t, f, v).foreach(_.unpersist())
   }
 
   test("triplet error flagged when CDS length not divisible by 3") {
