@@ -14,18 +14,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape: the position of a data line depends only on its global
   * line index and its governing declaration, so instead of a stateful
-  * scan we (1) index every line (`zipWithIndex` preserves text order),
+  * scan we (1) index every line once ([[graft.sources.LineBlocks.indexed]]),
   * (2) lift the declaration set into [decl_idx, next_decl) blocks,
   * (3) binned-interval-join data lines to their block ([[RangeJoin]] —
   * broadcast when the block table is small, so the data side never
   * shuffles), and (4) compute `pos = start + (idx - decl_idx - 1) * step`
   * as a narrow projection.
   *
-  * Memory/scan tradeoff: only the declaration projection is persisted
-  * (~1 decl per thousands of data lines). The raw input is re-scanned by
-  * the data pass instead of cached — pinning the full text to serve
-  * multiple passes evicts or OOMs at 100 TB, while an extra narrow scan
-  * is cheap and parallel.
+  * The indexed text is checkpointed (disk-backed) for both passes.
   */
 object Conservation {
 
@@ -39,10 +35,10 @@ object Conservation {
                      chunkWidth: Long = 1L << 20): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    // zipWithIndex assigns 0..n-1 in text order, so the index bound is a
-    // plain count — no full-input agg, and no NPE on empty input
-    val maxIdx = lines.count() - 1
-    val idxed = lines.rdd.zipWithIndex().toDF("line", "idx")
+    // indices are 0..n-1 in text order, so the index bound is a plain
+    // count — no full-input agg, and no NPE on empty input
+    val idxed = graft.sources.LineBlocks.indexed(lines)
+    val maxIdx = idxed.count() - 1
 
     val isDecl = col("line").startsWith("fixedStep")
     val decls = idxed.filter(isDecl)

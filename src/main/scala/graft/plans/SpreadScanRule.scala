@@ -2,92 +2,111 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, JoinSelectionHelper}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide, JoinSelectionHelper}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, WriteFiles}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 
-/** Hash-spreads a parquet scan with fewer splits (Σ ceil(fileLen /
-  * maxPartitionBytes)) than `defaultParallelism` when its stage, the path
-  * up to its first exchange, does heavy per-row work: a `Generate`, a
-  * typed lambda, a `ScalaUDF`, a [[graft.functions]] kernel, md5/sha or a
-  * regexp. The exchange sits above the scan's filters and below its first
-  * projection, hashes the pruned columns (a row lands in the same
-  * partition on every attempt) and has a fixed count, so AQE keeps it.
-  *
-  * It leaves alone text, CSV and JSON (line order can be the data),
-  * streams, stages with a nondeterministic expression (`input_file_name()`
-  * reads "" above an exchange; joins do not end the stage for this
-  * check), the build side of a broadcast join (small by definition) and a
-  * relation scanned twice (each scan would shuffle on its own). Its own
-  * exchange ends the scan's stage, so a second pass changes nothing. It
-  * runs pre-CBO, after column pruning has settled.
+/** Hash-spreads a parquet scan that has fewer splits (Σ ceil(fileLen /
+  * maxPartitionBytes)) than `defaultParallelism` but at least AQE's
+  * `coalescePartitions.minPartitionSize` of bytes (AQE would merge the
+  * shuffle of a smaller input back into one task), when its stage does
+  * heavy per-row work: a `Generate`, a typed lambda, a `ScalaUDF`, a
+  * [[graft.functions]] kernel, md5/sha, a regexp, or the partial half of a
+  * dedup, a distinct aggregate or a sort/object aggregate (a string
+  * min/max, `collect_list`). A hash aggregate of fixed-width buffers is
+  * light: spreading it measured slower. The exchange sits above the scan's
+  * filters, below its first projection, hashes the pruned columns (stable
+  * under retries) and has a fixed count, so AQE keeps it. Each use of a
+  * relation is judged on its own; equal uses get equal exchanges, which
+  * ReuseExchange runs once. A broadcast build side is spread only as such
+  * a repeat. It leaves alone text/CSV/JSON (line order can be the data),
+  * streams, and stages with a nondeterministic expression (joins do not
+  * end the stage for this check), a limit, a sample, a partition-local
+  * sort or an operator it does not list. `MapPartitions` counts as
+  * per-row work: `Dataset.flatMap` compiles to it, and a scan's split
+  * layout is no contract in Spark. Idempotent: its exchange ends the
+  * stage. Runs pre-CBO, after column pruning has settled.
   */
 case class SpreadScanRule(spark: SparkSession) extends Rule[LogicalPlan]
     with JoinSelectionHelper {
   import SpreadScanRule._
 
+  /** Pass one spreads free stages; pass two lets a build side repeat one. */
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (plan.isStreaming) plan
     else {
-      val scanned = plan.collectWithSubqueries { case Parquet(_, fs) => fs.location.rootPaths }
-      visit(plan, heavy = false, blocked = false, scanned.diff(scanned.distinct).toSet)
+      val once = visit(plan, heavy = false, Free, Set.empty)
+      val placed = once.collect { case r: RepartitionByExpression => r.canonicalized }.toSet
+      if (placed.isEmpty) once else visit(once, heavy = false, Free, placed)
     }
 
-  /** `heavy`: the stage above `p` does heavy per-row work; `blocked`: it
-    * must not be spread. */
-  private def visit(p: LogicalPlan, heavy: Boolean, blocked: Boolean,
-                    twice: Set[Seq[org.apache.hadoop.fs.Path]]): LogicalPlan = p match {
+  /** `heavy`: the stage above `p` does heavy per-row work; `gate`: whether
+    * it may be spread; `reuse`: the spreads a build side may repeat. */
+  private def visit(p: LogicalPlan, heavy: Boolean, gate: Int,
+                    reuse: Set[LogicalPlan]): LogicalPlan = p match {
     case ScanChain(upper, filtered, r, fs) =>
       val needed = upper.lastOption.fold(r.output)(low => r.output.filter(low.references.contains))
       val par = spark.sparkContext.defaultParallelism
-      if ((heavy || upper.exists(isHeavy)) && !blocked && !(upper :+ filtered).exists(_.exists(isNondet)) &&
-          needed.nonEmpty && !twice(fs.location.rootPaths) && splits(fs) < par) {
+      if ((heavy || upper.exists(isHeavy)) && gate < Blocked &&
+          !(upper :+ filtered).exists(_.exists(isNondet)) && needed.nonEmpty && small(fs, par)) {
         val narrowed = if (needed.size == r.output.size) filtered else Project(needed, filtered)
         val spread: LogicalPlan = RepartitionByExpression(needed, narrowed, Some(par), None)
-        upper.foldRight(spread)((n, child) => n.withNewChildren(Seq(child)))
+        if (gate == Free || reuse.contains(spread.canonicalized))
+          upper.foldRight(spread)((n, child) => n.withNewChildren(Seq(child)))
+        else p
       } else p
     case j: Join =>
-      // a broadcast side (picked as JoinSelection picks it: hints, then
-      // size) is small by definition and its stage ends in the broadcast
-      // collect: a spread would only add a shuffle stage
+      // the build side as JoinSelection picks it: hints, then size
       val build = getBroadcastBuildSide(j, hintOnly = true, conf)
         .orElse(getBroadcastBuildSide(j, hintOnly = false, conf))
-      val b = blocked || isNondet(j)
-      j.withNewChildren(Seq(
-        visit(j.left, heavy = false, b || build.contains(BuildLeft), twice),
-        visit(j.right, heavy = false, b || build.contains(BuildRight), twice)))
+      val g = if (isNondet(j)) Blocked else gate
+      def side(s: LogicalPlan, b: BuildSide) =
+        visit(s, heavy = false, if (build.contains(b)) math.max(g, Build) else g, reuse)
+      j.withNewChildren(Seq(side(j.left, BuildLeft), side(j.right, BuildRight)))
+    case a: Aggregate => // its partial half runs in the child's stage
+      val fns = a.aggregateExpressions.flatMap(_.collect { case e: AggregateExpression => e })
+      // a dedup, a distinct aggregate (Expand copies every row) or a buffer
+      // the hash aggregate cannot hold (a sort or object aggregate)
+      val heavyAgg = fns.isEmpty || fns.exists(_.isDistinct) || !Aggregate.supportsHashAggregate(
+        fns.flatMap(_.aggregateFunction.aggBufferAttributes), a.groupingExpressions)
+      a.mapChildren(visit(_, heavyAgg || isHeavy(a), if (isNondet(a)) Blocked else Free, reuse))
     case _ =>
-      val (h, b) = p match {
-        case _: Project | _: Filter | _: Generate | _: Union | _: Expand | _: LocalLimit |
-             _: Sample | _: SubqueryAlias | _: CollectMetrics | _: DeserializeToObject |
+      val (h, g) = p match {
+        case _: Project | _: Filter | _: Generate | _: Union | _: Expand |
+             _: SubqueryAlias | _: CollectMetrics | _: DeserializeToObject |
              _: SerializeFromObject | _: MapElements | _: MapPartitions | _: TypedFilter |
-             _: AppendColumns | _: AppendColumnsWithObject | Sort(_, false, _, _) =>
-          (heavy || isHeavy(p), blocked || isNondet(p))
-        case _: Aggregate => (isHeavy(p), isNondet(p)) // its partial half runs in-stage
-        case _ => (false, false)
+             _: AppendColumns | _: AppendColumnsWithObject =>
+          (heavy || isHeavy(p), if (isNondet(p)) Blocked else gate)
+        case _: Command | _: WriteFiles => (heavy, gate) // a write runs in its query's stage
+        case _: Window | Sort(_, true, _, _) | _: RepartitionByExpression |
+             Repartition(_, true, _) | _: RebalancePartitions | _: MapGroups | _: CoGroup =>
+          (false, Free) // an exchange below: a new stage starts
+        case _ => (heavy, Blocked) // LocalLimit, Sample, Sort(global = false), unknown
       }
-      p.mapChildren(visit(_, h, b, twice))
+      p.mapChildren(visit(_, h, g, reuse))
   }
 
-  /** The estimated split count; an unlistable location counts as big. */
-  private def splits(fs: HadoopFsRelation): Long = {
-    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    try fs.location.listFiles(Nil, Nil).flatMap(_.files)
-      .map(f => math.max(1L, (f.getLen + maxBytes - 1) / maxBytes)).sum
-    catch { case _: Exception => Long.MaxValue }
+  /** Fewer estimated splits than `par`, yet one AQE minimum partition of
+    * bytes; an unlistable location counts as big. */
+  private def small(fs: HadoopFsRelation, par: Int): Boolean = {
+    val maxBytes = conf.filesMaxPartitionBytes
+    try {
+      val lens = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
+      lens.map(l => math.max(1L, (l + maxBytes - 1) / maxBytes)).sum < par &&
+        lens.sum >= conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    } catch { case _: Exception => false }
   }
 }
 
 object SpreadScanRule {
-  private object Parquet {
-    def unapply(p: LogicalPlan): Option[(LogicalRelation, HadoopFsRelation)] = p match {
-      case r @ LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
-          if fs.fileFormat.isInstanceOf[ParquetFileFormat] => Some((r, fs))
-      case _ => None
-    }
-  }
+  // a stage may be spread freely, only as a repeat (a build side), or not
+  private val Free = 0
+  private val Build = 1
+  private val Blocked = 2
 
   /** A Project/Filter chain over a parquet scan, cut below its lowest
     * Project: the nodes above the cut (top first) and the filtered scan. */
@@ -97,7 +116,8 @@ object SpreadScanRule {
       val chain = Iterator.iterate(p)(_.children.head)
         .takeWhile(n => n.isInstanceOf[Project] || n.isInstanceOf[Filter]).toSeq
       (if (chain.isEmpty) p else chain.last.children.head) match {
-        case Parquet(r, fs) =>
+        case r @ LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
+            if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
           val (upper, lower) = chain.splitAt(chain.lastIndexWhere(_.isInstanceOf[Project]) + 1)
           Some((upper, lower.headOption.getOrElse(r), r, fs))
         case _ => None

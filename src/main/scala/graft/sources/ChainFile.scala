@@ -21,7 +21,7 @@ import graft.operators.RangeJoin
   * dropped, not guessed at).
   *
   * Spark shape — the conservation-parser discipline throughout: index
-  * every line (`zipWithIndex` preserves text order), lift headers into
+  * every line once ([[LineBlocks.indexed]]), lift headers into
   * [decl_idx, next_decl) blocks via the shared two-level lead
   * ([[LineBlocks]]), interval-join data lines to their header
   * ([[RangeJoin]], broadcast when the header table is small), then
@@ -52,8 +52,8 @@ object ChainFile {
              chunkWidth: Long = 1L << 20): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    val maxIdx = lines.count() - 1
-    val idxed = lines.rdd.zipWithIndex().toDF("line", "idx")
+    val idxed = LineBlocks.indexed(lines)
+    val maxIdx = idxed.count() - 1
 
     val isHeader = col("line").startsWith("chain ") ||
       col("line").startsWith("chain\t")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
   *      unpartitioned window.
   */
 object LineBlocks {
+
+  /** Every line with its 0-based position (`line`, `idx`), numbered once
+    * and checkpointed (disk-backed): below a shuffle, partition order can
+    * change between evaluations, so every pass must read one numbering. */
+  def indexed(lines: Dataset[String]): DataFrame = {
+    import lines.sparkSession.implicits._
+    lines.rdd.zipWithIndex().toDF("line", "idx").localCheckpoint()
+  }
 
   /** @param decls  frame carrying a `decl_idx` long column (plus any
     *               payload columns, preserved)

@@ -112,6 +112,51 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  /** Chains built one per row (header, data lines, blank) by an explode,
+    * as liftover_positions builds them, over rows whose order inside a
+    * partition is drawn afresh on every evaluation — the order a shuffle
+    * gives — against the same text parsed in file order. */
+  test("chain: blocks from text whose row order changes per evaluation") {
+    import graft.sources.ChainFile
+    val p = col("id")
+    val chains = spark.range(0, 40, 1, 2).select(p,
+      udf(() => scala.util.Random.nextDouble()).asNondeterministic()().as("r"))
+      .sortWithinPartitions("r")
+      .select(explode(array(
+        concat_ws(" ", lit("chain"), (p + 1).cast("string"), lit("chr1"),
+          lit("100000"), lit("+"), (p * 100).cast("string"),
+          (p * 100 + 30 + p % 7).cast("string"), lit("chrT"), lit("100000"),
+          when(p % 3 === 0, "-").otherwise("+"), (p * 50).cast("string"),
+          (p * 50 + 27 + p % 5).cast("string"), p.cast("string")),
+        concat_ws(" ", (lit(10) + p % 7).cast("string"), lit("5"), (p % 5).cast("string")),
+        lit("15"), lit(""))).as("line")).as[String]
+    def rows(lines: org.apache.spark.sql.Dataset[String]) =
+      ChainFile.blocks(lines).collect().map(_.toSeq).toSet
+    val inOrder = chains.collect().toSeq
+    assert(inOrder.count(_.startsWith("chain ")) == 40)
+    val want = rows(inOrder.toDS())
+    assert(want.size == 80)
+    assert(rows(chains) == want)
+  }
+
+  test("wiggle: blocks from text whose row order changes per evaluation") {
+    val b = col("id")
+    val lines = spark.range(0, 30, 1, 2).select(b,
+      udf(() => scala.util.Random.nextDouble()).asNondeterministic()().as("r"))
+      .sortWithinPartitions("r")
+      .select(explode(array(
+        concat(lit("fixedStep chrom=chr"), (b % 4).cast("string"),
+          lit(" start="), (b * 1000 + 1).cast("string"), lit(" step="),
+          (b % 3 + 1).cast("string")),
+        (b * 10 + 1).cast("string"), (b * 10 + 2).cast("string"))).as("line"))
+      .as[String]
+    def rows(ls: org.apache.spark.sql.Dataset[String]) =
+      Conservation.parseFixedStep(ls).collect().map(_.toSeq).toSet
+    val want = rows(lines.collect().toSeq.toDS())
+    assert(want.size == 60)
+    assert(rows(lines) == want)
+  }
+
   test("wiggle: empty input yields empty output (no NPE)") {
     assert(Conservation.parseFixedStep(spark.emptyDataset[String]).count() == 0)
   }
