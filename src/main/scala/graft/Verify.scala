@@ -9,18 +9,24 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args: run only the named queries (local iteration)
-    val picked = SparkEntry.select(args.drop(2).toSet)
     val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, sfDir, outDir, args.drop(2).toSet)
+    spark.stop()
+  }
+
+  /** Dumps the named queries (every one with no names given) and
+    * oracle_sql.json into `outDir`, on the caller's session. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          names: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
-    picked.foreach { q =>
+    SparkEntry.select(names).foreach { q =>
       dump(spark, s"$outDir/${q.name}", q.name, q.run(spark, sfDir))
       // queries that persist intermediates would otherwise hold their
       // blocks for the remaining ~60 dumps
       spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
-    spark.stop()
   }
 
   /** Writes one query's result to `dir` as a single parquet part. `dir`

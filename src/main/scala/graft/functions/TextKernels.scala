@@ -223,6 +223,13 @@ object TextKernelOps {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       (c >= '0' && c <= '9') || c == '_'
 
+  /** [[countWord]] summed over `words`. */
+  def countWords(s: UTF8String, words: Array[String]): Int = {
+    var n = 0; var i = 0
+    while (i < words.length) { n += countWord(s, words(i)); i += 1 }
+    n
+  }
+
   /** Count non-overlapping occurrences of `word` bounded by \b on both
     * sides — the integer regexp_replace('\bword\b')-length-difference
     * formula computes. */
@@ -264,6 +271,20 @@ case class CountWord(child: Expression, word: String) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.TextKernelOps.countWord($c, $w)")
   }
   override protected def withNewChildInternal(c: Expression): CountWord = copy(child = c)
+}
+
+/** The summed [[CountWord]] counts of several literal words, as one call:
+  * a sum of `count_word` calls grows every projection that references it
+  * by one call per word. */
+case class CountWords(child: Expression, words: Seq[String]) extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+  override protected def nullSafeEval(v: Any): Any =
+    words.map(TextKernelOps.countWord(v.asInstanceOf[UTF8String], _)).sum
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ws = ctx.addReferenceObj("words", words.toArray, "java.lang.String[]")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernelOps.countWords($c, $ws)")
+  }
+  override protected def withNewChildInternal(c: Expression): CountWords = copy(child = c)
 }
 
 /** `simhash60(s)` — 60-bit SimHash of raw text, single-pass codegen. */
@@ -330,6 +351,8 @@ object TextKernels {
     ColumnBridge.column(LangIdK(ColumnBridge.expression(c), model))
   def countWord(c: Column, word: String): Column =
     ColumnBridge.column(CountWord(ColumnBridge.expression(c), word))
+  def countWords(c: Column, words: Seq[String]): Column =
+    ColumnBridge.column(CountWords(ColumnBridge.expression(c), words))
   def simhash60(c: Column): Column =
     ColumnBridge.column(SimHash60(ColumnBridge.expression(c)))
 }

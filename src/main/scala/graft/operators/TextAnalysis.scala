@@ -56,7 +56,7 @@ object TextAnalysis {
     val nChars = element_at(st, 1).cast("int")
     val nTokens = element_at(st, 2).cast("int")
     val punct = element_at(st, 3)
-    val stop = markers("en").map(w => wordHits(t, w)).reduce(_ + _)
+    val stop = graft.functions.TextKernels.countWords(t, markers("en"))
     val punctRatio = when(nChars > 0, punct.cast("double") / nChars).otherwise(0.0)
     val stopRatio = when(nTokens > 0, stop.cast("double") / nTokens).otherwise(0.0)
     val meanTokLen = when(nTokens > 0,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
@@ -16,16 +17,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * the AA change, synonymous status and frameshift.
   *
   * Spark shape vs the reference's: the GeneCache / TranscriptCache
-  * HashMaps → a per-transcript model (exon array, UTR bounds, UTR-trimmed
-  * exons, reference CDS) built once per call in one tr_id-keyed pass and
-  * broadcast; the per-variant cursor loop → one narrow pass over
-  * [[RangeJoin]]'s binned gene containment joined to that model, with no
-  * exchange on the variant stream; chromosome FASTA file reads → a
-  * pluggable [[GenomeSource]] read in the model pass, once per coding
-  * transcript (real deployments back it with the broadcast 2-bit FASTA
-  * genome, [[graft.sources.PackedGenome]]; tests use [[FixedGenome]];
-  * the synthetic default [[Md5Genome]] is deterministic AND reproducible
-  * in SQL, so the full pipeline has a DuckDB oracle).
+  * HashMaps → [[model]], built in one tr_id-keyed pass, collected and
+  * broadcast keyed by (gene_id, chr); the per-variant cursor loop →
+  * [[apply]], [[RangeJoin]]'s gene containment and then one typed pass
+  * computing the flags and the AA call in plain Scala, with no shuffle;
+  * chromosome FASTA file reads → a pluggable [[GenomeSource]] read in the
+  * model pass, once per coding transcript (real deployments back it with
+  * [[graft.sources.PackedGenome]]; tests use [[FixedGenome]]; the
+  * synthetic default [[Md5Genome]] is reproducible in SQL, so the full
+  * pipeline has a DuckDB oracle).
   */
 object TranscriptAnnotator {
 
@@ -83,9 +83,9 @@ object TranscriptAnnotator {
   }
 
   /** One (variant, transcript) pair ready for the AA call. `exons` and
-    * `cds_plus` (the transcript's reference CDS) ride only on rows that
-    * can reach it — exonic rows of coding transcripts — and are empty /
-    * None on every other row. */
+    * `cds_plus` (the transcript's reference CDS) ride only on pairs that
+    * can reach it — exonic pairs of coding transcripts — and are empty /
+    * None on every other pair. */
   case class VarTr(
       var_id: Long, chr: String, pos: Long, var_stop: Long,
       ref_nuc: String, var_nuc: String,
@@ -93,6 +93,20 @@ object TranscriptAnnotator {
       in_exon: Boolean, in_u3: Boolean, in_u5: Boolean, near_splice: Boolean,
       exons: Seq[ExonIv], cds_plus: Option[String])
   case class ExonIv(start: Long, stop: Long)
+
+  /** One transcript of the model. A missing bound fails every comparison,
+    * as SQL's null does: start Long.MaxValue, stop Long.MinValue. */
+  private[operators] case class Tr(gene_id: String, chr: String,
+      tr_id: Long, strand: String, non_coding: Boolean,
+      ex_start: Array[Long], ex_stop: Array[Long],
+      u3s: Long, u3e: Long, u5s: Long, u5e: Long,
+      trimmed: Seq[ExonIv], cds_plus: Option[String])
+  private[operators] case class VarGene(var_id: Long, chr: String,
+      pos: Long, ref_nuc: String, var_nuc: String, gene_id: String)
+
+  /** Built by [[model]]: the gene ranges and their broadcast transcripts. */
+  final class Model private[operators] (private[operators] val genes: DataFrame,
+      private[operators] val byGene: Broadcast[Map[(String, String), Array[Tr]]])
 
   /** Output row — the VARIANT_TRANSCRIPT analog (natural variant key
     * carried through so results are joinable/verifiable without var_id).
@@ -116,19 +130,10 @@ object TranscriptAnnotator {
   private def normSeq(s: String): String =
     if (s == null || s == "-") "" else s
 
-  /** endPos semantics from VariantLoad3.java:299-315: snv/mnv → pos+1,
-    * insertion (empty ref) → pos, deletion (empty var) → pos+len(ref). */
-  private def varStopCol(pos: Column, refNuc: Column, varNuc: Column): Column = {
-    val refLen = when(refNuc.isNull || refNuc === "" || refNuc === "-", lit(0L))
-      .otherwise(length(refNuc).cast("long"))
-    val varLen = when(varNuc.isNull || varNuc === "" || varNuc === "-", lit(0L))
-      .otherwise(length(varNuc).cast("long"))
-    when(refLen > 0 && varLen > 0, pos + 1)
-      .when(refLen === 0, pos)
-      .otherwise(pos + refLen)
-  }
-
-  /** @param variants    var_id, chr, pos, ref_nuc, var_nuc ('' or '-' for
+  /** [[apply]] over a fresh [[model]], which is built eagerly: its Spark
+    * jobs run before this returns.
+    *
+    * @param variants    var_id, chr, pos, ref_nuc, var_nuc ('' or '-' for
     *                    the empty side of an ins/del)
     * @param genes       gene_id, chr, gstart, gstop
     * @param transcripts tr_id, gene_id, strand ('+'/'-'), non_coding
@@ -136,78 +141,63 @@ object TranscriptAnnotator {
     */
   def annotate(variants: DataFrame, genes: DataFrame, transcripts: DataFrame,
                features: DataFrame, genome: GenomeSource,
-               binWidth: Long = 1 << 20): Dataset[Annotated] = {
+               binWidth: Long = 1 << 20): Dataset[Annotated] =
+    apply(variants, model(genes, transcripts, features, genome), binWidth)
+
+  /** Variant ∈ gene range through [[RangeJoin]] (gene side broadcast),
+    * then one typed flatMap over the model: one row per (variant, gene
+    * row, transcript). Null keys match nothing: RangeJoin passes no null
+    * chr, and the model holds no null gene_id (an inner join built it). */
+  def apply(variants: DataFrame, model: Model,
+            binWidth: Long = 1 << 20): Dataset[Annotated] = {
     val spark = variants.sparkSession
     import spark.implicits._
-
-    // variant ∈ gene range (binned equi-join). RangeJoin emits each
-    // (variant, gene row) pair exactly once (the point side maps to a
-    // single bin) and the model is one row per (gene_id, chr, tr_id), so
-    // the stream below is unique per (variant, gene row, transcript) and
-    // needs no aggregation
-    val vg = RangeJoin.joined(
-      variants.select(col("var_id"), col("chr"), col("pos"),
-        col("ref_nuc"), col("var_nuc"),
-        varStopCol(col("pos"), col("ref_nuc"), col("var_nuc")).as("var_stop")),
-      genes.select("gene_id", "chr", "gstart", "gstop"),
-      "pos", "gstart", "gstop", keys = Seq("chr"), binWidth = binWidth)
-
-    // per-row flags against the variant [pos, var_stop] — codegen array
-    // predicates over the transcript's exon array
-    val pos = col("pos"); val varStop = col("var_stop")
-    val inExon = coalesce(exists(col("ex"),
-        e => e.getField("fstart") <= pos && e.getField("fstop") >= varStop),
-      lit(false))
-    val nEx = size(col("ex"))
-    val nearSplice = coalesce(exists(transform(col("ex"), (e, i) =>
-        (i =!= 0 &&
-          e.getField("fstart") - 10 <= pos &&
-          e.getField("fstart") + 10 >= varStop) ||
-        (i =!= nEx - 1 &&
-          e.getField("fstop") - 10 <= pos &&
-          e.getField("fstop") + 10 >= varStop)),
-      b => b), lit(false))
-    val inU3 = coalesce(col("u3s") <= pos && col("u3e") >= varStop,
-      lit(false))
-    val inU5 = coalesce(col("u5s") <= pos && col("u5e") >= varStop,
-      lit(false))
-    // only exonic rows of coding transcripts reach the AA call; every
-    // other row leaves the CDS and exon payload behind
-    val coding = inExon && !col("non_coding")
-
-    vg.join(broadcast(transcriptModel(genes, transcripts, features, genome)),
-        Seq("gene_id", "chr"))
-      .select(
-        col("var_id"), col("chr"), col("pos"), col("var_stop"),
-        col("ref_nuc"), col("var_nuc"), col("tr_id"), col("strand"),
-        col("non_coding"),
-        inExon.as("in_exon"), inU3.as("in_u3"), inU5.as("in_u5"),
-        nearSplice.as("near_splice"),
-        when(coding, col("trimmed"))
-          .otherwise(typedLit(Seq.empty[ExonIv])).as("exons"),
-        when(coding, col("cds_plus")).as("cds_plus"))
-      .as[VarTr].map(annotateOne)
+    val byGene = model.byGene
+    RangeJoin.joined(variants.select("var_id", "chr", "pos", "ref_nuc", "var_nuc"),
+        model.genes, "pos", "gstart", "gstop", keys = Seq("chr"),
+        binWidth = binWidth)
+      .select(col("var_id"), col("chr").cast("string").as("chr"), col("pos"),
+        col("ref_nuc"), col("var_nuc"), col("gene_id").cast("string").as("gene_id"))
+      .as[VarGene]
+      .flatMap(v => byGene.value.getOrElse((v.gene_id, v.chr), Array.empty[Tr])
+        .iterator.map(t => annotateOne(pair(v, t))))
   }
 
-  /** The variant-independent side: one row per (gene_id, chr, tr_id) of
-    * the genes passed in — strand, non_coding, the fstart-sorted exon
-    * array `ex`, the UTR bounds `u3s/u3e/u5s/u5e`, the UTR-trimmed exons
-    * `trimmed` and, for coding transcripts with a non-empty trimmed list,
-    * the plus-strand reference CDS `cds_plus`.
-    *
-    * Transcript rows (carrying their gene's chromosome) and feature rows
-    * meet in ONE tr_id-hashed exchange; the aggregation, the trimming and
-    * the per-base genome reads all run in the stage after it, so each
-    * transcript's CDS is read once and the result is broadcast once. A
-    * transcript listed under several genes (GFF3 `Parent=a,b`) yields
-    * one row per gene, a gene_id listed on two chromosomes one row per
-    * chromosome (each CDS read from its own); identical duplicate
-    * transcript or gene rows collapse.
-    */
-  private def transcriptModel(genes: DataFrame, transcripts: DataFrame,
-                              features: DataFrame,
-                              genome: GenomeSource): DataFrame = {
+  /** The pair, flagged against [pos, var_stop] (endPos, VariantLoad3.java:
+    * 299-315: snv/mnv pos+1, insertion pos, deletion pos+len(ref)): in an
+    * exon, within 10 bp of an inner splice site, in a UTR. */
+  private def pair(v: VarGene, t: Tr): VarTr = {
+    val (refLen, varLen) = (normSeq(v.ref_nuc).length, normSeq(v.var_nuc).length)
+    val (pos, n) = (v.pos, t.ex_start.length)
+    val stop = if (refLen > 0 && varLen > 0) pos + 1 else pos + refLen
+    var inExon = false; var nearSplice = false; var i = 0
+    while (i < n) {
+      val (s, e) = (t.ex_start(i), t.ex_stop(i))
+      inExon ||= s <= pos && e >= stop
+      nearSplice ||= (i != 0 && s - 10 <= pos && s + 10 >= stop) ||
+        (i != n - 1 && e - 10 <= pos && e + 10 >= stop)
+      i += 1
+    }
+    val coding = inExon && !t.non_coding
+    VarTr(v.var_id, v.chr, pos, stop, v.ref_nuc, v.var_nuc, t.tr_id,
+      t.strand, t.non_coding, inExon, t.u3s <= pos && t.u3e >= stop,
+      t.u5s <= pos && t.u5e >= stop, nearSplice,
+      if (coding) t.trimmed else Nil, if (coding) t.cds_plus else None)
+  }
+
+  /** The variant-independent side, built EAGERLY: per (gene_id, chr,
+    * tr_id) of the genes passed in, the sorted exon and UTR bounds, the
+    * UTR-trimmed exons and, if coding, the plus-strand CDS. Transcript
+    * rows and feature rows meet in ONE tr_id-hashed exchange; the stage
+    * after it reads each CDS once, on the executors. The result is
+    * collected (as a broadcast join of it would be) and broadcast once. A
+    * transcript under several genes (GFF3 `Parent=a,b`) yields one entry
+    * per gene, a gene_id on two chromosomes one per chromosome (each CDS
+    * read from its own); identical duplicate rows collapse. */
+  def model(genes: DataFrame, transcripts: DataFrame, features: DataFrame,
+            genome: GenomeSource): Model = {
     val spark = genes.sparkSession
+    import spark.implicits._
     val txRows = transcripts
       .join(broadcast(genes.select("gene_id", "chr")), "gene_id")
       .select(col("tr_id"), struct(col("gene_id"), col("chr"),
@@ -237,19 +227,28 @@ object TranscriptAnnotator {
     val cds = udf((chr: String, ex: Seq[Row]) =>
       ex.map(e => g.chunk(chr, e.getLong(0), e.getLong(1))).mkString
         .toLowerCase)
+    def or(c: Column, absent: Long) = coalesce(c, lit(absent))
     // explode drops tr_ids with features but no transcript under the
     // genes passed in; a transcript with no EXONS features keeps its row
     // with an empty `ex` (the reference emits an INTRON VARIANT_TRANSCRIPT
     // for it — processChromosome "not found means INTRON")
-    perTr.withColumn("tx", explode(col("txs")))
+    val trs = perTr.withColumn("tx", explode(col("txs")))
       .select(col("tx.*"), col("tr_id"), col("ex"),
         col("u3s"), col("u3e"), col("u5s"), col("u5e"))
       .withColumn("trimmed", trimmedOf(col("ex")))
-      .withColumn("cds_plus", when(!col("non_coding") &&
-        size(col("trimmed")) > 0,
-        cds(col("chr").cast("string"), col("trimmed"))))
+      .select(col("gene_id").cast("string").as("gene_id"),
+        col("chr").cast("string").as("chr"), col("tr_id").cast("long").as("tr_id"),
+        col("strand"), col("non_coding"),
+        transform(col("ex"), e => or(e("fstart"), Long.MaxValue)).as("ex_start"),
+        transform(col("ex"), e => or(e("fstop"), Long.MinValue)).as("ex_stop"),
+        or(col("u3s"), Long.MaxValue).as("u3s"), or(col("u3e"), Long.MinValue).as("u3e"),
+        or(col("u5s"), Long.MaxValue).as("u5s"), or(col("u5e"), Long.MinValue).as("u5e"),
+        col("trimmed"), when(!col("non_coding") && size(col("trimmed")) > 0,
+          cds(col("chr").cast("string"), col("trimmed"))).as("cds_plus"))
+      .as[Tr].collect()
+    new Model(genes.select("gene_id", "chr", "gstart", "gstop"),
+      spark.sparkContext.broadcast(trs.groupBy(t => (t.gene_id, t.chr))))
   }
-
   /** handleUTRs (VariantPostProcessing.java:626-668): trim each exon of
     * `ex` against the 3'UTR tail and 5'UTR head (columns u3s/u5e, or
     * u5s/u3e on the '-' strand, where the UTRs swap roles —

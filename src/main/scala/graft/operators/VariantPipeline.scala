@@ -12,9 +12,12 @@ import graft.functions.{Par, VariantF, Zygosity}
   * → transcript annotation.
   *
   * Every stage is the already-tested operator; this wires them with the
-  * reference's column semantics. All stages stay declarative, so Catalyst
-  * plans the whole flow end-to-end (scan-to-sink pushdown, shared
-  * shuffles); nothing materializes on the driver.
+  * reference's column semantics. The load stages stay declarative, so
+  * Catalyst plans them end-to-end (scan-to-sink pushdown, shared
+  * shuffles) and nothing of them materializes on the driver. `annotated`
+  * is the exception: [[TranscriptAnnotator.annotate]] builds its
+  * transcript model eagerly, so `run` executes that model's query and
+  * broadcasts the result before it returns.
   */
 object VariantPipeline {
 
@@ -28,14 +31,6 @@ object VariantPipeline {
       /** VARIANT_TRANSCRIPT analog from the annotator */
       annotated: Dataset[TranscriptAnnotator.Annotated])
 
-  /** @param lines      VCF text lines
-    * @param strains    sample columns of the VCF header
-    * @param genders    strain → "M"/"F" (reference reads it off SAMPLE)
-    * @param existing   already-loaded variants with natural key + variant_id
-    * @param genes/transcripts/features gene models (see TranscriptAnnotator)
-    * @param genome     reference sequence access
-    * @param parRegions pseudo-autosomal regions for zygosity
-    */
   /** The VariantLoad3 scoring stage over common-format rows: typing,
     * end-pos, quality, dbSnp class, the zygosity column family. All
     * narrow column expressions — stateless, so the same call works on a
@@ -91,6 +86,14 @@ object VariantPipeline {
       .filter((isSnv && varReads > 0) || (!isSnv && col("allele_depth") > 0))
   }
 
+  /** @param lines      VCF text lines
+    * @param strains    sample columns of the VCF header
+    * @param genders    strain → "M"/"F" (reference reads it off SAMPLE)
+    * @param existing   already-loaded variants with natural key + variant_id
+    * @param genes/transcripts/features gene models (see TranscriptAnnotator)
+    * @param genome     reference sequence access
+    * @param parRegions pseudo-autosomal regions for zygosity
+    */
   def run(lines: Dataset[String], strains: Seq[String],
           genders: Map[String, String],
           existing: DataFrame,

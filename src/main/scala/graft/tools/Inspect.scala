@@ -2,10 +2,10 @@ package graft.tools
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 
-import graft.{Bench, ListenerBarrier, Sessions, SparkEntry}
+import graft.{Bench, ListenerBarrier, QueryCapture, Sessions, SparkEntry}
 import graft.graded.GradedQuery
 
 /** Looks inside named graded queries (every one with no names given).
@@ -15,7 +15,10 @@ import graft.graded.GradedQuery
   *
   * `plan`: the plan you ship should be the plan you wanted — broadcasts
   * on dim sides, pushed filters, no unpartitioned windows, whole-stage
-  * codegen over the hot path. Per query it prints
+  * codegen over the hot path. Per query, for each query run or turned
+  * into an RDD while the frame was built (a collected model, a
+  * checkpointed input, TopK's ranked input) and then for the returned
+  * frame, it prints
   *  - the formatted plan: numbered operators, Exchange placement, join
   *    strategy + build side, PushedFilters / ReadSchema at every scan;
   *  - the executed plan with its `*(n)` whole-stage-codegen markers — an
@@ -58,7 +61,17 @@ object Inspect {
     picked.foreach { case GradedQuery(name, fn, _) =>
       println(s"\n========== $name ==========")
       try {
-        val qe = fn(spark, sfDir).queryExecution
+        // queries run or turned into an RDD while the frame was built
+        // (a collected model, a checkpointed input, TopK's ranked input)
+        // come first; their plans are final
+        val (df, eager) = QueryCapture.during(spark)(fn(spark, sfDir))
+        eager.zipWithIndex.foreach { case ((action, qe), i) =>
+          println(s"-- eager query ${i + 1} of ${eager.size} ($action), " +
+            "reported while the frame was built")
+          show(qe)
+        }
+        if (eager.nonEmpty) println("-- the returned frame")
+        val qe = df.queryExecution
         // run the query first: with AQE the plan (and its codegen
         // subtrees) is only final after execution — inspecting the
         // unexecuted AdaptiveSparkPlan reports 0 subtrees for everything.
@@ -66,26 +79,31 @@ object Inspect {
         // plan and leave this one unfinalized), but via its RDD so no
         // result rows land in the driver heap.
         qe.toRdd.foreach(_ => ())
-        println(qe.explainString(FormattedMode))
-        // executedPlan.toString carries the `*(id)` codegen markers that
-        // the formatted view drops — interpreted stages have no star
-        println(qe.executedPlan.toString)
-        val subtrees = codegenStringSeq(qe.executedPlan)
-        println(s"-- codegen: ${subtrees.size} whole-stage subtree(s)")
-        subtrees.zipWithIndex.foreach { case ((tree, _, stats), i) =>
-          val head = tree.linesIterator.take(1).mkString
-          println(s"   subtree ${i + 1}: $head | " +
-            s"maxMethod ${stats.maxMethodCodeSize}B, " +
-            s"constPool ${stats.maxConstPoolSize}, " +
-            s"innerClasses ${stats.numInnerClasses}")
-        }
-        if (subtrees.isEmpty)
-          println("   (NO whole-stage codegen subtrees — fully interpreted)")
+        show(qe)
       } catch {
         case e: Throwable => println(s"[inspect] $name failed: ${e.getMessage}")
       }
       spark.catalog.clearCache()
     }
+
+  /** The formatted plan, the executed plan and its codegen summary. */
+  private def show(qe: QueryExecution): Unit = {
+    println(qe.explainString(FormattedMode))
+    // executedPlan.toString carries the `*(id)` codegen markers that
+    // the formatted view drops — interpreted stages have no star
+    println(qe.executedPlan.toString)
+    val subtrees = codegenStringSeq(qe.executedPlan)
+    println(s"-- codegen: ${subtrees.size} whole-stage subtree(s)")
+    subtrees.zipWithIndex.foreach { case ((tree, _, stats), i) =>
+      val head = tree.linesIterator.take(1).mkString
+      println(s"   subtree ${i + 1}: $head | " +
+        s"maxMethod ${stats.maxMethodCodeSize}B, " +
+        s"constPool ${stats.maxConstPoolSize}, " +
+        s"innerClasses ${stats.numInnerClasses}")
+    }
+    if (subtrees.isEmpty)
+      println("   (NO whole-stage codegen subtrees — fully interpreted)")
+  }
 
   /** Jobs started and stages completed since the last reset, and the
     * job group of each stage's job. The listener barrier's marker jobs

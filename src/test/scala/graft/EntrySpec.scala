@@ -26,23 +26,26 @@ object PlanFacts {
     * unexecuted adaptive plan is one leaf node that reports zero codegen
     * subtrees and hides every operator below it, so each detector would
     * pass blind. With AQE off the plan and its codegen are final without
-    * running any data. */
+    * running any data. The facts cover every query run or turned into an
+    * RDD while the frame was built (a collected model, a checkpointed
+    * input, TopK's ranked input) as well as the frame's own plan. */
   def audit(build: => DataFrame): (DataFrame, PlanFacts) =
     TestSpark.withConf("spark.sql.adaptive.enabled" -> "false") {
-      val df = build
-      val optimized = df.queryExecution.optimizedPlan
-      val executed = df.queryExecution.executedPlan
+      val (df, eager) = QueryCapture.during(TestSpark.spark)(build)
+      val plans = eager.map(_._2) :+ df.queryExecution
+      val optimized = plans.map(_.optimizedPlan)
+      val executed = plans.map(_.executedPlan)
       df -> PlanFacts(
-        cartesian = executed.exists(_.isInstanceOf[CartesianProductExec]),
-        maxMethodCodeSize = (0 +: codegenStringSeq(executed)
+        cartesian = executed.exists(_.exists(_.isInstanceOf[CartesianProductExec])),
+        maxMethodCodeSize = (0 +: executed.flatMap(codegenStringSeq(_))
           .map(_._3.maxMethodCodeSize)).max,
-        globalWindow = optimized.exists {
+        globalWindow = optimized.exists(_.exists {
           case w: Window => w.partitionSpec.isEmpty
           case _ => false
-        },
-        hofs = optimized.flatMap(_.expressions.flatMap(_.collect {
+        }),
+        hofs = optimized.flatMap(_.flatMap(_.expressions.flatMap(_.collect {
           case h: HigherOrderFunction => h.prettyName
-        })).distinct.sorted)
+        }))).distinct.sorted)
     }
 }
 
@@ -98,9 +101,15 @@ class EntrySpec extends AnyFunSuite {
     "text_collocations" -> "transform over per-document bigram array (≤ text length ~102)",
     "vcf_merge_multisample" -> "sort/transform over per-site sample list (bounded by strain count)",
     "vocab_growth" -> "transform over the driver-scale checkpoint frame (the documented bounded window frame)",
-    "q24_annotate_variants" -> "exists/transform/filter/array_sort over the per-transcript exon array (bounded by exons-per-transcript, ≤3 here, ~tens in a real gene model)",
-    "q32_verify_aa" -> "same per-transcript exon array as q24 (shared derivation)",
-    "variant_dnds" -> "same per-transcript exon array as q24 (shared derivation)")
+    "q24_annotate_variants" -> "transform/filter/array_sort over the per-transcript exon array in the eagerly collected annotator model (bounded by exons-per-transcript, ≤3 here, ~tens in a real gene model; one row per transcript, not per variant — the apply plan has none)",
+    "q32_verify_aa" -> "same annotator model query as q24 (shared derivation)",
+    "variant_dnds" -> "same annotator model query as q24 (shared derivation)",
+    "bpe_merge_step" -> "transform over a distinct word's character positions (≤ word length), in the sorted input TopK.ranked turns into an RDD to number ranks (the returned plan shows only the RDD scan)",
+    "events_top_paths" -> "array_sort/transform over each user's first 3 events (rn ≤ 3), in the sorted input TopK.ranked turns into an RDD to number ranks (the returned plan shows only the RDD scan)",
+    "text_bigram_ppl" -> "transform over per-document word positions (≤ text length ~102), in the checkpointed bigram frame",
+    "text_jm_ppl" -> "transform over per-document word positions (≤ text length ~102), in the checkpointed bigram frame",
+    "text_kn_ppl" -> "transform over per-document word positions (≤ text length ~102), in the checkpointed bigram frame",
+    "text_textrank" -> "transform over per-document word positions (≤ text length ~102), in its checkpointed inputs")
 
   private val facts = scala.collection.mutable.Map[String, PlanFacts]()
 
@@ -164,6 +173,34 @@ class EntrySpec extends AnyFunSuite {
       s"stale HOF whitelist entries: ${hofWhitelist.keySet -- offenders.keySet}")
   }
 
+  // oracle parity inside `sbt test`: dump the queries as graft.Verify
+  // does, then grade the dump with tools/compare.py, which runs each
+  // oracle in DuckDB and compares columns, rows and values exactly
+  test("oracle parity: the annotator queries match DuckDB at sf0.001") {
+    val names = Seq("q24_annotate_variants", "q32_verify_aa", "variant_dnds")
+    val canRun =
+      try new ProcessBuilder("python3", "-c", "import duckdb").start().waitFor() == 0
+      catch { case _: Exception => false }
+    assume(canRun && new java.io.File(dir).isDirectory,
+      "python3+duckdb or testdata unavailable here")
+    val out = java.nio.file.Files.createTempDirectory("graft_parity")
+    try {
+      Verify.run(spark, dir, out.toString, names.toSet)
+      val pb = new ProcessBuilder(
+        (Seq("python3", "tools/compare.py", dir, out.toString) ++ names): _*)
+      pb.redirectErrorStream(true)
+      val proc = pb.start()
+      val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+      assert(proc.waitFor() == 0 && names.forall(n => log.contains(s"OK   $n ")),
+        s"oracle parity failed:\n$log")
+    } finally {
+      val walk = java.nio.file.Files.walk(out)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
+      finally walk.close()
+    }
+  }
+
   // each detector on hand-made plans, so a blinded one cannot pass the
   // sweep silently. The repartitions put an exchange in the plan, which
   // is what makes AQE wrap it. Every DataFrame is built fresh, as plans
@@ -181,6 +218,9 @@ class EntrySpec extends AnyFunSuite {
     def arr = array(col("id"), lit(1L))
     assert(of(spark.range(3).select(transform(arr, _ + 1))).hofs == Seq("transform"))
     assert(of(spark.range(3).select(size(arr))).hofs.isEmpty)
+    // a query that runs while the frame is built is audited too
+    assert(of { spark.range(3).select(transform(arr, _ + 1)).collect()
+      spark.range(3).toDF() }.hofs == Seq("transform"))
     // nonzero: an unexecuted adaptive plan would report no subtrees
     val method = of(spark.range(10).repartition(2).selectExpr("id * 2 AS x"))
       .maxMethodCodeSize

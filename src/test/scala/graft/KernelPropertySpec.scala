@@ -140,6 +140,12 @@ class KernelPropertySpec extends AnyFunSuite {
       val removed = s.replaceAll(s"\\b$w\\b", "")
       k == (s.length - removed.length) / w.length
     }))
+    // the several-word form is the sum of the one-word counts
+    val ws = Array("the", "and", "der", "a")
+    assert(holds(Prop.forAll(textGen) { s =>
+      val u = UTF8String.fromString(s)
+      TextKernelOps.countWords(u, ws) == ws.map(TextKernelOps.countWord(u, _)).sum
+    }))
   }
 
   test("shingles are distinct, length-n substrings") {

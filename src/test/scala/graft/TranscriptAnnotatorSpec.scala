@@ -313,13 +313,14 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     "exchange, at most 6 jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-      BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+      QueryStageExec, ShuffleQueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
-      ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeLike}
+    import org.apache.spark.sql.types.ArrayType
     import org.apache.spark.storage.StorageLevel
 
     val spark = TestSpark.spark
@@ -354,10 +355,12 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       (i.toLong, c, p, genomeMap(c).substring(p.toInt - 1, p.toInt), "A")
     }.toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"))
 
+    // the listener barrier's marker jobs (QueryCapture waits on them)
+    // are not the annotator's
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.put(e.jobId, Option(e.properties)
+        if (!ListenerBarrier.isMarker(e)) jobs.put(e.jobId, Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .getOrElse(""))
     }
@@ -365,56 +368,97 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     val out = try {
       sc.setJobGroup("annotate-one-chr", "annotate one chromosome")
-      val ann = TranscriptAnnotator.annotate(
+      // the model is built eagerly inside annotate: its query is the one
+      // that runs while the Dataset is built
+      val (ann, eager) = QueryCapture.during(spark)(TranscriptAnnotator.annotate(
         v.filter($"chr" === "1"), g.filter($"chr" === "1"), t, f,
-        FixedGenome(genomeMap))
+        FixedGenome(genomeMap)))
       val rows = ann.collect()
       sc.clearJobGroup()
       ListenerBarrier.await(sc)
-      (rows, ann.queryExecution.executedPlan)
+      (rows, eager, ann.queryExecution.executedPlan)
     } finally sc.removeSparkListener(listener)
-    val (rows, plan) = out
+    val (rows, eager, applyPlan) = out
 
     assert(rows.nonEmpty && rows.forall(_.chr == "1"))
     assert(rows.exists(_.syn_status.isDefined), "no AA call reached")
 
-    // every node of the plan as it ran, through adaptive wrappers,
-    // query stages and reused exchanges; `into` prunes subtrees
-    def nodes(p: SparkPlan, into: SparkPlan => Boolean): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case _ => p.children
-      }
-      p +: kids.filter(into).flatMap(nodes(_, into))
-    }
-    val all = nodes(plan, _ => true)
-    val featureScans = all.collect {
+    // every node of a plan as it ran, through adaptive wrappers, query
+    // stages and reused exchanges
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }).flatMap(nodes)
+
+    assert(eager.map(_._1) == Seq("collect"),
+      s"queries run while building: ${eager.map(_._1)}")
+    val model = nodes(eager.head._2.executedPlan)
+    val featureScans = model.collect {
       case s: InMemoryTableScanExec
         if s.relation.output.exists(_.name == "ftype") => s }
-    val finalAggs = all.collect {
+    val finalAggs = model.collect {
       case a: BaseAggregateExec
         if a.aggregateExpressions.forall(e => e.mode == Final ||
           e.mode == Complete) => a }
     assert(featureScans.length == 1 && finalAggs.length == 1,
       s"features scanned ${featureScans.length}x, " +
-        s"${finalAggs.length} final aggregates:\n$plan")
+        s"${finalAggs.length} final aggregates:\n${eager.head._2.executedPlan}")
 
-    // the stream: everything outside the broadcast subtrees
-    val stream = nodes(plan, {
-      case _: BroadcastQueryStageExec | _: BroadcastExchangeLike => false
-      case _ => true
-    })
-    val streamShuffles = stream.collect {
+    // the apply plan: no shuffle anywhere (the gene ranges arrive by
+    // broadcast), and no exon array deserialized per row
+    val apply = nodes(applyPlan)
+    val shuffles = apply.collect {
       case e: ShuffleExchangeLike => e
       case s: ShuffleQueryStageExec => s
     }
-    assert(streamShuffles.isEmpty, s"exchange on the stream side:\n$plan")
+    assert(shuffles.isEmpty, s"exchange in the apply plan:\n$applyPlan")
+    val arrays = apply.collect { case d: DeserializeToObjectExec =>
+      d.child.output.filter(_.dataType.isInstanceOf[ArrayType]) }.flatten
+    assert(arrays.isEmpty, s"arrays deserialized per row: $arrays\n$applyPlan")
 
     val ours = jobs.asScala.count(_._2 == "annotate-one-chr")
     assert(ours >= 1 && ours <= 6, s"$ours jobs for one annotate call")
     Seq(g, t, f, v).foreach(_.unpersist())
+  }
+
+  test("one model applied to two variant frames equals annotate on each") {
+    val g = Seq((1L, "1", 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop")
+    val t = Seq((10L, 1L, "+", false), (11L, 1L, "-", false), (12L, 1L, "+", true))
+      .toDF("tr_id", "gene_id", "strand", "non_coding")
+    val f = Seq((10L, "EXONS", 1L, 6L), (10L, "EXONS", 10L, 18L),
+      (11L, "EXONS", 1L, 9L), (11L, "5UTRS", 7L, 9L), (12L, "EXONS", 1L, 9L))
+      .toDF("tr_id", "ftype", "fstart", "fstop")
+    val frames = Seq(
+      Seq((1L, "1", 5L, "C", "T"), (2L, "1", 11L, "G", "A"), (3L, "1", 8L, "A", "")),
+      Seq((4L, "1", 6L, "C", "A"), (5L, "1", 4L, "GCC", "-"), (6L, "1", 5L, "", "G")))
+      .map(_.toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"))
+    val model = TranscriptAnnotator.model(g, t, f, genome)
+    def sorted(a: Array[Annotated]) = a.toSeq.sortBy(x => (x.var_id, x.tr_id))
+    for (vs <- frames) {
+      val shared = sorted(TranscriptAnnotator.apply(vs, model, binWidth = 8).collect())
+      val fresh = sorted(TranscriptAnnotator.annotate(vs, g, t, f, genome, binWidth = 8).collect())
+      assert(shared.length == 9 && shared == fresh, s"$shared\n$fresh")
+    }
+  }
+
+  test("null gene_id or chr never matches") {
+    // the old (gene_id, chr) inner join matched no null key; a variant
+    // with no chr and a gene row with no gene_id or chr produce nothing
+    val out = TranscriptAnnotator.annotate(
+        Seq((1L, Some("1"), 5L, "C", "T"), (2L, None, 5L, "C", "T"))
+          .toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"),
+        Seq((Some(1L), Some("1"), 1L, 18L), (None, Some("1"), 1L, 18L),
+          (Some(1L), None, 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop"),
+        Seq((10L, Some(1L), "+", false), (11L, None, "+", false))
+          .toDF("tr_id", "gene_id", "strand", "non_coding"),
+        Seq((10L, "EXONS", 1L, 9L), (11L, "EXONS", 1L, 9L))
+          .toDF("tr_id", "ftype", "fstart", "fstop"),
+        genome, binWidth = 8)
+      .collect()
+    assert(out.map(a => (a.var_id, a.tr_id)).toSeq == Seq((1L, 10L)),
+      out.mkString("\n"))
   }
 
   test("triplet error flagged when CDS length not divisible by 3") {
