@@ -12,12 +12,9 @@ object Bench {
     (paths.lastOption, names.toSet)
   }
 
-  /** Quiet-box floor for [[sentinelOnce]] (seconds, local[32], measured
-    * best-of-3 on an idle machine). A contended machine inflates the
-    * sentinel the same way it inflates every query, so
-    * sentinel > 2x floor marks the whole run's timings untrustworthy —
-    * BENCH_r06.json shipped 55x phantom regressions precisely because
-    * nothing in the artifact recorded the machine state. */
+  /** Quiet-box floor for [[sentinelOnce]] (seconds, local[32], best-of-3
+    * on an idle machine). A contended machine inflates the sentinel as it
+    * inflates every query, so the artifact records the machine state. */
   val SentinelFloorSec = 0.15
 
   /** Fixed data-independent CPU-bound probe: same work every run, so its
@@ -48,12 +45,30 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** The contamination decision, pure so a spec can drive it directly
-    * (a synthetic slow mid-sentinel must flip it — the whole point of
-    * the probes is that a poisoned run self-identifies in the
-    * artifact). Strict on purpose: BENCH_r07 carried sentinel 1.35x
-    * floor at loadavg 5.62 yet stamped clean, and 11 sub-second
-    * queries read >2x their floors from box load alone. Signals:
+  /** Busy cores between two `/proc/stat` snapshots: the busy share
+    * (user + nice + system + irq + softirq) of the `cpu` line's elapsed
+    * ticks times the count of `cpuN` lines. Steal is elapsed, not busy:
+    * the sentinel feels it. -1 without a reading. */
+  def busyCores(before: String, after: String): Double = {
+    def ticks(stat: String) = stat.linesIterator.find(_.startsWith("cpu "))
+      .map(_.trim.split("\\s+").slice(1, 9).map(_.toLong)).filter(_.length == 8)
+    val cores = after.linesIterator.count(_.matches("cpu\\d+ .*"))
+    (for (b <- ticks(before); a <- ticks(after)) yield {
+      val d = a.zip(b).map { case (x, y) => x - y }
+      if (d.sum > 0) (d(0) + d(1) + d(2) + d(5) + d(6)).toDouble / d.sum * cores
+      else -1.0
+    }).getOrElse(-1.0)
+  }
+
+  private def procStat(): String =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/stat")), "UTF-8")
+    catch { case _: Throwable => "" }
+
+  /** The contamination decision, pure so a spec can drive it: a
+    * poisoned run must identify itself in its artifact. Strict on
+    * purpose, since box load alone pushes sub-second queries >2x their
+    * floors. Signals:
     *  - pre/post sentinel over 1.25x its quiet floor;
     *  - a mid-run SPIKE: >3x the run's own mid-median (mid probes run
     *    in post-query heap/JIT state and read 0.26-0.49 s even on a
@@ -61,32 +76,26 @@ object Bench {
     *    would false-positive every run) or an extreme absolute sample
     *    >8x the idle floor — the level a concurrent 32-thread job
     *    produces;
-    *  - pre-existing load above cpus/8 before our executors started
-    *    (was cpus/4: the r11 close run read loadavg 5.24 on 32 cores —
-    *    under the old gate — while distorting four sub-second queries
-    *    >2x their floors; 5.24/32 cores of background work is plenty to
-    *    poison 0.1-0.5 s timings even though the 32-thread sentinel
-    *    barely feels it. The judge's quiet box reads 0.0-1.3.)
+    *  - more than cpus/8 cores busy in the second before the session
+    *    starts (cpus/4 let a 32-core run at loadavg 5.24 push four
+    *    sub-second queries >2x their floors; the 1-min loadavg itself
+    *    kept the previous run's JVM in it and stamped every 4-core run).
     */
   def contaminatedFlag(sentinelSec: Double, midSentinels: Seq[Double],
-      loadPre: Double, cpus: Int): Boolean = {
+      busyPre: Double, cpus: Int): Boolean = {
     val midMax = if (midSentinels.isEmpty) 0.0 else midSentinels.max
     val midMedian = if (midSentinels.isEmpty) 0.0
       else midSentinels.sorted.apply(midSentinels.size / 2)
     sentinelSec > 1.25 * SentinelFloorSec ||
       (midSentinels.nonEmpty && (midMax > 3.0 * midMedian ||
         midMax > 8.0 * SentinelFloorSec)) ||
-      (loadPre >= 0 && loadPre > cpus / 8.0)
+      (busyPre >= 0 && busyPre > cpus / 8.0)
   }
 
   /** Per-table row counts of the benched dataset — the artifact's data
-    * fingerprint. The driver regenerates /root/testdata each round, so
-    * a BASELINE.md floor is only meaningful against the volume it was
-    * measured at; r10 adjudicated four >2x "regressions" that were
-    * byte-identical code against bigger data. Floors are recorded as
-    * (fingerprint, seconds) pairs; a mismatched fingerprint means
-    * re-floor, not regression. Parquet row counts come from footer
-    * metadata, so this is cheap even at large sf. */
+    * fingerprint: a BASELINE.md floor only holds at the volume it was
+    * measured at, so a mismatched fingerprint means re-floor, not
+    * regression. Parquet footers make it cheap at any sf. */
   def fingerprint(spark: SparkSession, sfDir: String): Seq[(String, Long)] =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").flatMap { t =>
@@ -99,8 +108,12 @@ object Bench {
     val picked = SparkEntry.select(only)
     val sfDir = pathArg.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    // outside load, read before our own executors start contributing
+    // outside load, read before our own executors start contributing;
+    // the loadavg stays in the artifact as a diagnostic only
     val loadPre = loadAvg1()
+    val stat0 = procStat()
+    Thread.sleep(1000)
+    val busyPre = busyCores(stat0, procStat())
     // session config comes from the ONE shared library builder
     // (Sessions.local) — the bench harness carries no tuning of its own
     val spark = Sessions.local().getOrCreate()
@@ -119,10 +132,8 @@ object Bench {
       // best-of-3 would report a mostly-cached time
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      // a throwing query must NOT time at all — the r8 events-family
-      // breakage benchmarked as 14 sub-0.1 s "wins", and even
-      // elapsed-to-throw contaminates the total (ADVICE r9); a failure
-      // surfaces ONLY through the errors array
+      // a throwing query is not timed at all (a broken query would
+      // read as a fast one); it surfaces only in the errors array
       try { runWhole(fn(spark, sfDir))
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
@@ -132,28 +143,18 @@ object Bench {
           None
       }
     }
-    // best of three runs per query: the first pays Janino compilation of
-    // that query's generated code, and one extra repeat absorbs transient
-    // machine load (observed run-to-run variance up to ~4x on small
-    // queries under contention)
-    // The r9 run shipped 16 >2x-floor flags that were almost certainly
-    // one mid-run load burst — invisible to a pre/post-only sentinel.
-    // Probe every ~20 queries so a burst lands in the artifact next to
-    // the band of queries it poisoned, and stamp each query with the
-    // 1-min loadavg at its start (diagnostic only: our own executors
-    // drive loadavg up, so it doesn't feed the contamination flag).
+    // best of three runs per query: the first pays Janino compilation,
+    // a repeat absorbs transient load. A mid-run sentinel every ~20
+    // queries puts a load burst in the artifact next to the queries it
+    // poisoned; each query's start loadavg is a diagnostic only (our
+    // own executors drive it up).
     val midSentinels = scala.collection.mutable.ArrayBuffer[Double]()
     val loadPerQuery =
       scala.collection.mutable.LinkedHashMap[String, Double]()
     var sinceProbe = 0
-    // One UNTIMED warmup pass of the first query before anything is
-    // recorded: the alphabetically-first band otherwise absorbs the
-    // whole run's cold costs (classloading, parquet footer cache, first
-    // codegen) — three separate r10/r11 close runs flagged the ann_
-    // block at 2.4-3.4x floors only to re-measure warm at 1.3-1.6x.
-    // Best-of-3 cannot fix it because all three runs of query #1 are
-    // cold-ish; paying one extra query up front makes the artifact's
-    // first band comparable to the rest.
+    // one untimed pass of the first query: otherwise the alphabetically
+    // first band absorbs the run's cold costs (classloading, footer
+    // cache, first codegen), which best-of-3 cannot hide
     picked.headOption.foreach { q =>
       spark.catalog.clearCache()
       try runWhole(q.run(spark, sfDir)) // same action path timeOnce drives
@@ -169,55 +170,40 @@ object Bench {
         // any throw disqualifies the query's number entirely
         if (times.size == 3) Some(name -> times.min) else None
       }.toMap
-    // failed queries ship as explicit nulls (ADVICE r10): a consumer
-    // diffing `queries` across runs sees the hole instead of a silently
-    // shrunken map, and `value` totals are flagged non-comparable by
-    // the same nulls plus the errors array
+    // failed queries ship as explicit nulls, so a diff across runs sees
+    // the hole rather than a silently shrunken map
     val qs = (results.map { case (k, v) => s"\"" + k + "\":" + v } ++
       failed.map(n => "\"" + n + "\":null"))
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     def fmt(v: Double): String =
       "%.4f".formatLocal(java.util.Locale.ROOT, v)
-    // the probe is JIT-sensitive (fresh ~0.18-0.24 s, hot ~0.09-0.18 s
-    // on a QUIET box) so a single post sample is a loose floor
-    // estimator; min over three hot samples tightens it below the
-    // 1.25x threshold whenever the box genuinely is quiet
+    // the probe is JIT-sensitive (fresh ~0.2 s, hot ~0.1 s on a quiet
+    // box): the min of three hot samples is the floor estimate
     val sentinel = math.min(sentinelPre,
       Seq.fill(3)(sentinelOnce(spark)).min)
     val contaminated = contaminatedFlag(sentinel, midSentinels.toSeq,
-      loadPre, Runtime.getRuntime.availableProcessors)
+      busyPre, Runtime.getRuntime.availableProcessors)
     def arr(xs: Seq[Double]): String =
       xs.map(fmt).mkString("[", ",", "]")
     val fp = fingerprint(spark, sfDir)
       .map { case (t, n) => s"\"" + t + "\":" + n }
       .mkString("{", ",", "}")
-    // A filtered run must never overwrite the full-suite artifact: the
-    // r11 close artifact was clobbered TWICE by adjudication re-runs of
-    // a few flagged queries (VERDICT r11 item 3). The filter set is
-    // stamped into both the artifact body and the filename, so full and
-    // filtered artifacts coexist and a consumer can tell which is which.
+    // the filter set is stamped into the artifact body and its filename,
+    // so a filtered run never overwrites the full-suite artifact
     val filterJson = if (only.isEmpty) "\"full\""
       else only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val outFile = artifactFile(only)
-    val meta = s""""sf":"$sfDir","filter":$filterJson,"fingerprint":$fp,"loadavg_pre":$loadPre,"sentinel_sec":$sentinel,"sentinel_floor_sec":$SentinelFloorSec,"sentinel_mid":${arr(midSentinels.toSeq)},"contaminated":$contaminated,"errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-    // Full per-query map to a file: the driver records only the LAST
-    // 2000 chars of this run's output, and 140 queries at full double
-    // precision are ~4.5 KB — every BENCH_r{1..8}.json shipped with
-    // parsed:null because the one JSON line never fit the capture
-    // window (ADVICE r8). The file carries the complete map; stdout
-    // carries a compact line that provably fits.
+    val meta = s""""sf":"$sfDir","filter":$filterJson,"fingerprint":$fp,"loadavg_pre":$loadPre,"busy_cores_pre":${fmt(busyPre)},"sentinel_sec":$sentinel,"sentinel_floor_sec":$SentinelFloorSec,"sentinel_mid":${arr(midSentinels.toSeq)},"contaminated":$contaminated,"errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+    // the complete per-query map goes to a file; stdout carries a
+    // compact line that fits a 2000-char output tail
     val loadQs = loadPerQuery.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"loadavg_per_query":$loadQs,$meta}""".getBytes("UTF-8"))
-    // Compact final line: slowest queries first (the ones perf grading
-    // cares about), 4 dp each, cut off at a byte budget that leaves
-    // room for the sbt epilogue inside the 2000-char tail window.
-    // budget shrunk 1400→1150 when the ~230-char fingerprint joined the
-    // meta: line total must stay under the 2000-char capture window
-    // with room for the sbt epilogue
+    // compact final line: slowest queries first, 4 dp each, cut at a
+    // budget that leaves the meta and sbt's epilogue room in 2000 chars
     val entryBudget = 1150
     val sb = new StringBuilder
     var kept = 0

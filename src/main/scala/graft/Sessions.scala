@@ -8,8 +8,9 @@ import graft.plans.GraftExtensions
   * point (Bench, Verify, Manager, graft.tools.*, the tests), so a setting
   * or plan rule cannot live only in one harness.
   *
-  *  - [[GraftExtensions]]: the SQL functions and plan rules, so every
-  *    session plans the graded queries as a user session does.
+  *  - [[GraftExtensions]]: the SQL functions and the scan-spreading plan
+  *    rule, so every session plans the graded queries as a user session
+  *    does.
   *  - `coalescePartitions.minPartitionSize = 256k` (default 1m), so AQE
   *    does not coalesce a small shuffle onto a few cores under heavy work;
   *    it only binds below ~1 MB of shuffle per core, never at 100 TB.

@@ -27,11 +27,8 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
-  /** Name of the derived bin column on both join sides. The planner rule
-    * [[graft.plans.RangeBinJoinRule]] bins under the same name and leaves
-    * a join alone when either side already carries it, so a join built
-    * here is binned once. */
-  val BinCol = "__graft_bin"
+  /** Name of the derived bin column on both join sides. */
+  private val BinCol = "__graft_bin"
 
   /** Re-project every column through an alias, minting fresh attribute
     * IDs. When both join sides derive from the SAME base frame (a self
@@ -43,6 +40,12 @@ object RangeJoin {
     * optimizer; plan cost is zero. */
   private def freshAttrs(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
+
+  /** `df` with one row per `w`-wide bin its `[start, stop]` overlaps. */
+  private def exploded(df: DataFrame, start: String, stop: String,
+                       w: Column): DataFrame =
+    df.withColumn(BinCol, explode(sequence(floor(col(start) / w).cast("long"),
+      floor(col(stop) / w).cast("long"))))
 
   /** Join `points` (with point column `pos`) to `intervals` (with
     * inclusive `start`/`stop` columns) on containment, equi-keyed by
@@ -60,10 +63,7 @@ object RangeJoin {
       keys: Seq[String] = Nil,
       binWidth: Long = 1000000L): DataFrame = {
     val w = lit(binWidth)
-    val ivBinned = freshAttrs(intervals).withColumn(
-      BinCol,
-      explode(sequence(floor(col(start) / w).cast("long"),
-                       floor(col(stop) / w).cast("long"))))
+    val ivBinned = exploded(freshAttrs(intervals), start, stop, w)
     val ptBinned = points.withColumn(BinCol, floor(col(pos) / w).cast("long"))
     val joinCond = (keys :+ BinCol)
       .map(k => ptBinned(k) === ivBinned(k))
@@ -95,12 +95,8 @@ object RangeJoin {
       keys: Seq[String] = Nil,
       binWidth: Long = 1000000L): DataFrame = {
     val w = lit(binWidth)
-    val aB = a.withColumn(BinCol,
-      explode(sequence(floor(col(startA) / w).cast("long"),
-        floor(col(stopA) / w).cast("long"))))
-    val bB = freshAttrs(b).withColumn(BinCol,
-      explode(sequence(floor(col(startB) / w).cast("long"),
-        floor(col(stopB) / w).cast("long"))))
+    val aB = exploded(a, startA, stopA, w)
+    val bB = exploded(freshAttrs(b), startB, stopB, w)
     val joinCond = (keys :+ BinCol)
       .map(k => aB(k) === bB(k)).reduce(_ && _) &&
       aB(startA) <= bB(stopB) && bB(startB) <= aB(stopA) &&

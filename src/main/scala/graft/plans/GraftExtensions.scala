@@ -9,10 +9,12 @@ import graft.functions.{CharShingles, CountWord, DotProductF, IntersectCount,
   MinHash16, NormText, RepStats, ReverseComplement, SimHash60, TranslateDna,
   WinnowFps}
 
-/** graft's plan rules ([[RangeBinJoinRule]], [[SpreadScanRule]]) and SQL
-  * functions (`spark.sql("SELECT translate_dna(...)")`). [[graft.Sessions]]
+/** graft's one plan rule ([[SpreadScanRule]]) and its SQL functions
+  * (`spark.sql("SELECT translate_dna(...)")`). [[graft.Sessions]]
   * installs them; other sessions use `.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * or `spark.sql.extensions=graft.plans.GraftExtensions`. A binned range
+  * join is an explicit [[graft.operators.RangeJoin]] call, which takes
+  * the bin width its caller knows. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def str(e: Expression): String = e match {
@@ -54,7 +56,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   )
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(session => RangeBinJoinRule(session))
     e.injectPreCBORule(session => SpreadScanRule(session))
     functions.foreach { case (name, usage, build) =>
       e.injectFunction((FunctionIdentifier(name),

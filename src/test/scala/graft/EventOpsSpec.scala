@@ -142,6 +142,16 @@ class EventOpsSpec extends AnyFunSuite {
     val row = EventOps.funnelCounts(ev, "user_id", "event_type", col("ts"),
       Seq("signup", "view", "purchase"), maxGap = 1000L).head()
     assert((row.getLong(0), row.getLong(1), row.getLong(2)) == (3L, 2L, 1L))
+
+    // event_funnel's scale, µs and a 4-hour window: a view exactly at
+    // t1 + gap counts, a purchase at t2 + gap + 1 does not
+    val (t1, gap) = (1700000000000000L, 14400L * 1000000L)
+    val real = Seq((5L, "signup", t1), (5L, "view", t1 + gap),
+      (5L, "purchase", t1 + 2 * gap + 1)).toDF("user_id", "event_type", "ts")
+    val atScale = EventOps.funnelCounts(real, "user_id", "event_type",
+      col("ts"), Seq("signup", "view", "purchase"), maxGap = gap).head()
+    assert((atScale.getLong(0), atScale.getLong(1), atScale.getLong(2)) ==
+      (1L, 1L, 0L))
   }
 
   test("funnel with unbounded gap admits any later event") {

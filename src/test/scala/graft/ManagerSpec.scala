@@ -420,6 +420,23 @@ class ManagerSpec extends AnyFunSuite {
     assert(!Bench.contaminatedFlag(0.0581607, r11QuietMids, 1.27, 32))
   }
 
+  test("Bench busy cores: literal /proc/stat lines, a quiet 4-core box") {
+    val cpus = (0 to 3).map(i => s"\ncpu$i 0 0 0 0 0 0 0 0 0 0").mkString
+    // 400 ticks: user 60 + nice 10 + system 20 + softirq 10 busy; idle
+    // 250, iowait 10 and steal 40 not: a quarter of 4 cores
+    assert(Bench.busyCores("cpu  1000 0 200 5000 10 0 50 30 0 0" + cpus,
+      "cpu  1060 10 220 5250 20 0 60 70 0 0" + cpus) == 1.0)
+    assert(Bench.busyCores("", cpus) == -1.0)
+    // a quiet second, 6 busy ticks of 400: clean, where the 0.6 loadavg
+    // a previous run leaves behind is over the 4-core gate of 0.5
+    val quiet = Bench.busyCores(
+      "cpu  8233029 0 404454 20084781 3075 0 174951 234971 0 0" + cpus,
+      "cpu  8233033 0 404456 20085173 3075 0 174951 234973 0 0" + cpus)
+    assert(math.abs(quiet - 0.06) < 1e-9)
+    assert(!Bench.contaminatedFlag(0.06, Nil, quiet, 4))
+    assert(Bench.contaminatedFlag(0.06, Nil, 0.6, 4))
+  }
+
   test("Bench artifacts: filtered runs get their own collision-safe file") {
     // VERDICT r11 item 3: a filtered adjudication run overwrote the
     // full-suite BENCH_FULL.json twice. The artifact name is a pure

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run, built as every
   * entry point builds its session ([[Sessions.local]]): the same
-  * settings and the same `GraftExtensions` plan rules. */
+  * settings, SQL functions and `SpreadScanRule` plan rule
+  * (`GraftExtensions`). */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = Sessions.local("4").appName("graft-test").getOrCreate()
