@@ -27,12 +27,6 @@ class RangeJoinSpec extends AnyFunSuite {
       .select($"p.chr", $"p.pos", $"i.iv_id").as[(String, Long, Long)].collect().sorted
 
     assert(binned.nonEmpty && binned.toSeq == naive.toSeq)
-    // chrB:5 lies in an interval only on chrA: the key keeps it out
-    val keyed = RangeJoin.joined(Seq(("chrA", 5L), ("chrA", 70L), ("chrB", 5L))
-        .toDF("chr", "pos"), Seq(("chrA", 7L, 1L, 100L), ("chrB", 8L, 50L, 60L))
-        .toDF("chr", "iv_id", "start", "stop"), "pos", "start", "stop", Seq("chr"), 32)
-      .select("chr", "pos", "iv_id").as[(String, Long, Long)].collect().sorted
-    assert(keyed.toSeq == Seq(("chrA", 5L, 7L), ("chrA", 70L, 7L)))
   }
 }
 
