@@ -25,12 +25,7 @@ private[graft] object ReadQueries {
       // field split AND the CIGAR walk's op classification. Header and
       // unmapped lines are synthesized too (every 13th/11th) to
       // exercise the gate.
-      graft.sources.Sam.alignments(samSynthLines(s, dir))
-        .groupBy("chr").agg(count(lit(1)).as("n_reads"),
-          sum("ref_span").as("sum_ref_span"),
-          sum("n_aligned").as("sum_aligned"),
-          sum("n_clipped").as("sum_clipped"),
-          max("end_pos").as("max_end"))
+      graft.sources.Sam.alignmentStats(samSynthLines(s, dir))
     },
     // every span re-derived ARITHMETICALLY from the synthesis
     // numbers — the comparison proves the SAM field split and the

@@ -120,24 +120,31 @@ object Curation {
       explode(graft.functions.Shingles
         .wordGrams(normText(col(textCol)), n)).as("gram"))
 
-  /** Benchmark decontamination: training documents sharing ≥1 word
-    * `n`-gram with any benchmark document (the standard test-set-overlap
-    * filter run before LLM training, e.g. GPT-3 appendix C — public).
-    *
-    * The benchmark gram set is distinct'd and broadcast (benchmarks are
-    * tiny next to a training corpus); training grams therefore never
-    * shuffle — the contamination count is a map-side join + partial
-    * aggregation. Output: (id, n_shared) for contaminated docs only.
-    */
-  def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
-                    textCol: String, n: Int = 4): DataFrame = {
+  /** Contamination hits: one (gram, id) row per training document and
+    * distinct word `n`-gram it shares with any benchmark document. The
+    * benchmark gram set is distinct'd and broadcast (benchmarks are tiny
+    * next to a training corpus), so training grams never shuffle, and on
+    * a streaming `train` the join keeps no state. A stream consumes these
+    * rows, not [[decontaminate]]'s per-doc count: a streaming
+    * `groupBy(id)` never evicts, since doc ids are unbounded. */
+  def decontaminationHits(train: DataFrame, bench: DataFrame, idCol: String,
+                          textCol: String, n: Int = 4): DataFrame = {
     val benchGrams = broadcast(
       wordGrams(bench, idCol, textCol, n).select("gram").distinct())
-    wordGrams(train, idCol, textCol, n)
-      .join(benchGrams, "gram")
+    wordGrams(train, idCol, textCol, n).join(benchGrams, "gram")
+  }
+
+  /** Benchmark decontamination: training documents sharing ≥1 word
+    * `n`-gram with any benchmark document (the standard test-set-overlap
+    * filter run before LLM training, e.g. GPT-3 appendix C — public):
+    * [[decontaminationHits]] counted per document, map-side partial
+    * aggregation first. Output: (id, n_shared) for contaminated docs.
+    */
+  def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
+                    textCol: String, n: Int = 4): DataFrame =
+    decontaminationHits(train, bench, idCol, textCol, n)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared"))
-  }
 
   /** Fuzzy benchmark decontamination: training documents that are
     * NEAR-duplicates of a benchmark document — caught by sharing a

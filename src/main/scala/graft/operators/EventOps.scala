@@ -275,7 +275,8 @@ object EventOps {
     * in the array world — `sequence(first_day, last_day)` mapped
     * through a day→count map built from the collected series — so it
     * is codegen'd per group with no extra shuffle, and the oracle and
-    * the streaming twin (StreamHoltWinters) run the identical
+    * the streaming twin ([[graft.streaming.StreamHoltWinters]], a
+    * [[graft.streaming.KeyedFold]] over day counts) run the identical
     * zero-filled fold. `n_days` is now the CALENDAR span (= observed
     * count on gap-free series, so graded outputs are unchanged).
     *

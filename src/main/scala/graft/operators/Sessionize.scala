@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * One shuffle on the user key; session assignment is a lag + running sum
   * inside each partition — the standard scalable shape (no driver state,
   * no per-user collect). The streaming twin lives in
-  * [[graft.streaming.StatefulSessions]] (flatMapGroupsWithState).
+  * [[graft.streaming.StatefulSessions]] (flatMapGroupsWithState); it
+  * drops a row that arrives more than the gap before its open session.
   */
 object Sessionize {
 

@@ -85,12 +85,27 @@ object Sam {
 
   /** One row per mapped, well-formed alignment:
     * (qname, flag, chr, pos, mapq, cigar, ref_span, n_aligned,
-    * n_clipped, end_pos). */
+    * n_clipped, end_pos). The parse is stateless, so the same call runs
+    * on a streaming `Dataset[String]`: quarantine included, no state
+    * store. */
   def alignments(lines: Dataset[String]): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
     lines.mapPartitions(_.flatMap(parseAlignment)).toDF()
   }
+
+  /** Per-chromosome alignment census over [[alignments]]: (chr,
+    * n_reads, sum_ref_span, sum_aligned, sum_clipped, max_end). Over a
+    * stream it is a running aggregate whose state is one row per
+    * chromosome (bounded by the karyotype, not the read volume), so
+    * complete or update output needs no watermark. */
+  def alignmentStats(lines: Dataset[String]): DataFrame =
+    alignments(lines)
+      .groupBy("chr").agg(count(lit(1)).as("n_reads"),
+        sum("ref_span").as("sum_ref_span"),
+        sum("n_aligned").as("sum_aligned"),
+        sum("n_clipped").as("sum_clipped"),
+        max("end_pos").as("max_end"))
 
   /** Alignment row with the MATE fields (SAMv1 columns 7–9): RNEXT,
     * PNEXT, TLEN — the template/insert-size surface [[SamRow]] omits. */

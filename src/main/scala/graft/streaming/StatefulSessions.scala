@@ -31,7 +31,12 @@ object StatefulSessions {
     * state with a `gapSec` processing-time timeout — when it fires (no
     * events arrived within the gap) the session is emitted and the state
     * evicted. Events inside one trigger are sorted locally (bounded by
-    * the trigger's data, not the stream). */
+    * the trigger's data, not the stream). A row that arrives a trigger
+    * late, older than the open session's end, widens the session when
+    * it lies no more than `gapSec` before its start, as the batch
+    * [[graft.operators.Sessionize]] would place it; a row further back
+    * is dropped as watermark-late (the [[StreamGaps]] contract), since
+    * the session it belongs to may already be emitted. */
   private[graft] def update(gapSec: Long)(
       userId: Long, it: Iterator[Event],
       state: GroupState[SessionState]): Iterator[ClosedSession] = {
@@ -47,6 +52,9 @@ object StatefulSessions {
     val closed = Seq.newBuilder[ClosedSession]
     sorted.foreach { e =>
       cur match {
+        case Some(s) if e.ts_sec < s.end =>
+          if (e.ts_sec >= s.start - gapSec)
+            cur = Some(SessionState(math.min(s.start, e.ts_sec), s.end, s.n + 1))
         case Some(s) if e.ts_sec - s.end <= gapSec =>
           cur = Some(SessionState(s.start, e.ts_sec, s.n + 1))
         case Some(s) =>

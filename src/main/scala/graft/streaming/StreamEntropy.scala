@@ -1,31 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.EventOps.dailyEntropy]]: the
-  * per-day class-balance audit over an unbounded event stream via
-  * `flatMapGroupsWithState`, state per day = the type→count map —
-  * bounded at |event types| however long the day runs (the 100 TB-safe
-  * shape; the type universe is small and fixed, the event stream is
-  * not).
-  *
-  * Each trigger folds its events into the day's counts and emits the
-  * UPDATED entropy row, so the latest row per day is the running audit
-  * (append-mode emission, last-write-wins semantics downstream — the
-  * StreamAnomaly family convention). The entropy arithmetic mirrors
-  * the batch operator's su4 discipline term for term: log₂p rounded
-  * 4 dp ONCE (HALF_UP on the decimal string, Spark `round`
-  * semantics), each term ×10⁴-scaled to an exact long, summed in
-  * integer space — so a day's final streaming row is bit-identical to
-  * the batch operator on the same events regardless of trigger chop.
-  *
-  * State is bounded per DAY but days accumulate: a production
-  * deployment evicts closed days via an event-time timeout against
-  * the stream's watermark (the q20-sessionize eviction pattern —
-  * state then holds only the watermark-open days). This twin keeps
-  * `NoTimeout` so the spec can replay without a timestamp column; the
-  * entropy fold itself is eviction-agnostic.
+  * per-day class-balance audit as a [[KeyedFold]] whose state per day
+  * is the type→count map, bounded by the small, fixed set of event
+  * types. The arithmetic mirrors the batch operator's term for term:
+  * log₂p rounded to 4 dp once (HALF_UP, Spark `round` semantics), each
+  * term ×10⁴-scaled to an exact long and summed in integer space, so a
+  * day's latest row is bit-identical to the batch operator. Days
+  * accumulate in state; this twin keeps `NoTimeout` so the spec can
+  * replay without a timestamp column.
   */
 object StreamEntropy {
 
@@ -35,22 +20,11 @@ object StreamEntropy {
 
   def entropy(ev: Dataset[Ev])(implicit spark: SparkSession): Dataset[DayEntropy] = {
     import spark.implicits._
-    ev.groupByKey(_.day)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    update.over(ev)(_.day)
   }
 
-  /** Fold one trigger's events into the day's counts, emit the updated
-    * audit row. Exposed for TestGroupState specs. */
-  private[graft] def update(day: Long, it: Iterator[Ev],
-      state: GroupState[Map[String, Long]]): Iterator[DayEntropy] = {
-    var counts = state.getOption.getOrElse(Map.empty[String, Long])
-    it.foreach { e =>
-      counts = counts.updated(e.eventType,
-        counts.getOrElse(e.eventType, 0L) + 1L)
-    }
-    if (counts.isEmpty) return Iterator.empty // timeout-less empty call
-    state.update(counts)
+  private[graft] val update = KeyedFold(Map.empty[String, Long])(
+      KeyedFold.countBy((e: Ev) => e.eventType) _) { (day: Long, counts) =>
     val n = counts.values.sum
     // term-by-term mirror of the batch column chain:
     // round(p * round(log2(p), 4) * -10000) summed as longs
@@ -61,6 +35,6 @@ object StreamEntropy {
       BigDecimal(p * l4 * -10000.0)
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     }.sum
-    Iterator.single(DayEntropy(day, n, counts.size.toLong, entropy4))
+    DayEntropy(day, n, counts.size.toLong, entropy4)
   }
 }

@@ -1,28 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.EventOps.burstiness]]'s gap
-  * moments: per (type, user) running inter-event-gap statistics over an
-  * unbounded stream via `flatMapGroupsWithState` — state per key is
-  * FOUR LONGS (last timestamp + count + two moment sums), bounded
-  * however long the stream runs (the 100 TB-safe shape: keys are the
-  * type×user domain, state per key is constant).
+  * moments: per (type, user), a [[KeyedFold]] whose state is FOUR
+  * LONGS (last timestamp, count, two moment sums). Gaps are the batch
+  * operator's exact integer minutes (mod-subtract-then-divide, no float
+  * division) summed in longs, so a key's latest row is bit-identical to
+  * the batch lag-window moments; the moments are order-free sums, so
+  * the per-type burstiness rollup over them commutes with streaming.
   *
-  * Gaps are the same exact integer minutes as the batch operator
-  * (mod-subtract-then-divide — no float division), accumulated in exact
-  * longs, so a key's final streaming row is bit-identical to the batch
-  * lag-window moments on the same events regardless of trigger chop
-  * (spec: 3-trigger chop == one batch). The per-TYPE burstiness rollup
-  * is then one bounded agg over the emitted key moments — moments are
-  * order-free sums, so the rollup commutes with streaming.
-  *
-  * Ordering contract: events for a key must arrive in event-time order
-  * ACROSS triggers (within a trigger this fold sorts); a row older than
-  * the key's last seen timestamp is dropped as watermark-late, mirroring
-  * what an event-time watermark would have done upstream — counted
-  * nowhere, exactly like Structured Streaming's late-row semantics.
+  * Ordering contract: a key's events must arrive in event-time order
+  * ACROSS triggers (within a trigger the fold sorts). A row older than
+  * the key's last timestamp is dropped as watermark-late and counted
+  * nowhere, as an upstream event-time watermark would have done.
   */
 object StreamGaps {
 
@@ -35,28 +26,20 @@ object StreamGaps {
 
   def moments(ev: Dataset[Ev])(implicit spark: SparkSession): Dataset[KeyMoments] = {
     import spark.implicits._
-    ev.groupByKey(e => (e.etype, e.user))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    update.over(ev)(e => (e.etype, e.user))
   }
 
-  /** Fold one trigger's events into the key's gap moments, emit the
-    * updated row. Exposed for TestGroupState-style specs. */
-  private[graft] def update(key: (String, Long), it: Iterator[Ev],
-      state: GroupState[GapState]): Iterator[KeyMoments] = {
-    val incoming = it.map(_.us).toArray.sorted
-    if (incoming.isEmpty) return Iterator.empty
-    var st = state.getOption.getOrElse(
-      GapState(Long.MinValue, 0L, 0L, 0L))
-    incoming.foreach { us =>
-      if (st.lastUs == Long.MinValue) st = st.copy(lastUs = us)
-      else if (us >= st.lastUs) { // older rows drop as watermark-late
-        val d = us - st.lastUs
-        val gap = (d - d % MinUs) / MinUs
-        st = GapState(us, st.n + 1, st.s1 + gap, st.s2 + gap * gap)
-      }
-    }
-    state.update(st)
-    Iterator.single(KeyMoments(key._1, key._2, st.n, st.s1, st.s2))
+  private[graft] val update = KeyedFold(GapState(Long.MinValue, 0L, 0L, 0L))(
+    (st0: GapState, rows: Iterator[Ev]) =>
+      rows.map(_.us).toArray.sorted.foldLeft(st0) { (st, us) =>
+        if (st.lastUs == Long.MinValue) st.copy(lastUs = us)
+        else if (us < st.lastUs) st
+        else {
+          val d = us - st.lastUs
+          val gap = (d - d % MinUs) / MinUs
+          GapState(us, st.n + 1, st.s1 + gap, st.s2 + gap * gap)
+        }
+      }) { (key: (String, Long), st) =>
+    KeyMoments(key._1, key._2, st.n, st.s1, st.s2)
   }
 }

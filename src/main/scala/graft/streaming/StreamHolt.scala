@@ -1,26 +1,18 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of [[graft.operators.EventOps.dailyHolt]] — Holt
-  * level+trend smoothing as a stateful stream.
+/** Streaming twin of [[graft.operators.EventOps.dailyHolt]]: Holt
+  * level+trend smoothing as a [[KeyedFold]].
   *
-  * The Holt recurrence is an ORDERED fold over complete day counts, so
-  * late/out-of-order arrivals revise past days — a fold cannot be
-  * carried forward incrementally without losing exactly-the-batch
-  * semantics. The honest streaming state is therefore the per-type
-  * day→count map (VOCABULARY-sized: days × types, never event-sized —
-  * the retention window bounds it in production), merged per trigger;
-  * each emission re-folds the sorted day series from state in O(days).
-  * That makes the stream trivially equal to the batch twin after ANY
-  * trigger chop, including out-of-order day arrivals — spec-proved by
-  * running chops against [[graft.operators.EventOps.dailyHolt]].
-  *
-  * The fold literals (α=0.5, β=0.25 and complements — exactly
-  * representable) are spelled in the SAME operation order as the batch
-  * lambda, so the JVM doubles here and the codegen'd SQL fold agree
-  * bit for bit.
+  * The recurrence is an ORDERED fold over complete day counts, and a
+  * late row revises a past day, so the fold cannot be carried forward
+  * incrementally. The state is the per-type day→count map instead, and
+  * each emission re-folds the sorted series in O(days); it equals the
+  * batch twin after any trigger chop, out-of-order days included. The
+  * literals (α=0.5, β=0.25 and complements, exactly representable) are
+  * spelled in the batch lambda's operation order, so the JVM doubles
+  * and the codegen'd SQL fold agree bit for bit.
   */
 object StreamHolt {
 
@@ -30,37 +22,27 @@ object StreamHolt {
 
   val DayUs = 86400000000L
 
+  /** The day→count fold of [[StreamHolt]] and [[StreamHoltWinters]]. */
+  private[streaming] val dayCounts =
+    KeyedFold.countBy((e: Ev) => java.lang.Math.floorDiv(e.tsUs, DayUs)) _
+
   def smooth(ev: Dataset[Ev])(implicit spark: SparkSession): Dataset[HoltRow] = {
     import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    update.over(ev)(_.event_type)
   }
 
-  /** Merge this trigger's per-day counts into state, emit the re-fold.
-    * Exposed for direct-fold specs. */
-  private[graft] def update(tpe: String, it: Iterator[Ev],
-      state: GroupState[Map[Long, Long]]): Iterator[HoltRow] = {
-    val prev = state.getOption.getOrElse(Map.empty[Long, Long])
-    val add = it.foldLeft(Map.empty[Long, Long]) { (m, e) =>
-      val d = java.lang.Math.floorDiv(e.tsUs, DayUs)
-      m.updated(d, m.getOrElse(d, 0L) + 1L)
-    }
-    if (add.isEmpty) return Iterator.empty
-    val merged = add.foldLeft(prev) { case (m, (d, n)) =>
-      m.updated(d, m.getOrElse(d, 0L) + n)
-    }
-    state.update(merged)
-    val days = merged.keys.toVector.sorted
-    val xs = days.map(merged)
-    // the batch lambda verbatim: l' = .5x + .5(l+b); b' = .25(l'−l)+.75b
-    var l = xs.head.toDouble
-    var b = 0.0
-    for (x <- xs.tail) {
-      val lNew = 0.5 * x.toDouble + 0.5 * (l + b)
-      b = 0.25 * (lNew - l) + 0.75 * b
-      l = lNew
-    }
-    Iterator.single(HoltRow(tpe, days.size.toLong, days.last, l, b, l + b))
+  private[graft] val update = KeyedFold(Map.empty[Long, Long])(dayCounts) {
+    (tpe: String, counts) =>
+      val days = counts.keys.toVector.sorted
+      val xs = days.map(counts)
+      // the batch lambda verbatim: l' = .5x + .5(l+b); b' = .25(l'−l)+.75b
+      var l = xs.head.toDouble
+      var b = 0.0
+      for (x <- xs.tail) {
+        val lNew = 0.5 * x.toDouble + 0.5 * (l + b)
+        b = 0.25 * (lNew - l) + 0.75 * b
+        l = lNew
+      }
+      HoltRow(tpe, days.size.toLong, days.last, l, b, l + b)
   }
 }

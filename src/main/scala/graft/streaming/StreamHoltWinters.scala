@@ -1,29 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of [[graft.operators.EventOps.dailyHoltWinters]] —
-  * additive Holt-Winters (level + trend + weekly seasonal) as a
-  * stateful stream.
-  *
-  * Same honest-state argument as [[StreamHolt]]: the seasonal
-  * recurrence is an ORDERED fold that late arrivals revise (a late
-  * event seven days back shifts every seasonal slot after it), so the
-  * state is the per-type day→count map (vocabulary-sized,
-  * retention-bounded — never event-sized), merged per trigger, and
-  * each emission re-folds the sorted series in O(days). After ANY
-  * trigger chop the emission equals the batch twin — spec-proved
-  * against EventOps.dailyHoltWinters across out-of-order and
-  * mid-day-split deliveries.
-  *
-  * The fold spells the three recurrence lines in the batch lambda's
-  * exact operation order (α=0.5, β=γ=0.25 — exactly representable)
-  * so JVM and codegen doubles agree bit for bit, including the
-  * l_t-duplicated trend and seasonal terms. CALENDAR-DENSIFIED like
-  * the batch twin (r13): each re-fold runs over every day in the
-  * observed span with gaps zero-filled, so sparse series keep their
-  * day-of-week phase; nDays is the calendar span.
+/** Streaming twin of [[graft.operators.EventOps.dailyHoltWinters]]:
+  * additive Holt-Winters (level + trend + weekly seasonal) over
+  * [[StreamHolt]]'s day→count fold, for the same reason (a late event
+  * seven days back shifts every seasonal slot after it). The three
+  * recurrence lines keep the batch lambda's operation order (α=0.5,
+  * β=γ=0.25, exactly representable), so JVM and codegen doubles agree
+  * bit for bit. Calendar-densified like the batch twin: the re-fold
+  * runs over every day in the observed span with gaps zero-filled, so
+  * sparse series keep their day-of-week phase; nDays is the span.
   */
 object StreamHoltWinters {
 
@@ -36,43 +23,26 @@ object StreamHoltWinters {
   def smooth(ev: Dataset[StreamHolt.Ev])
             (implicit spark: SparkSession): Dataset[HwRow] = {
     import spark.implicits._
-    ev.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
+    update.over(ev)(_.event_type)
   }
 
-  /** Merge this trigger's per-day counts into state, emit the re-fold.
-    * Exposed for direct-fold specs. */
-  private[graft] def update(tpe: String, it: Iterator[StreamHolt.Ev],
-      state: GroupState[Map[Long, Long]]): Iterator[HwRow] = {
-    val prev = state.getOption.getOrElse(Map.empty[Long, Long])
-    val add = it.foldLeft(Map.empty[Long, Long]) { (m, e) =>
-      val d = java.lang.Math.floorDiv(e.tsUs, StreamHolt.DayUs)
-      m.updated(d, m.getOrElse(d, 0L) + 1L)
+  private[graft] val update =
+    KeyedFold(Map.empty[Long, Long])(StreamHolt.dayCounts) {
+      (tpe: String, counts) =>
+        val days = (counts.keys.min to counts.keys.max).toVector
+        val xs = days.map(d => counts.getOrElse(d, 0L))
+        // the batch lambda verbatim: l' = .5(x−s)+.5(l+b);
+        // b' = .25(l'−l)+.75b; s' = .25(x−l')+.75s, seasonal queue rotates
+        var l = xs.head.toDouble
+        var b = 0.0
+        var q = Vector.fill(Period)(0.0)
+        for (x0 <- xs.tail) {
+          val x = x0.toDouble
+          val lNew = 0.5 * (x - q(0)) + 0.5 * (l + b)
+          val bNew = 0.25 * (lNew - l) + 0.75 * b
+          val sNew = 0.25 * (x - lNew) + 0.75 * q(0)
+          l = lNew; b = bNew; q = q.tail :+ sNew
+        }
+        HwRow(tpe, days.size.toLong, days.last, l, b, q(0), l + b + q(0))
     }
-    if (add.isEmpty) return Iterator.empty
-    val merged = add.foldLeft(prev) { case (m, (d, n)) =>
-      m.updated(d, m.getOrElse(d, 0L) + n)
-    }
-    state.update(merged)
-    // calendar-densified like the batch twin (r13): fold over EVERY
-    // day in the observed span, zero-filling gaps, so the weekly
-    // seasonal queue keeps day-of-week alignment on sparse series
-    val days = (merged.keys.min to merged.keys.max).toVector
-    val xs = days.map(d => merged.getOrElse(d, 0L))
-    // the batch lambda verbatim: l' = .5(x−s)+.5(l+b);
-    // b' = .25(l'−l)+.75b; s' = .25(x−l')+.75s, seasonal queue rotates
-    var l = xs.head.toDouble
-    var b = 0.0
-    var q = Vector.fill(Period)(0.0)
-    for (x0 <- xs.tail) {
-      val x = x0.toDouble
-      val lNew = 0.5 * (x - q(0)) + 0.5 * (l + b)
-      val bNew = 0.25 * (lNew - l) + 0.75 * b
-      val sNew = 0.25 * (x - lNew) + 0.75 * q(0)
-      l = lNew; b = bNew; q = q.tail :+ sNew
-    }
-    Iterator.single(HwRow(tpe, days.size.toLong, days.last,
-      l, b, q(0), l + b + q(0)))
-  }
 }

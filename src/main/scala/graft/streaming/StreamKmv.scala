@@ -2,37 +2,21 @@ package graft.streaming
 
 import graft.operators.Sketches
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming KMV distinct-count sketch — the third streaming sketch
-  * twin (CMS and HLL stream through stock aggregation because their
-  * state is a FIXED grid; KMV's state is a bounded ORDERED SET, which
-  * stock streaming aggs cannot hold, so this one is the genuine
-  * `flatMapGroupsWithState` member of the family).
+/** Streaming KMV distinct-count sketch as a [[KeyedFold]]. CMS and HLL
+  * stream through stock aggregation because their state is a fixed
+  * grid; KMV's is a bounded ORDERED SET, which a stock streaming
+  * aggregate cannot hold.
   *
-  * State per group = the k smallest DISTINCT 48-bit md5 uniforms seen
-  * so far, as a sorted vector — ≤ k longs forever, however unbounded
-  * the stream (the 100 TB-safe shape). Each trigger set-unions its
-  * keys' hashes into the state and re-trims to k; because bottom-k is
-  * a mergeable order statistic (bottomK(A ∪ B) = bottomK(bottomK(A) ∪
-  * B) — the [[Sketches.kmvSample]] merge law), the state after ANY
-  * trigger chop equals the batch bottom-k over the same rows,
-  * spec-proved. Duplicate keys are absorbed by the set-union exactly
-  * as the batch path's `distinct` absorbs them.
-  *
-  * The per-trigger emission is the updated sketch row (append mode,
-  * latest-row-wins — the StreamEntropy convention) carrying the
-  * uniforms themselves, so downstream consumers can MERGE per-source
-  * sketches without rescanning any source, plus the running
-  * distinct-count estimate D̂ = (k−1)/u_(k) (the [[Sketches.kmvSetOps]]
-  * estimator, exact-fallback below k, 4 dp HALF_UP like the batch
-  * `round`).
-  *
-  * The hash is the Sketches dyadic uniform bit-for-bit: the first 6
-  * digest bytes big-endian ARE the first 12 hex chars of md5, so the
-  * JVM digest here and `conv(substring(md5(..),1,12),16,10)` in the
-  * batch column world agree exactly — spec-proved by deriving the
-  * batch side through Spark SQL functions.
+  * State per group: the k smallest DISTINCT 48-bit md5 uniforms, as a
+  * sorted vector. Each trigger set-unions its hashes in and re-trims to
+  * k; bottom-k is a mergeable order statistic (the
+  * [[Sketches.kmvSample]] merge law), so the state after any trigger
+  * chop equals the batch bottom-k, and duplicates are absorbed as the
+  * batch `distinct` absorbs them. The emitted row carries the uniforms,
+  * so downstream consumers can merge per-source sketches without a
+  * rescan, plus the estimate D̂ = (k−1)/u_(k) (the [[Sketches.kmvSetOps]]
+  * estimator: exact below k, 4 dp HALF_UP like the batch `round`).
   */
 object StreamKmv {
 
@@ -52,28 +36,17 @@ object StreamKmv {
   def sketch(ev: Dataset[Rec], k: Int = Sketches.KmvK)
             (implicit spark: SparkSession): Dataset[KmvRow] = {
     import spark.implicits._
-    ev.groupByKey(_.grp)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update(k))
+    update(k).over(ev)(_.grp)
   }
 
-  /** Set-union the trigger's hashes into the bounded sorted state,
-    * emit the updated sketch row. Exposed for direct-fold specs. */
-  private[graft] def update(k: Int)(grp: String, it: Iterator[Rec],
-      state: GroupState[Vector[Long]]): Iterator[KmvRow] = {
-    val prev = state.getOption.getOrElse(Vector.empty[Long])
-    val merged = (prev.toSet ++ it.map(r => h48(r.key)))
-      .toVector.sorted.take(k)
-    if (merged.isEmpty) return Iterator.empty // timeout-less empty call
-    state.update(merged)
-    val est =
-      if (merged.size < k) merged.size.toDouble // sketch IS the value set
-      else {
-        val uk = merged.last.toDouble / 281474976710656.0 // 2^48, exact
-        (k - 1).toDouble / uk
-      }
-    val est4 = BigDecimal(est)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Iterator.single(KmvRow(grp, merged.size, merged, est4))
+  private[graft] def update(k: Int) = KeyedFold(Vector.empty[Long])(
+    (prev: Vector[Long], rows: Iterator[Rec]) =>
+      (prev.toSet ++ rows.map(r => h48(r.key))).toVector.sorted.take(k)) {
+    (grp: String, us) =>
+      val est =
+        if (us.size < k) us.size.toDouble // sketch IS the value set
+        else (k - 1).toDouble / (us.last.toDouble / 281474976710656.0) // 2^48
+      KmvRow(grp, us.size, us,
+        BigDecimal(est).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
   }
 }

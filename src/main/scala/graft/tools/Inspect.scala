@@ -86,16 +86,17 @@ object Inspect {
       spark.catalog.clearCache()
     }
 
-  /** The formatted plan, the executed plan and its codegen summary. */
+  /** The formatted plan, the executed plan and its codegen summary,
+    * [[masked]]. */
   private def show(qe: QueryExecution): Unit = {
-    println(qe.explainString(FormattedMode))
+    println(masked(qe.explainString(FormattedMode)))
     // executedPlan.toString carries the `*(id)` codegen markers that
     // the formatted view drops — interpreted stages have no star
-    println(qe.executedPlan.toString)
+    println(masked(qe.executedPlan.toString))
     val subtrees = codegenStringSeq(qe.executedPlan)
     println(s"-- codegen: ${subtrees.size} whole-stage subtree(s)")
     subtrees.zipWithIndex.foreach { case ((tree, _, stats), i) =>
-      val head = tree.linesIterator.take(1).mkString
+      val head = masked(tree.linesIterator.take(1).mkString)
       println(s"   subtree ${i + 1}: $head | " +
         s"maxMethod ${stats.maxMethodCodeSize}B, " +
         s"constPool ${stats.maxConstPoolSize}, " +
@@ -104,6 +105,27 @@ object Inspect {
     if (subtrees.isEmpty)
       println("   (NO whole-stage codegen subtrees — fully interpreted)")
   }
+
+  /** `plan` with the ids that change from run to run masked: expression
+    * ids (`#123`), lambda variable names (`x_12`), RDD ids, exchange plan
+    * ids, AQE query-stage numbers, codegen stage ids, object hashes and
+    * JVM lambda class names. The `*` of `*(n)` stays, since an operator
+    * without it runs interpreted. The pre-AQE plans of two dumps of one
+    * commit then diff clean, except the column order of a
+    * distinct-aggregate `Expand` (profile_columns, sv_reciprocal_overlap).
+    * What AQE decides at run time is not masked: the final plan and the
+    * codegen summary follow the order in which stages finish. */
+  private[graft] def masked(plan: String): String = Seq(
+      "#\\d+" -> "#N",
+      "(lambda \\w+?)_\\d+" -> "$1_N",
+      "RDD\\[\\d+\\]" -> "RDD[N]",
+      "plan_id=\\d+" -> "plan_id=N",
+      "(QueryStage(?: |\\n(?:Output .*\\n)?Arguments: ))\\d+" -> "$1N",
+      "\\*\\(\\d+\\)" -> "*(N)",
+      "codegen id : \\d+" -> "codegen id : N",
+      "([\\w$])@[0-9a-f]{4,8}\\b" -> "$1@H",
+      "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda")
+    .foldLeft(plan) { case (p, (id, mask)) => p.replaceAll(id, mask) }
 
   /** Jobs started and stages completed since the last reset, and the
     * job group of each stage's job. The listener barrier's marker jobs

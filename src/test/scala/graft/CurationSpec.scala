@@ -219,7 +219,7 @@ class CurationSpec extends AnyFunSuite {
         Timestamp.valueOf("2024-01-01 00:00:02")),
       (3L, "x", Timestamp.valueOf("2024-01-01 00:00:03")))
     val mem = MemoryStream[(Long, String, Timestamp)]
-    val gated = graft.streaming.StreamQuality.gate(
+    val gated = Curation.repetitionGate(
       mem.toDF().toDF("doc_id", "text", "ts"), "text")
     val q = gated.writeStream.format("memory").queryName("sq_out")
       .outputMode(OutputMode.Append()).start()
@@ -248,7 +248,7 @@ class CurationSpec extends AnyFunSuite {
       (2L, "he said the quick brown fox runs", Timestamp.valueOf("2024-01-01 00:00:02")),
       (3L, "the quick brown fox jumps high today", Timestamp.valueOf("2024-01-01 00:00:03")))
     val mem = MemoryStream[(Long, String, Timestamp)]
-    val hits = graft.streaming.StreamDecontam.hits(
+    val hits = Curation.decontaminationHits(
       mem.toDF().toDF("doc_id", "text", "ts"), bench, "doc_id", "text", n = 4)
     val q = hits.writeStream.format("memory").queryName("sd_out")
       .outputMode(OutputMode.Append()).start()

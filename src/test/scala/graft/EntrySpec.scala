@@ -177,10 +177,12 @@ class EntrySpec extends AnyFunSuite {
   // does, then grade the dump with tools/compare.py, which runs each
   // oracle in DuckDB and compares columns, rows and values exactly.
   // event_funnel's windowed join is the one graded plan with a range
-  // predicate that no RangeJoin call bins.
-  test("oracle parity: the annotator queries and event_funnel match DuckDB at sf0.001") {
+  // predicate that no RangeJoin call bins. sam_alignment_stats,
+  // decontam_ngram and corpus_mix run the Sam and Curation rollups that
+  // streaming callers share.
+  test("oracle parity at sf0.001: annotator, funnel, SAM, decontam, corpus_mix queries") {
     val names = Seq("q24_annotate_variants", "q32_verify_aa", "variant_dnds",
-      "event_funnel")
+      "event_funnel", "sam_alignment_stats", "decontam_ngram", "corpus_mix")
     val canRun =
       try new ProcessBuilder("python3", "-c", "import duckdb").start().waitFor() == 0
       catch { case _: Exception => false }
@@ -202,6 +204,25 @@ class EntrySpec extends AnyFunSuite {
         .forEach(java.nio.file.Files.delete(_))
       finally walk.close()
     }
+  }
+
+  test("Inspect's plan masking hides run-varying ids and keeps the codegen star") {
+    // a limit's "Arguments: 20" is plan content, a query stage's is an id
+    assert(tools.Inspect.masked(
+      """*(12) Project [transform(a#7L, lambdafunction((lambda x_3#41 + 1), lambda x_3#41, false)) AS b#9]
+        |+- BroadcastQueryStage 20 MapPartitionsRDD[57] [plan_id=2405]
+        |(55) BroadcastQueryStage
+        |Output [1]: [doc_id#55L]
+        |Arguments: 20
+        |(56) CollectLimit [codegen id : 18]
+        |Arguments: 20, PqModel@14d7a962, Strategy$$Lambda$4488/0x00007f9ed1302a18@2f32fe68""".stripMargin) ==
+      """*(N) Project [transform(a#NL, lambdafunction((lambda x_N#N + 1), lambda x_N#N, false)) AS b#N]
+        |+- BroadcastQueryStage N MapPartitionsRDD[N] [plan_id=N]
+        |(55) BroadcastQueryStage
+        |Output [1]: [doc_id#NL]
+        |Arguments: N
+        |(56) CollectLimit [codegen id : N]
+        |Arguments: 20, PqModel@H, Strategy$$Lambda@H""".stripMargin)
   }
 
   // each detector on hand-made plans, so a blinded one cannot pass the

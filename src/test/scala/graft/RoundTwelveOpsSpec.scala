@@ -315,10 +315,9 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     assert(k == -3333L)
   }
 
-  test("StreamSam census across triggers equals the batch census") {
+  test("Sam.alignmentStats over a stream across triggers equals the batch census") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.StreamSam
     implicit val sqlCtx = spark.sqlContext
     def sam(q: String, chr: String, pos: Long, cigar: String): String =
       Seq(q, "0", chr, pos.toString, "30", cigar,
@@ -328,7 +327,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     val batch2 = Seq(sam("c", "chr1", 200, "5M2D3M"),
       sam("bad", "chr1", 10, "10Z")) // quarantined in-stream too
     val mem = MemoryStream[String]
-    val q = StreamSam.alignmentStats(mem.toDS())
+    val q = Sam.alignmentStats(mem.toDS())
       .writeStream.format("memory").queryName("sam_stream")
       .outputMode(OutputMode.Complete()).start()
     try {

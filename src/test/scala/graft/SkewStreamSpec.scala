@@ -76,6 +76,42 @@ class StatefulSessionsSpec extends AnyFunSuite {
     assert(state.get == SessionState(100L, 200L, 2L))
     assert(state.getTimeoutTimestampMs.isPresent) // eviction armed
   }
+
+  // an open session in state, then one trigger of late rows
+  private def late(s: SessionState, ts: Long*): (Seq[ClosedSession], SessionState) = {
+    val state = TestGroupState.create[SessionState](
+      org.apache.spark.api.java.Optional.of(s), GroupStateTimeout.ProcessingTimeTimeout,
+      5000L, org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
+    (StatefulSessions.update(1800L)(7L, ts.map(Event(7L, _)).iterator, state).toSeq, state.get)
+  }
+
+  test("a row one trigger late inside the open session widens it, never shrinks its end") {
+    // the batch Sessionize.sessions places 150 inside (100, 200)
+    assert(late(SessionState(100L, 200L, 2L), 150L) == (Nil, SessionState(100L, 200L, 3L)))
+  }
+
+  test("a row more than the gap before the open session's start drops as late") {
+    // 1000 is 4000 s before the start: dropped; 4000 is within the gap
+    assert(late(SessionState(5000L, 6000L, 2L), 1000L, 4000L) ==
+      (Nil, SessionState(4000L, 6000L, 3L)))
+  }
+}
+
+class KeyedFoldSpec extends AnyFunSuite {
+  import graft.streaming.KeyedFold
+  import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+
+  test("a trigger that adds no rows emits nothing and leaves the state untouched") {
+    val state = TestGroupState.create[Map[String, Long]](
+      org.apache.spark.api.java.Optional.of(Map("a" -> 2L)), GroupStateTimeout.NoTimeout,
+      0L, org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
+    val fold = KeyedFold(Map.empty[String, Long])(
+      KeyedFold.countBy((r: String) => r) _)((_: String, m) => m.size)
+    assert(fold("k", Iterator.empty, state).isEmpty)
+    assert(!state.isUpdated && state.get == Map("a" -> 2L))
+    assert(fold("k", Iterator("a", "b"), state).toSeq == Seq(2))
+    assert(state.get == Map("a" -> 3L, "b" -> 1L))
+  }
 }
 
 class StreamMergeSpec extends AnyFunSuite {
@@ -211,9 +247,8 @@ class StreamEnrichSpec extends AnyFunSuite {
       (7L, 30.0, Timestamp.valueOf("2024-01-01 00:00:03"))) // no dim row
     val mem = MemoryStream[(Long, Double, Timestamp)]
     val streamDf = mem.toDF().toDF("user_id", "value", "ts")
-    val enriched = graft.streaming.StreamEnrich.withDim(
-      streamDf, dim,
-      streamDf("user_id") === dim("user_id")).drop(dim("user_id"))
+    val enriched = streamDf.join(broadcast(dim),
+      streamDf("user_id") === dim("user_id"), "left").drop(dim("user_id"))
     val q = enriched.writeStream.format("memory").queryName("se_out")
       .outputMode(OutputMode.Append()).start()
     try {
