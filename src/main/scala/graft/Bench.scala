@@ -12,10 +12,20 @@ object Bench {
     (paths.lastOption, names.toSet)
   }
 
-  /** Quiet-box floor for [[sentinelOnce]] (seconds, local[32], best-of-3
-    * on an idle machine). A contended machine inflates the sentinel as it
+  /** Quiet-box floor for [[sentinelOnce]] on a box of `cpus` cores, in
+    * seconds: the top of the quiet readings measured on a 32-core box
+    * (0.06-0.15) and on a 4-core box (0.14-0.25), interpolated in log
+    * cores between the two and held at the nearer one outside them. The
+    * probe is mostly fixed job overhead, not work spread over threads:
+    * on the 4-core box it reads 0.13-0.24 s at local[1], [2], [4] and [8]
+    * alike. So the floor is the box's, keyed on its core count, not on
+    * the session's threads. A contended machine inflates the sentinel as it
     * inflates every query, so the artifact records the machine state. */
-  val SentinelFloorSec = 0.15
+  def sentinelFloorSec(cpus: Int): Double = {
+    val (at32, at4) = (0.15, 0.25)
+    val boxCores = math.min(32, math.max(4, cpus))
+    at32 * math.pow(at4 / at32, math.log(32.0 / boxCores) / math.log(8.0))
+  }
 
   /** Fixed data-independent CPU-bound probe: same work every run, so its
     * time moves only with machine contention, never with code under test. */
@@ -69,13 +79,13 @@ object Bench {
     * poisoned run must identify itself in its artifact. Strict on
     * purpose, since box load alone pushes sub-second queries >2x their
     * floors. Signals:
-    *  - pre/post sentinel over 1.25x its quiet floor;
+    *  - pre/post sentinel over 1.25x the quiet floor of a `cpus`-core box;
     *  - a mid-run SPIKE: >3x the run's own mid-median (mid probes run
     *    in post-query heap/JIT state and read 0.26-0.49 s even on a
     *    provably quiet box, so an absolute test against the idle floor
     *    would false-positive every run) or an extreme absolute sample
-    *    >8x the idle floor — the level a concurrent 32-thread job
-    *    produces;
+    *    >8x the idle floor of the box — the level a concurrent 32-thread
+    *    job produces on 32 cores;
     *  - more than cpus/8 cores busy in the second before the session
     *    starts (cpus/4 let a 32-core run at loadavg 5.24 push four
     *    sub-second queries >2x their floors; the 1-min loadavg itself
@@ -86,9 +96,10 @@ object Bench {
     val midMax = if (midSentinels.isEmpty) 0.0 else midSentinels.max
     val midMedian = if (midSentinels.isEmpty) 0.0
       else midSentinels.sorted.apply(midSentinels.size / 2)
-    sentinelSec > 1.25 * SentinelFloorSec ||
+    val floor = sentinelFloorSec(cpus)
+    sentinelSec > 1.25 * floor ||
       (midSentinels.nonEmpty && (midMax > 3.0 * midMedian ||
-        midMax > 8.0 * SentinelFloorSec)) ||
+        midMax > 8.0 * floor)) ||
       (busyPre >= 0 && busyPre > cpus / 8.0)
   }
 
@@ -182,8 +193,9 @@ object Bench {
     // box): the min of three hot samples is the floor estimate
     val sentinel = math.min(sentinelPre,
       Seq.fill(3)(sentinelOnce(spark)).min)
+    val cpus = Runtime.getRuntime.availableProcessors
     val contaminated = contaminatedFlag(sentinel, midSentinels.toSeq,
-      busyPre, Runtime.getRuntime.availableProcessors)
+      busyPre, cpus)
     def arr(xs: Seq[Double]): String =
       xs.map(fmt).mkString("[", ",", "]")
     val fp = fingerprint(spark, sfDir)
@@ -194,7 +206,7 @@ object Bench {
     val filterJson = if (only.isEmpty) "\"full\""
       else only.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val outFile = artifactFile(only)
-    val meta = s""""sf":"$sfDir","filter":$filterJson,"fingerprint":$fp,"loadavg_pre":$loadPre,"busy_cores_pre":${fmt(busyPre)},"sentinel_sec":$sentinel,"sentinel_floor_sec":$SentinelFloorSec,"sentinel_mid":${arr(midSentinels.toSeq)},"contaminated":$contaminated,"errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+    val meta = s""""sf":"$sfDir","filter":$filterJson,"fingerprint":$fp,"loadavg_pre":$loadPre,"busy_cores_pre":${fmt(busyPre)},"sentinel_sec":$sentinel,"cpus":$cpus,"sentinel_floor_sec":${sentinelFloorSec(cpus)},"sentinel_mid":${arr(midSentinels.toSeq)},"contaminated":$contaminated,"errors":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     // the complete per-query map goes to a file; stdout carries a
     // compact line that fits a 2000-char output tail
     val loadQs = loadPerQuery.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -72,7 +72,7 @@ private[graft] object VariantQueries {
       .select(col("tr_id"), col("u.ftype"), col("u.fstart"), col("u.fstop"))
     val features = exons.unionByName(utrs)
     val ann = TranscriptAnnotator.annotate(variants, genes, transcripts,
-      features, TranscriptAnnotator.Md5Genome(), binWidth = 4096).toDF()
+      features, TranscriptAnnotator.Md5Genome()).toDF()
     (ann, transcripts)
   }
 

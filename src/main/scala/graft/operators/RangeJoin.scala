@@ -3,13 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed point-in-interval join (the reference's GeneCache /
-  * TranscriptFeatureCache lookups: "which gene/feature ranges contain this
-  * position", GeneCache usage at VariantLoad3.java:682-694 and
-  * VariantPostProcessing.java:225).
+/** Distributed point-in-interval join: "which ranges contain this
+  * position", for interval sides that need not fit in memory (the genic
+  * status fixup's merged gene spans, wiggle and chain blocks,
+  * nearest-feature windows, the graded interval queries). The annotator's
+  * gene lookups (the reference's GeneCache, VariantLoad3.java:682-694)
+  * are not its job: their genes ride in [[TranscriptAnnotator.model]]'s
+  * broadcast, sorted per chromosome.
   *
   * The reference holds all intervals of one chromosome in a driver-side
-  * HashMap. At 100 TB neither side fits anywhere, and a naive
+  * HashMap. When neither side fits anywhere, a naive
   * `pos BETWEEN start AND stop` theta-join degenerates to a broadcast
   * nested loop. We re-express it as an equi-join:
   *

@@ -17,15 +17,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the AA change, synonymous status and frameshift.
   *
   * Spark shape vs the reference's: the GeneCache / TranscriptCache
-  * HashMaps → [[model]], built in one tr_id-keyed pass, collected and
-  * broadcast keyed by (gene_id, chr); the per-variant cursor loop →
-  * [[apply]], [[RangeJoin]]'s gene containment and then one typed pass
-  * computing the flags and the AA call in plain Scala, with no shuffle;
-  * chromosome FASTA file reads → a pluggable [[GenomeSource]] read in the
-  * model pass, once per coding transcript (real deployments back it with
-  * [[graft.sources.PackedGenome]]; tests use [[FixedGenome]]; the
-  * synthetic default [[Md5Genome]] is reproducible in SQL, so the full
-  * pipeline has a DuckDB oracle).
+  * HashMaps → [[model]], one collected query (the transcripts, built in
+  * one tr_id-keyed pass, and the gene rows), broadcast as a per-chromosome
+  * gene index whose rows carry their transcripts; the per-variant cursor
+  * loop → [[apply]], one typed pass that looks each variant up in that
+  * index and computes the flags and the AA call in plain Scala, with no
+  * join and no shuffle; chromosome FASTA file reads → a pluggable
+  * [[GenomeSource]] read in the model pass, once per coding transcript
+  * (real deployments back it with [[graft.sources.PackedGenome]]; tests
+  * use [[FixedGenome]]; the synthetic default [[Md5Genome]] is
+  * reproducible in SQL, so the full pipeline has a DuckDB oracle).
   */
 object TranscriptAnnotator {
 
@@ -101,12 +102,42 @@ object TranscriptAnnotator {
       ex_start: Array[Long], ex_stop: Array[Long],
       u3s: Long, u3e: Long, u5s: Long, u5e: Long,
       trimmed: Seq[ExonIv], cds_plus: Option[String])
-  private[operators] case class VarGene(var_id: Long, chr: String,
-      pos: Long, ref_nuc: String, var_nuc: String, gene_id: String)
+  private[operators] case class Var(var_id: Long, chr: String,
+      pos: Long, ref_nuc: String, var_nuc: String)
+  private[operators] case class GeneRow(gene_id: String, chr: String,
+      gstart: Long, gstop: Long)
+  /** A row of [[model]]'s collected query: a transcript or a gene row. */
+  private[operators] case class ModelRow(tr: Tr, gene: GeneRow)
 
-  /** Built by [[model]]: the gene ranges and their broadcast transcripts. */
-  final class Model private[operators] (private[operators] val genes: DataFrame,
-      private[operators] val byGene: Broadcast[Map[(String, String), Array[Tr]]])
+  /** One chromosome's gene rows, each with its transcripts, sorted by
+    * gstart. `reach(i)` is the largest gstop of rows 0..i, so the walk
+    * back from the last row starting at or before a position ends at the
+    * first row whose reach falls short of it: no earlier row holds it.
+    * A lookup costs O(log n + rows walked), and the walk passes every row
+    * after a long one: past a gene row spanning the chromosome each lookup
+    * reads all rows before it. Genes of a few kb keep the walk short; an
+    * index for long intervals needs the max gstop per subtree instead. */
+  private[operators] final class ChrGenes(rows: Seq[(GeneRow, Array[Tr])])
+      extends Serializable {
+    private val sorted = rows.sortBy(_._1.gstart).toArray
+    private val reach =
+      sorted.scanLeft(Long.MinValue)((m, r) => math.max(m, r._1.gstop)).tail
+
+    /** The transcripts of every gene row whose [gstart, gstop] holds `pos`. */
+    def containing(pos: Long): Iterator[Tr] = {
+      var (lo, hi) = (0, sorted.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sorted(mid)._1.gstart <= pos) lo = mid + 1 else hi = mid
+      }
+      Iterator.range(lo - 1, -1, -1).takeWhile(reach(_) >= pos)
+        .filter(sorted(_)._1.gstop >= pos).flatMap(sorted(_)._2)
+    }
+  }
+
+  /** Built by [[model]]: the broadcast gene index, keyed by chr. */
+  final class Model private[operators] (
+      private[operators] val byChr: Broadcast[Map[String, ChrGenes]])
 
   /** Output row — the VARIANT_TRANSCRIPT analog (natural variant key
     * carried through so results are joinable/verifiable without var_id).
@@ -140,33 +171,30 @@ object TranscriptAnnotator {
     * @param features    tr_id, ftype ('EXONS'|'3UTRS'|'5UTRS'), fstart, fstop
     */
   def annotate(variants: DataFrame, genes: DataFrame, transcripts: DataFrame,
-               features: DataFrame, genome: GenomeSource,
-               binWidth: Long = 1 << 20): Dataset[Annotated] =
-    apply(variants, model(genes, transcripts, features, genome), binWidth)
+               features: DataFrame, genome: GenomeSource): Dataset[Annotated] =
+    apply(variants, model(genes, transcripts, features, genome))
 
-  /** Variant ∈ gene range through [[RangeJoin]] (gene side broadcast),
-    * then one typed flatMap over the model: one row per (variant, gene
-    * row, transcript). Null keys match nothing: RangeJoin passes no null
-    * chr, and the model holds no null gene_id (an inner join built it). */
-  def apply(variants: DataFrame, model: Model,
-            binWidth: Long = 1 << 20): Dataset[Annotated] = {
+  /** One typed flatMap over the model, with no join: each variant looks
+    * up the gene rows of its chromosome that contain it and yields one row
+    * per (variant, gene row, transcript). A variant with a null chr or pos
+    * matches nothing, and the model holds no gene row with a null key or
+    * bound. */
+  def apply(variants: DataFrame, model: Model): Dataset[Annotated] = {
     val spark = variants.sparkSession
     import spark.implicits._
-    val byGene = model.byGene
-    RangeJoin.joined(variants.select("var_id", "chr", "pos", "ref_nuc", "var_nuc"),
-        model.genes, "pos", "gstart", "gstop", keys = Seq("chr"),
-        binWidth = binWidth)
+    val byChr = model.byChr
+    variants.filter(col("chr").isNotNull && col("pos").isNotNull)
       .select(col("var_id"), col("chr").cast("string").as("chr"), col("pos"),
-        col("ref_nuc"), col("var_nuc"), col("gene_id").cast("string").as("gene_id"))
-      .as[VarGene]
-      .flatMap(v => byGene.value.getOrElse((v.gene_id, v.chr), Array.empty[Tr])
-        .iterator.map(t => annotateOne(pair(v, t))))
+        col("ref_nuc"), col("var_nuc"))
+      .as[Var]
+      .flatMap(v => byChr.value.get(v.chr).iterator
+        .flatMap(_.containing(v.pos)).map(t => annotateOne(pair(v, t))))
   }
 
   /** The pair, flagged against [pos, var_stop] (endPos, VariantLoad3.java:
     * 299-315: snv/mnv pos+1, insertion pos, deletion pos+len(ref)): in an
     * exon, within 10 bp of an inner splice site, in a UTR. */
-  private def pair(v: VarGene, t: Tr): VarTr = {
+  private def pair(v: Var, t: Tr): VarTr = {
     val (refLen, varLen) = (normSeq(v.ref_nuc).length, normSeq(v.var_nuc).length)
     val (pos, n) = (v.pos, t.ex_start.length)
     val stop = if (refLen > 0 && varLen > 0) pos + 1 else pos + refLen
@@ -190,10 +218,14 @@ object TranscriptAnnotator {
     * UTR-trimmed exons and, if coding, the plus-strand CDS. Transcript
     * rows and feature rows meet in ONE tr_id-hashed exchange; the stage
     * after it reads each CDS once, on the executors. The result is
-    * collected (as a broadcast join of it would be) and broadcast once. A
-    * transcript under several genes (GFF3 `Parent=a,b`) yields one entry
-    * per gene, a gene_id on two chromosomes one per chromosome (each CDS
-    * read from its own); identical duplicate rows collapse. */
+    * collected (as a broadcast join of it would be) together with the gene
+    * rows, a second branch of the same query, and broadcast once as a
+    * [[ChrGenes]] index per chromosome. A transcript under several genes
+    * (GFF3 `Parent=a,b`) yields one entry per gene, a gene_id on two
+    * chromosomes one per chromosome (each CDS read from its own);
+    * identical duplicate transcript rows collapse, duplicate gene rows do
+    * not. A gene row with a null key or bound, or with gstart > gstop,
+    * holds no position and is dropped. */
   def model(genes: DataFrame, transcripts: DataFrame, features: DataFrame,
             genome: GenomeSource): Model = {
     val spark = genes.sparkSession
@@ -245,9 +277,21 @@ object TranscriptAnnotator {
         or(col("u5s"), Long.MaxValue).as("u5s"), or(col("u5e"), Long.MinValue).as("u5e"),
         col("trimmed"), when(!col("non_coding") && size(col("trimmed")) > 0,
           cds(col("chr").cast("string"), col("trimmed"))).as("cds_plus"))
-      .as[Tr].collect()
-    new Model(genes.select("gene_id", "chr", "gstart", "gstop"),
-      spark.sparkContext.broadcast(trs.groupBy(t => (t.gene_id, t.chr))))
+    val geneRows = genes.select(col("gene_id").cast("string").as("gene_id"),
+        col("chr").cast("string").as("chr"), col("gstart").cast("long").as("gstart"),
+        col("gstop").cast("long").as("gstop"))
+      .filter(col("gene_id").isNotNull && col("chr").isNotNull &&
+        col("gstart") <= col("gstop"))
+    def nested(df: DataFrame, name: String) =
+      df.select(struct(df.columns.map(col).toIndexedSeq: _*).as(name))
+    val parts = nested(trs, "tr")
+      .unionByName(nested(geneRows, "gene"), allowMissingColumns = true)
+      .as[ModelRow].collect()
+    val byGene = parts.flatMap(p => Option(p.tr)).groupBy(t => (t.gene_id, t.chr))
+    val byChr = parts.flatMap(p => Option(p.gene))
+      .flatMap(g => byGene.get((g.gene_id, g.chr)).map(g -> _))
+      .groupBy(_._1.chr).map { case (c, rows) => c -> new ChrGenes(rows.toSeq) }
+    new Model(spark.sparkContext.broadcast(byChr))
   }
   /** handleUTRs (VariantPostProcessing.java:626-668): trim each exon of
     * `ex` against the 3'UTR tail and 5'UTR head (columns u3s/u5e, or

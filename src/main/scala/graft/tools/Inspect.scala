@@ -109,9 +109,12 @@ object Inspect {
   /** `plan` with the ids that change from run to run masked: expression
     * ids (`#123`), lambda variable names (`x_12`), RDD ids, exchange plan
     * ids, AQE query-stage numbers, codegen stage ids, object hashes and
-    * JVM lambda class names. The `*` of `*(n)` stays, since an operator
-    * without it runs interpreted. The pre-AQE plans of two dumps of one
-    * commit then diff clean, except the column order of a
+    * JVM lambda class names; and what depends on the checkout, not the
+    * plan: the directory above `spark-warehouse` and the source line of
+    * an RDD's call site (`at Curation.scala:N`). The `*` of `*(n)` stays,
+    * since an operator without it runs interpreted. The pre-AQE plans of
+    * two dumps of one commit then diff clean, also across checkouts,
+    * except the column order of a
     * distinct-aggregate `Expand` (profile_columns, sv_reciprocal_overlap).
     * What AQE decides at run time is not masked: the final plan and the
     * codegen summary follow the order in which stages finish. */
@@ -124,7 +127,9 @@ object Inspect {
       "\\*\\(\\d+\\)" -> "*(N)",
       "codegen id : \\d+" -> "codegen id : N",
       "([\\w$])@[0-9a-f]{4,8}\\b" -> "$1@H",
-      "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda")
+      "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda",
+      "/[^\\s\\[\\],:]*/spark-warehouse\\b" -> "<dir>/spark-warehouse",
+      "(\\w\\.scala):\\d+" -> "$1:N")
     .foldLeft(plan) { case (p, (id, mask)) => p.replaceAll(id, mask) }
 
   /** Jobs started and stages completed since the last reset, and the

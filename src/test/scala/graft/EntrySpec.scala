@@ -215,14 +215,18 @@ class EntrySpec extends AnyFunSuite {
         |Output [1]: [doc_id#55L]
         |Arguments: 20
         |(56) CollectLimit [codegen id : 18]
-        |Arguments: 20, PqModel@14d7a962, Strategy$$Lambda$4488/0x00007f9ed1302a18@2f32fe68""".stripMargin) ==
+        |Arguments: 20, PqModel@14d7a962, Strategy$$Lambda$4488/0x00007f9ed1302a18@2f32fe68
+        |+- Scan ExistingRDD[doc_id#3L] MapPartitionsRDD[57] at createDataFrame at Curation.scala:396, ExistingRDD
+        |Location: InMemoryFileIndex [file:/home/a/graft/spark-warehouse/ann_ivf_disk]""".stripMargin) ==
       """*(N) Project [transform(a#NL, lambdafunction((lambda x_N#N + 1), lambda x_N#N, false)) AS b#N]
         |+- BroadcastQueryStage N MapPartitionsRDD[N] [plan_id=N]
         |(55) BroadcastQueryStage
         |Output [1]: [doc_id#NL]
         |Arguments: N
         |(56) CollectLimit [codegen id : N]
-        |Arguments: 20, PqModel@H, Strategy$$Lambda@H""".stripMargin)
+        |Arguments: 20, PqModel@H, Strategy$$Lambda@H
+        |+- Scan ExistingRDD[doc_id#NL] MapPartitionsRDD[N] at createDataFrame at Curation.scala:N, ExistingRDD
+        |Location: InMemoryFileIndex [file:<dir>/spark-warehouse/ann_ivf_disk]""".stripMargin)
   }
 
   // each detector on hand-made plans, so a blinded one cannot pass the

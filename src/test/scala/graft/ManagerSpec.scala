@@ -375,7 +375,7 @@ class ManagerSpec extends AnyFunSuite {
   }
 
   test("Bench contamination: a slow mid-sentinel flips the flag") {
-    val F = Bench.SentinelFloorSec
+    val F = Bench.sentinelFloorSec(32)
     // the r10 quiet-box run: pre/post sentinel well under 1.25x floor,
     // mid probes in their normal post-query 0.26-0.49 s band, loadavg
     // low before launch — clean
@@ -435,6 +435,24 @@ class ManagerSpec extends AnyFunSuite {
     assert(math.abs(quiet - 0.06) < 1e-9)
     assert(!Bench.contaminatedFlag(0.06, Nil, quiet, 4))
     assert(Bench.contaminatedFlag(0.06, Nil, 0.6, 4))
+  }
+
+  test("Bench contamination: quiet 4-core runs read clean, a burst flags") {
+    // replay of event_funnel runs at sf0.1 on a quiet 4-core box: final
+    // sentinel 0.19-0.25 s, busy_cores_pre 0.02-0.14. Against the floor
+    // of a 32-core box (0.15 s) every one of them was stamped
+    for (sentinel <- Seq(0.19, 0.25); busy <- Seq(0.02, 0.14))
+      assert(!Bench.contaminatedFlag(sentinel, Nil, busy, 4), (sentinel, busy))
+    // a full sf0.01 run on the same quiet box is clean; one 3.2 s burst
+    // among its mid probes stamps it
+    val mids = Seq(0.2131, 0.2037, 0.1755, 0.2117, 0.157, 0.2231, 0.2282,
+      0.1684, 0.1466, 0.1913, 0.1896, 0.1994, 0.1697)
+    assert(!Bench.contaminatedFlag(0.1031, mids, 0.06, 4))
+    assert(Bench.contaminatedFlag(0.1031, mids :+ 3.2, 0.06, 4))
+    // a lone mid probe is its own median, so only the absolute gate can
+    // fire: 8x the 4-core floor, 2.0 s
+    assert(Bench.contaminatedFlag(0.1031, Seq(2.1), 0.06, 4))
+    assert(!Bench.contaminatedFlag(0.1031, Seq(1.9), 0.06, 4))
   }
 
   test("Bench artifacts: filtered runs get their own collision-safe file") {

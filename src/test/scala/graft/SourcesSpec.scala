@@ -375,7 +375,7 @@ class SourcesSpec extends AnyFunSuite {
       .toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc")
     val genome = TranscriptAnnotator.FixedGenome(Map("1" -> "ATGGCCTAAGGGTTTCCC"))
     val out = TranscriptAnnotator.annotate(v, m.genes, m.transcripts,
-        m.features, genome, binWidth = 8)
+        m.features, genome)
       .collect().map(a => a.location -> a).toMap
     assert(out("EXON").syn_status.contains("nonsynonymous"))
     assert(out.keys.exists(_.contains("NON-CODING")))
@@ -422,7 +422,7 @@ class SourcesSpec extends AnyFunSuite {
     val t = Seq((10L, 1L, "+", false)).toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = Seq((10L, "EXONS", 1L, 9L)).toDF("tr_id", "ftype", "fstart", "fstop")
     def annotated(genome: TranscriptAnnotator.GenomeSource) =
-      TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8).collect().toSeq
+      TranscriptAnnotator.annotate(v, g, t, f, genome).collect().toSeq
     val a = annotated(fa)
     assert(a.head.ref_aa.contains("A") && a.head.var_aa.contains("V"))
     assert(a == annotated(TranscriptAnnotator.FixedGenome(
@@ -487,7 +487,7 @@ class SourcesSpec extends AnyFunSuite {
     val gn = Seq((1L, "1", 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop")
     val t = Seq((10L, 1L, "+", false)).toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = Seq((10L, "EXONS", 1L, 9L)).toDF("tr_id", "ftype", "fstart", "fstop")
-    val a = TranscriptAnnotator.annotate(v, gn, t, f, g, binWidth = 8)
+    val a = TranscriptAnnotator.annotate(v, gn, t, f, g)
       .collect().head
     assert(a.ref_aa.contains("A") && a.var_aa.contains("V"))
   }

@@ -24,7 +24,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     val g = Seq((1L, "1", 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop")
     val t = transcripts.toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = features.toDF("tr_id", "ftype", "fstart", "fstop")
-    TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8)
+    TranscriptAnnotator.annotate(v, g, t, f, genome)
       .collect().map(a => (a.var_id, a.tr_id) -> a).toMap
   }
 
@@ -201,7 +201,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     val g = Seq((1L, "1", 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop")
     val t = Seq((10L, 1L, "+", false)).toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = Seq((10L, "EXONS", 1L, 9L)).toDF("tr_id", "ftype", "fstart", "fstop")
-    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8)
+    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome)
     val existing = Seq((1L, 10L)).toDF("var_id", "tr_id")
     val out = TranscriptAnnotator.verifyIfInRgd(ann, existing).collect()
     assert(out.map(a => (a.var_id, a.tr_id)).toSet == Set((2L, 10L)))
@@ -229,7 +229,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
         genes.toDF("gene_id", "chr", "gstart", "gstop"),
         transcripts.toDF("tr_id", "gene_id", "strand", "non_coding"),
         features.toDF("tr_id", "ftype", "fstart", "fstop"),
-        genome, binWidth = 8)
+        genome)
       .collect().toSeq.sortBy(a => (a.var_id, a.tr_id, a.location))
 
   // plus-strand exon 1..9 with C>T at 5: GCC -> GTC, A -> V at AA 2
@@ -309,17 +309,55 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       out.mkString("\n"))
   }
 
+  test("gene lookup equals brute-force containment on random gene sets") {
+    // nested, overlapping, identical, touching and inverted ranges around
+    // random genes on two chromosomes, one gene spanning each chromosome
+    // and one gene row listed twice; variants at every gene's bounds and
+    // one base outside them
+    val rnd = new scala.util.Random(17)
+    val len = 300
+    val chrs = Seq("1", "2")
+    val g2 = FixedGenome(chrs.map(_ -> Seq.fill(len)("ACGT"(rnd.nextInt(4)))
+      .mkString).toMap)
+    val genes = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
+    def gene(c: String, s: Long, e: Long): Unit = genes += ((genes.size + 1L, c, s, e))
+    for (c <- chrs) {
+      gene(c, 1L, len.toLong)
+      for (_ <- 1 to 10) {
+        val s = 1L + rnd.nextInt(len - 40); val e = s + rnd.nextInt(30)
+        gene(c, s, e)
+        val kin = Seq((s + (e - s) / 3, e - (e - s) / 3), (s + (e - s) / 2, e + 12),
+          (s, e), (e + 1, e + 6), (e, e + 4), (e, s - 1))
+        kin.filter(_ => rnd.nextInt(3) > 0).foreach { case (a, b) => gene(c, a, b) }
+      }
+    }
+    genes += genes(3)
+    val trs = genes.map(_._1).distinct.flatMap(id =>
+      (0 to (id % 3 / 2).toInt).map(j => (id * 10 + j, id, "+", false)))
+    val vars = (for ((_, c, s, e) <- genes; p <- Seq(s, e, s - 1, e + 1))
+      yield (c, p)).zipWithIndex.map { case ((c, p), i) => (i.toLong, c, p, "A", "C") }
+    val want = (for ((vid, vc, p, _, _) <- vars; (gid, gc, s, e) <- genes
+        if vc == gc && s <= p && p <= e; (tid, tg, _, _) <- trs if tg == gid)
+      yield (vid, tid)).sorted
+    val got = rows(g2, vars.toSeq, genes.toSeq, trs.toSeq, Nil)
+      .map(a => (a.var_id, a.tr_id)).sorted
+    assert(want.nonEmpty && got == want.toSeq,
+      s"missing ${want.diff(got)}, extra ${got.diff(want)}")
+  }
+
   test("one chromosome over persisted tables: one model pass, no stream " +
     "exchange, at most 6 jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-    import org.apache.spark.sql.execution.{DeserializeToObjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec,
+      SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
       QueryStageExec, ShuffleQueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
-      ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.types.ArrayType
     import org.apache.spark.storage.StorageLevel
 
@@ -417,6 +455,13 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     val arrays = apply.collect { case d: DeserializeToObjectExec =>
       d.child.output.filter(_.dataType.isInstanceOf[ArrayType]) }.flatten
     assert(arrays.isEmpty, s"arrays deserialized per row: $arrays\n$applyPlan")
+    // and no join, broadcast or generator: the gene ranges are in the model
+    val lookups = apply.collect {
+      case j: BaseJoinExec => j
+      case b: BroadcastExchangeLike => b
+      case g: GenerateExec => g
+    }
+    assert(lookups.isEmpty, s"gene lookup planned in the apply plan:\n$applyPlan")
 
     val ours = jobs.asScala.count(_._2 == "annotate-one-chr")
     assert(ours >= 1 && ours <= 6, s"$ours jobs for one annotate call")
@@ -437,25 +482,28 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     val model = TranscriptAnnotator.model(g, t, f, genome)
     def sorted(a: Array[Annotated]) = a.toSeq.sortBy(x => (x.var_id, x.tr_id))
     for (vs <- frames) {
-      val shared = sorted(TranscriptAnnotator.apply(vs, model, binWidth = 8).collect())
-      val fresh = sorted(TranscriptAnnotator.annotate(vs, g, t, f, genome, binWidth = 8).collect())
+      val shared = sorted(TranscriptAnnotator.apply(vs, model).collect())
+      val fresh = sorted(TranscriptAnnotator.annotate(vs, g, t, f, genome).collect())
       assert(shared.length == 9 && shared == fresh, s"$shared\n$fresh")
     }
   }
 
   test("null gene_id or chr never matches") {
     // the old (gene_id, chr) inner join matched no null key; a variant
-    // with no chr and a gene row with no gene_id or chr produce nothing
+    // with no chr or pos and a gene row with no gene_id, chr or gstart
+    // produce nothing
     val out = TranscriptAnnotator.annotate(
-        Seq((1L, Some("1"), 5L, "C", "T"), (2L, None, 5L, "C", "T"))
+        Seq((1L, Some("1"), Some(5L), "C", "T"), (2L, None, Some(5L), "C", "T"),
+          (3L, Some("1"), None, "C", "T"))
           .toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"),
-        Seq((Some(1L), Some("1"), 1L, 18L), (None, Some("1"), 1L, 18L),
-          (Some(1L), None, 1L, 18L)).toDF("gene_id", "chr", "gstart", "gstop"),
+        Seq((Some(1L), Some("1"), Some(1L), 18L), (None, Some("1"), Some(1L), 18L),
+          (Some(1L), None, Some(1L), 18L), (Some(1L), Some("1"), None, 18L))
+          .toDF("gene_id", "chr", "gstart", "gstop"),
         Seq((10L, Some(1L), "+", false), (11L, None, "+", false))
           .toDF("tr_id", "gene_id", "strand", "non_coding"),
         Seq((10L, "EXONS", 1L, 9L), (11L, "EXONS", 1L, 9L))
           .toDF("tr_id", "ftype", "fstart", "fstop"),
-        genome, binWidth = 8)
+        genome)
       .collect()
     assert(out.map(a => (a.var_id, a.tr_id)).toSeq == Seq((1L, 10L)),
       out.mkString("\n"))

@@ -24,7 +24,7 @@ class VerifyAaSpec extends AnyFunSuite {
     val t = transcripts.toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = transcripts.map(tr => (tr._1, "EXONS", 1L, 9L))
       .toDF("tr_id", "ftype", "fstart", "fstop")
-    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8)
+    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome)
     val row = VerifyAa.audit(ann.toDF(), t).collect().head
     row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap
   }
@@ -58,7 +58,7 @@ class VerifyAaSpec extends AnyFunSuite {
     val t = Seq((10L, 1L, "+", false)).toDF("tr_id", "gene_id", "strand", "non_coding")
     val f = Seq((10L, "EXONS", 1L, 9L)).toDF("tr_id", "ftype", "fstart", "fstop")
     import org.apache.spark.sql.functions.lit
-    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome, binWidth = 8)
+    val ann = TranscriptAnnotator.annotate(v, g, t, f, genome)
       .toDF().withColumn("var_aa", lit("Q")) // corrupt the stored AA
     val row = VerifyAa.audit(ann, t).collect().head
     assert(row.getAs[Long]("mismatches") == 1 &&
