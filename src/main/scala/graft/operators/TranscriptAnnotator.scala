@@ -17,16 +17,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * the AA change, synonymous status and frameshift.
   *
   * Spark shape vs the reference's: the GeneCache / TranscriptCache
-  * HashMaps → [[model]], one collected query (the transcripts, built in
-  * one tr_id-keyed pass, and the gene rows), broadcast as a per-chromosome
-  * gene index whose rows carry their transcripts; the per-variant cursor
-  * loop → [[apply]], one typed pass that looks each variant up in that
-  * index and computes the flags and the AA call in plain Scala, with no
-  * join and no shuffle; chromosome FASTA file reads → a pluggable
-  * [[GenomeSource]] read in the model pass, once per coding transcript
-  * (real deployments back it with [[graft.sources.PackedGenome]]; tests
-  * use [[FixedGenome]]; the synthetic default [[Md5Genome]] is
-  * reproducible in SQL, so the full pipeline has a DuckDB oracle).
+  * HashMaps → [[model]], one collected narrow query (the gene rows, the
+  * transcript rows and their exon and UTR rows, with no join, exchange
+  * or aggregate) that the driver assembles into a per-chromosome gene
+  * index whose rows carry their transcripts, broadcast once; the
+  * per-variant cursor loop → [[apply]], one typed pass that looks each
+  * variant up in that index and computes the flags and the AA call in
+  * plain Scala, with no join and no shuffle; chromosome FASTA file reads
+  * → a pluggable [[GenomeSource]] read in the apply tasks, once per
+  * coding transcript a coding exonic variant reaches (real deployments
+  * back it with [[graft.sources.PackedGenome]]; tests use
+  * [[FixedGenome]]; the synthetic default [[Md5Genome]] is reproducible
+  * in SQL, so the full pipeline has a DuckDB oracle).
   */
 object TranscriptAnnotator {
 
@@ -95,43 +97,68 @@ object TranscriptAnnotator {
       exons: Seq[ExonIv], cds_plus: Option[String])
   case class ExonIv(start: Long, stop: Long)
 
-  /** One transcript of the model. A missing bound fails every comparison,
-    * as SQL's null does: start Long.MaxValue, stop Long.MinValue. */
-  private[operators] case class Tr(gene_id: String, chr: String,
+  /** One transcript of the model, under one gene row's chromosome. A
+    * missing bound fails every comparison, as SQL's null does: start
+    * Long.MaxValue, stop Long.MinValue. `cds_plus`, a coding transcript's
+    * plus-strand CDS (its trimmed exons read from `genome`, lower case), is
+    * read on first use, by the first coding exonic pair that reaches the
+    * transcript: a transcript no variant reaches is never read. The value
+    * is not shipped with the broadcast, so each JVM that deserializes the
+    * model reads it once: in local mode the broadcast value is one shared
+    * object, so once per session; on a cluster once per executor. */
+  private[operators] final case class Tr(chr: String,
       tr_id: Long, strand: String, non_coding: Boolean,
       ex_start: Array[Long], ex_stop: Array[Long],
       u3s: Long, u3e: Long, u5s: Long, u5e: Long,
-      trimmed: Seq[ExonIv], cds_plus: Option[String])
+      trimmed: Seq[ExonIv], genome: GenomeSource) {
+    @transient lazy val cds_plus: Option[String] =
+      if (non_coding || trimmed.isEmpty) None
+      else Some(trimmed.map(e => genome.chunk(chr, e.start, e.stop)).mkString
+        .toLowerCase)
+  }
   private[operators] case class Var(var_id: Long, chr: String,
       pos: Long, ref_nuc: String, var_nuc: String)
   private[operators] case class GeneRow(gene_id: String, chr: String,
       gstart: Long, gstop: Long)
-  /** A row of [[model]]'s collected query: a transcript or a gene row. */
-  private[operators] case class ModelRow(tr: Tr, gene: GeneRow)
 
   /** One chromosome's gene rows, each with its transcripts, sorted by
-    * gstart. `reach(i)` is the largest gstop of rows 0..i, so the walk
-    * back from the last row starting at or before a position ends at the
-    * first row whose reach falls short of it: no earlier row holds it.
-    * A lookup costs O(log n + rows walked), and the walk passes every row
-    * after a long one: past a gene row spanning the chromosome each lookup
-    * reads all rows before it. Genes of a few kb keep the walk short; an
-    * index for long intervals needs the max gstop per subtree instead. */
+    * gstart: an implicit augmented interval tree. The subtree over rows
+    * [lo, hi) has its root at mid = (lo + hi) / 2, and `maxStop(mid)` is
+    * the largest gstop in that subtree. A lookup skips every subtree
+    * whose maxStop falls short of the position and every right subtree of
+    * a row starting after it, so it visits one root-to-leaf path plus
+    * the paths to the rows it finds: O(log n) per row found, O(log n)
+    * when none holds the position, however long the genes are. */
   private[operators] final class ChrGenes(rows: Seq[(GeneRow, Array[Tr])])
       extends Serializable {
     private val sorted = rows.sortBy(_._1.gstart).toArray
-    private val reach =
-      sorted.scanLeft(Long.MinValue)((m, r) => math.max(m, r._1.gstop)).tail
-
-    /** The transcripts of every gene row whose [gstart, gstop] holds `pos`. */
-    def containing(pos: Long): Iterator[Tr] = {
-      var (lo, hi) = (0, sorted.length)
-      while (lo < hi) {
+    private val maxStop = new Array[Long](sorted.length)
+    private def build(lo: Int, hi: Int): Long =
+      if (lo >= hi) Long.MinValue
+      else {
         val mid = (lo + hi) >>> 1
-        if (sorted(mid)._1.gstart <= pos) lo = mid + 1 else hi = mid
+        maxStop(mid) = math.max(sorted(mid)._1.gstop,
+          math.max(build(lo, mid), build(mid + 1, hi)))
+        maxStop(mid)
       }
-      Iterator.range(lo - 1, -1, -1).takeWhile(reach(_) >= pos)
-        .filter(sorted(_)._1.gstop >= pos).flatMap(sorted(_)._2)
+    build(0, sorted.length)
+
+    /** The transcripts of every gene row whose [gstart, gstop] holds
+      * `pos`, the rows in gstart order. */
+    def containing(pos: Long): Iterator[Tr] = {
+      val hits = scala.collection.mutable.ArrayBuffer[Int]()
+      def visit(lo: Int, hi: Int): Unit = if (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (maxStop(mid) >= pos) {
+          visit(lo, mid)
+          if (sorted(mid)._1.gstart <= pos) {
+            if (sorted(mid)._1.gstop >= pos) hits += mid
+            visit(mid + 1, hi)
+          }
+        }
+      }
+      visit(0, sorted.length)
+      hits.iterator.flatMap(sorted(_)._2)
     }
   }
 
@@ -161,8 +188,8 @@ object TranscriptAnnotator {
   private def normSeq(s: String): String =
     if (s == null || s == "-") "" else s
 
-  /** [[apply]] over a fresh [[model]], which is built eagerly: its Spark
-    * jobs run before this returns.
+  /** [[apply]] over a fresh [[model]], which is built eagerly: its one
+    * Spark job runs before this returns.
     *
     * @param variants    var_id, chr, pos, ref_nuc, var_nuc ('' or '-' for
     *                    the empty side of an ins/del)
@@ -214,110 +241,111 @@ object TranscriptAnnotator {
   }
 
   /** The variant-independent side, built EAGERLY: per (gene_id, chr,
-    * tr_id) of the genes passed in, the sorted exon and UTR bounds, the
-    * UTR-trimmed exons and, if coding, the plus-strand CDS. Transcript
-    * rows and feature rows meet in ONE tr_id-hashed exchange; the stage
-    * after it reads each CDS once, on the executors. The result is
-    * collected (as a broadcast join of it would be) together with the gene
-    * rows, a second branch of the same query, and broadcast once as a
-    * [[ChrGenes]] index per chromosome. A transcript under several genes
-    * (GFF3 `Parent=a,b`) yields one entry per gene, a gene_id on two
-    * chromosomes one per chromosome (each CDS read from its own);
-    * identical duplicate transcript rows collapse, duplicate gene rows do
-    * not. A gene row with a null key or bound, or with gstart > gstop,
-    * holds no position and is dropped. */
+    * tr_id) of the genes passed in, the sorted exon and UTR bounds and
+    * the UTR-trimmed exons, broadcast once as a [[ChrGenes]] index per
+    * chromosome. One narrow query runs one job: the union of the gene
+    * rows, the transcript rows and the EXONS / 3UTRS / 5UTRS feature rows,
+    * each input scanned once, with no join, exchange or aggregate; the
+    * driver assembles the model from the collected rows in plain Scala.
+    * The collect moves every transcript row and every feature row of
+    * those three types passed in, so a per-chromosome call over
+    * genome-wide tables moves the whole feature table to the driver once.
+    * No CDS is read here: each coding [[Tr]] reads its own on first use,
+    * in the apply tasks.
+    *
+    * A transcript row matches every kept gene row of its gene_id (keys
+    * compared as strings); one with a null tr_id, gene_id or non_coding
+    * matches nothing. A transcript under several genes (GFF3
+    * `Parent=a,b`) yields one entry per gene, a gene_id on two chromosomes
+    * one per chromosome (each CDS read from its own); identical duplicate
+    * transcript rows collapse, duplicate gene rows do not. A gene row with
+    * a null key or bound, or with gstart > gstop, holds no position and
+    * is dropped. */
   def model(genes: DataFrame, transcripts: DataFrame, features: DataFrame,
             genome: GenomeSource): Model = {
     val spark = genes.sparkSession
-    import spark.implicits._
-    val txRows = transcripts
-      .join(broadcast(genes.select("gene_id", "chr")), "gene_id")
-      .select(col("tr_id"), struct(col("gene_id"), col("chr"),
-        col("strand"), col("non_coding")).as("tx"))
-    val rows = txRows
-      .unionByName(features.select(col("tr_id"), col("ftype"),
-          col("fstart").cast("long").as("fstart"),
-          col("fstop").cast("long").as("fstop")),
-        allowMissingColumns = true)
-      // The partition count is EXPLICIT: this exchange carries tens of
-      // bytes per row but the stage after it does per-BASE genome work,
-      // so AQE's byte-sized coalescing would fold it onto one core
-      // (measured: 1 task, 1.7 s of a 4.3 s query)
-      .repartition(spark.sparkContext.defaultParallelism, col("tr_id"))
-
-    val ftype = col("ftype")
-    def utr(kind: String, c: String) = min(when(ftype === kind, col(c)))
-    val perTr = rows.groupBy("tr_id").agg(
-      collect_set(col("tx")).as("txs"),
-      array_sort(collect_list(when(ftype === "EXONS",
-        struct(col("fstart"), col("fstop"))))).as("ex"),
-      // at most one UTR of each kind per transcript (reference assumption)
-      utr("3UTRS", "fstart").as("u3s"), utr("3UTRS", "fstop").as("u3e"),
-      utr("5UTRS", "fstart").as("u5s"), utr("5UTRS", "fstop").as("u5e"))
-
-    val g = genome
-    val cds = udf((chr: String, ex: Seq[Row]) =>
-      ex.map(e => g.chunk(chr, e.getLong(0), e.getLong(1))).mkString
-        .toLowerCase)
-    def or(c: Column, absent: Long) = coalesce(c, lit(absent))
-    // explode drops tr_ids with features but no transcript under the
-    // genes passed in; a transcript with no EXONS features keeps its row
-    // with an empty `ex` (the reference emits an INTRON VARIANT_TRANSCRIPT
-    // for it — processChromosome "not found means INTRON")
-    val trs = perTr.withColumn("tx", explode(col("txs")))
-      .select(col("tx.*"), col("tr_id"), col("ex"),
-        col("u3s"), col("u3e"), col("u5s"), col("u5e"))
-      .withColumn("trimmed", trimmedOf(col("ex")))
-      .select(col("gene_id").cast("string").as("gene_id"),
-        col("chr").cast("string").as("chr"), col("tr_id").cast("long").as("tr_id"),
-        col("strand"), col("non_coding"),
-        transform(col("ex"), e => or(e("fstart"), Long.MaxValue)).as("ex_start"),
-        transform(col("ex"), e => or(e("fstop"), Long.MinValue)).as("ex_stop"),
-        or(col("u3s"), Long.MaxValue).as("u3s"), or(col("u3e"), Long.MinValue).as("u3e"),
-        or(col("u5s"), Long.MaxValue).as("u5s"), or(col("u5e"), Long.MinValue).as("u5e"),
-        col("trimmed"), when(!col("non_coding") && size(col("trimmed")) > 0,
-          cds(col("chr").cast("string"), col("trimmed"))).as("cds_plus"))
-    val geneRows = genes.select(col("gene_id").cast("string").as("gene_id"),
-        col("chr").cast("string").as("chr"), col("gstart").cast("long").as("gstart"),
-        col("gstop").cast("long").as("gstop"))
+    def nested(name: String, cols: Column*) = struct(cols: _*).as(name)
+    val geneRows = genes
       .filter(col("gene_id").isNotNull && col("chr").isNotNull &&
-        col("gstart") <= col("gstop"))
-    def nested(df: DataFrame, name: String) =
-      df.select(struct(df.columns.map(col).toIndexedSeq: _*).as(name))
-    val parts = nested(trs, "tr")
-      .unionByName(nested(geneRows, "gene"), allowMissingColumns = true)
-      .as[ModelRow].collect()
-    val byGene = parts.flatMap(p => Option(p.tr)).groupBy(t => (t.gene_id, t.chr))
-    val byChr = parts.flatMap(p => Option(p.gene))
-      .flatMap(g => byGene.get((g.gene_id, g.chr)).map(g -> _))
-      .groupBy(_._1.chr).map { case (c, rows) => c -> new ChrGenes(rows.toSeq) }
+        col("gstart").cast("long") <= col("gstop").cast("long"))
+      .select(nested("gene", col("gene_id").cast("string").as("gene_id"),
+        col("chr").cast("string").as("chr"), col("gstart").cast("long").as("gstart"),
+        col("gstop").cast("long").as("gstop")))
+    val txRows = transcripts
+      .filter(col("tr_id").isNotNull && col("gene_id").isNotNull &&
+        col("non_coding").isNotNull)
+      .select(nested("tx", col("tr_id").cast("long").as("tr_id"),
+        col("gene_id").cast("string").as("gene_id"),
+        col("strand").cast("string").as("strand"),
+        col("non_coding").cast("boolean").as("non_coding")))
+    // other feature types feed no bound of the model
+    val featRows = features
+      .filter(col("tr_id").isNotNull && col("ftype").isin("EXONS", "3UTRS", "5UTRS"))
+      .select(nested("ft", col("tr_id").cast("long").as("tr_id"), col("ftype"),
+        col("fstart").cast("long").as("fstart"), col("fstop").cast("long").as("fstop")))
+    val rows = geneRows.unionByName(txRows, allowMissingColumns = true)
+      .unionByName(featRows, allowMissingColumns = true).collect()
+    def part(name: String) = rows.flatMap(r => Option(r.getAs[Row](name)))
+    def bound(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+    val kept = part("gene").map(g =>
+      GeneRow(g.getString(0), g.getString(1), g.getLong(2), g.getLong(3)))
+    val chrsOf = kept.groupBy(_.gene_id).map { case (id, gs) => id -> gs.map(_.chr).distinct }
+    // per tr_id, one entry per distinct (gene_id, chr, strand, non_coding)
+    val txs = part("tx").flatMap(t => chrsOf.getOrElse(t.getString(1), Array.empty[String])
+      .map(c => (t.getLong(0), t.getString(1), c, t.getString(2), t.getBoolean(3)))).distinct
+    val trIds = txs.map(_._1).toSet
+    val featsOf = part("ft").filter(f => trIds(f.getLong(0))).groupBy(_.getLong(0))
+      .map { case (id, fs) => id -> new Feats(fs.toSeq.map(f =>
+        (f.getString(1), bound(f, 2), bound(f, 3)))) }
+    val none = new Feats(Nil)
+    val byGene = txs.groupBy(t => (t._2, t._3)).map { case (key, ts) =>
+      key -> ts.map { case (id, _, chr, strand, nc) =>
+        featsOf.getOrElse(id, none).tr(chr, id, strand, nc, genome) }
+    }
+    val byChr = kept.flatMap(g => byGene.get((g.gene_id, g.chr)).map(g -> _))
+      .groupBy(_._1.chr).map { case (c, rs) => c -> new ChrGenes(rs.toSeq) }
     new Model(spark.sparkContext.broadcast(byChr))
   }
-  /** handleUTRs (VariantPostProcessing.java:626-668): trim each exon of
-    * `ex` against the 3'UTR tail and 5'UTR head (columns u3s/u5e, or
-    * u5s/u3e on the '-' strand, where the UTRs swap roles —
-    * VariantPostProcessing.java:405-412); fully-covered exons drop.
-    * Exons are disjoint and fstart-sorted, trimming only shrinks spans,
-    * so the result stays sorted — array_sort kept for caller-supplied
-    * overlapping exon models. */
-  private def trimmedOf(ex: Column): Column = {
-    val minus = col("strand") === "-"
-    val e3s = when(minus, col("u5s")).otherwise(col("u3s"))
-    val e5e = when(minus, col("u3e")).otherwise(col("u5e"))
-    array_sort(filter(
-      transform(ex, e => {
-        val ts = when(e5e.isNull || e.getField("fstart") > e5e,
-            e.getField("fstart"))
-          .when(e.getField("fstop") > e5e, e5e + 1)
-          .otherwise(lit(null))
-        val te = when(e3s.isNull || e.getField("fstop") < e3s,
-            e.getField("fstop"))
-          .when(e.getField("fstart") < e3s, e3s - 1)
-          .otherwise(lit(null))
-        struct(ts.cast("long").as("start"), te.cast("long").as("stop"))
-      }),
-      s => s.getField("start").isNotNull && s.getField("stop").isNotNull &&
-        s.getField("start") <= s.getField("stop")))
+
+  /** One tr_id's features as (ftype, fstart, fstop), a missing bound None. */
+  private final class Feats(fs: Seq[(String, Option[Long], Option[Long])]) {
+    /** EXONS bounds sorted as Spark's `array_sort` sorts the structs: by
+      * start then stop, a missing bound first. */
+    private val ex = fs.collect { case ("EXONS", s, e) => (s, e) }.sorted
+    // at most one UTR of each kind per transcript (reference assumption)
+    private def least(kind: String,
+        bound: ((String, Option[Long], Option[Long])) => Option[Long]) =
+      fs.filter(_._1 == kind).flatMap(bound).minOption
+    private val (u3s, u3e) = (least("3UTRS", _._2), least("3UTRS", _._3))
+    private val (u5s, u5e) = (least("5UTRS", _._2), least("5UTRS", _._3))
+
+    /** handleUTRs (VariantPostProcessing.java:626-668): trim each exon
+      * against the 3'UTR tail and 5'UTR head (u3s/u5e, or u5s/u3e on the
+      * '-' strand, where the UTRs swap roles — VariantPostProcessing.java:
+      * 405-412); fully-covered exons drop. A comparison with a missing
+      * bound fails, as SQL's null does. Exons are disjoint and sorted,
+      * trimming only shrinks spans, so the result stays sorted; the sort
+      * is kept for caller-supplied overlapping exon models. */
+    private def trimmed(minus: Boolean): Seq[ExonIv] = {
+      val (e3s, e5e) = if (minus) (u5s, u3e) else (u3s, u5e)
+      ex.flatMap { case (fs, fe) =>
+        val ts = e5e.fold(fs)(h =>
+          if (fs.exists(_ > h)) fs else if (fe.exists(_ > h)) Some(h + 1) else None)
+        val te = e3s.fold(fe)(t =>
+          if (fe.exists(_ < t)) fe else if (fs.exists(_ < t)) Some(t - 1) else None)
+        for (s <- ts; e <- te if s <= e) yield ExonIv(s, e)
+      }.sortBy(e => (e.start, e.stop))
+    }
+
+    def tr(chr: String, trId: Long, strand: String, nonCoding: Boolean,
+           genome: GenomeSource): Tr =
+      Tr(chr, trId, strand, nonCoding,
+        ex.map(_._1.getOrElse(Long.MaxValue)).toArray,
+        ex.map(_._2.getOrElse(Long.MinValue)).toArray,
+        u3s.getOrElse(Long.MaxValue), u3e.getOrElse(Long.MinValue),
+        u5s.getOrElse(Long.MaxValue), u5e.getOrElse(Long.MinValue),
+        trimmed(strand == "-"), genome)
   }
 
   /** `--verifyIfInRgd` (the EVA runs, postProcessingEva.sh): drop

@@ -57,30 +57,30 @@ object VariantPipeline {
       .otherwise(Zygosity.percentRead(col("allele_depth"), col("read_depth")))
     val inPar = Par.inPar(col("chr"), col("pos"), parRegions)
 
-    cf2
-      .withColumn("gender", gender)
-      .withColumn("variant_type", VariantF.variantType(col("ref_nuc"), col("var_nuc")))
-      .withColumn("end_pos", VariantF.endPos(col("pos"), col("ref_nuc"), col("var_nuc")))
-      .withColumn("quality_score", VariantF.qualityScore(col("read_depth"), totalDepth))
-      .withColumn("dbsnp_class", VariantF.dbSnpClass(
-        when(col("rs_id") === ".", "").otherwise(col("rs_id"))))
-      .withColumn("zygosity_status",
-        Zygosity.status(pct, col("gender"), col("chr"), inPar))
-      .withColumn("zygosity_percent_read", pctReads)
-      .withColumn("zygosity_possible_error", Zygosity.possibleError(pct))
+    // one projection: a withColumn chain re-analyses the growing plan once
+    // per column
+    cf2.withColumn("gender", gender).select(col("*") +: Seq(
+      VariantF.variantType(col("ref_nuc"), col("var_nuc")).as("variant_type"),
+      VariantF.endPos(col("pos"), col("ref_nuc"), col("var_nuc")).as("end_pos"),
+      VariantF.qualityScore(col("read_depth"), totalDepth).as("quality_score"),
+      VariantF.dbSnpClass(when(col("rs_id") === ".", "").otherwise(col("rs_id")))
+        .as("dbsnp_class"),
+      Zygosity.status(pct, col("gender"), col("chr"), inPar).as("zygosity_status"),
+      pctReads.as("zygosity_percent_read"),
+      Zygosity.possibleError(pct).as("zygosity_possible_error"),
       // num-alleles comes from the ACGT counts, which only the SNV path
       // fills; the reference leaves it unset for indels
-      .withColumn("zygosity_num_allele", when(isSnv, Zygosity.numAlleles(
-        col("count_a"), col("count_c"), col("count_g"), col("count_t"))))
+      when(isSnv, Zygosity.numAlleles(col("count_a"), col("count_c"),
+        col("count_g"), col("count_t"))).as("zygosity_num_allele"),
       // indels carry a ref-allele flag only for a single-base ref
       // (VariantLoad3.java:323-338); SNVs always
-      .withColumn("zygosity_ref_allele",
-        when(isSnv || length(col("ref_nuc")) === 1,
-          Zygosity.refAlleleCalled(col("ref_nuc"),
-            col("count_a"), col("count_c"), col("count_g"), col("count_t"))))
-      .withColumn("zygosity_in_pseudo",
-        Par.inPseudo(col("gender"), col("chr"), col("pos"), parRegions))
-      .withColumn("variant_frequency", varReads)
+      when(isSnv || length(col("ref_nuc")) === 1,
+        Zygosity.refAlleleCalled(col("ref_nuc"),
+          col("count_a"), col("count_c"), col("count_g"), col("count_t")))
+        .as("zygosity_ref_allele"),
+      Par.inPseudo(col("gender"), col("chr"), col("pos"), parRegions)
+        .as("zygosity_in_pseudo"),
+      varReads.as("variant_frequency")): _*)
       // reference drops variants whose zygosity score is zero: varReads
       // for SNVs, alleleDepth for indels (VariantLoad3.java:339-346)
       .filter((isSnv && varReads > 0) || (!isSnv && col("allele_depth") > 0))

@@ -101,9 +101,6 @@ class EntrySpec extends AnyFunSuite {
     "text_collocations" -> "transform over per-document bigram array (≤ text length ~102)",
     "vcf_merge_multisample" -> "sort/transform over per-site sample list (bounded by strain count)",
     "vocab_growth" -> "transform over the driver-scale checkpoint frame (the documented bounded window frame)",
-    "q24_annotate_variants" -> "transform/filter/array_sort over the per-transcript exon array in the eagerly collected annotator model (bounded by exons-per-transcript, ≤3 here, ~tens in a real gene model; one row per transcript, not per variant — the apply plan has none)",
-    "q32_verify_aa" -> "same annotator model query as q24 (shared derivation)",
-    "variant_dnds" -> "same annotator model query as q24 (shared derivation)",
     "bpe_merge_step" -> "transform over a distinct word's character positions (≤ word length), in the sorted input TopK.ranked turns into an RDD to number ranks (the returned plan shows only the RDD scan)",
     "events_top_paths" -> "array_sort/transform over each user's first 3 events (rn ≤ 3), in the sorted input TopK.ranked turns into an RDD to number ranks (the returned plan shows only the RDD scan)",
     "text_bigram_ppl" -> "transform over per-document word positions (≤ text length ~102), in the checkpointed bigram frame",

@@ -310,13 +310,33 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
   }
 
   test("gene lookup equals brute-force containment on random gene sets") {
+    val chrs = Seq("1", "2")
+    // (var_id, tr_id) pairs of `apply` against brute-force containment;
+    // every gene row has one or two transcripts and no features
+    def check(genome: FixedGenome, genes: Seq[(Long, String, Long, Long)],
+              positions: Seq[(String, Long)]): Unit = {
+      val trs = genes.map(_._1).distinct.flatMap(id =>
+        (0 to (id % 3 / 2).toInt).map(j => (id * 10 + j, id, "+", false)))
+      val trsOf = trs.groupBy(_._2)
+      val vars = positions.zipWithIndex.map { case ((c, p), i) =>
+        (i.toLong, c, p, "A", "C") }
+      val want = (for ((vid, vc, p, _, _) <- vars; (gid, gc, s, e) <- genes
+          if vc == gc && s <= p && p <= e; (tid, _, _, _) <- trsOf(gid))
+        yield (vid, tid)).sorted
+      val got = rows(genome, vars, genes, trs, Nil)
+        .map(a => (a.var_id, a.tr_id)).sorted
+      assert(want.nonEmpty && got == want,
+        s"missing ${want.diff(got).take(20)}, extra ${got.diff(want).take(20)}")
+    }
+    def bounds(genes: Seq[(Long, String, Long, Long)]) =
+      for ((_, c, s, e) <- genes; p <- Seq(s, e, s - 1, e + 1)) yield (c, p)
+
     // nested, overlapping, identical, touching and inverted ranges around
     // random genes on two chromosomes, one gene spanning each chromosome
     // and one gene row listed twice; variants at every gene's bounds and
     // one base outside them
     val rnd = new scala.util.Random(17)
     val len = 300
-    val chrs = Seq("1", "2")
     val g2 = FixedGenome(chrs.map(_ -> Seq.fill(len)("ACGT"(rnd.nextInt(4)))
       .mkString).toMap)
     val genes = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
@@ -332,23 +352,28 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
       }
     }
     genes += genes(3)
-    val trs = genes.map(_._1).distinct.flatMap(id =>
-      (0 to (id % 3 / 2).toInt).map(j => (id * 10 + j, id, "+", false)))
-    val vars = (for ((_, c, s, e) <- genes; p <- Seq(s, e, s - 1, e + 1))
-      yield (c, p)).zipWithIndex.map { case ((c, p), i) => (i.toLong, c, p, "A", "C") }
-    val want = (for ((vid, vc, p, _, _) <- vars; (gid, gc, s, e) <- genes
-        if vc == gc && s <= p && p <= e; (tid, tg, _, _) <- trs if tg == gid)
-      yield (vid, tid)).sorted
-    val got = rows(g2, vars.toSeq, genes.toSeq, trs.toSeq, Nil)
-      .map(a => (a.var_id, a.tr_id)).sorted
-    assert(want.nonEmpty && got == want.toSeq,
-      s"missing ${want.diff(got)}, extra ${got.diff(want)}")
+    check(g2, genes.toSeq, bounds(genes.toSeq))
+
+    // about 2,000 genes per chromosome of up to 600 bases, a few of them
+    // spanning most or all of the chromosome; variants at the bounds of
+    // 300 of them per chromosome and at 200 random positions
+    val big = new scala.util.Random(29)
+    val bigLen = 200000L
+    val many = chrs.flatMap { c =>
+      val spans = Seq((1L, bigLen), (1L, bigLen), (2L, bigLen - 1),
+        (1L, bigLen / 2), (bigLen / 3, bigLen))
+      val short = Seq.fill(2000) {
+        val s = 1L + big.nextInt(bigLen.toInt - 600); (s, s + big.nextInt(600))
+      }
+      (spans ++ short).map { case (s, e) => (c, s, e) }
+    }.zipWithIndex.map { case ((c, s, e), i) => (i + 1L, c, s, e) }
+    check(FixedGenome(Map.empty), many, bounds(big.shuffle(many).take(600)) ++
+      Seq.fill(400)((chrs(big.nextInt(2)), 1L + big.nextInt(bigLen.toInt))))
   }
 
   test("one chromosome over persisted tables: one model pass, no stream " +
-    "exchange, at most 6 jobs") {
+    "exchange, at most 2 jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
     import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec,
       SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -436,13 +461,16 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     val featureScans = model.collect {
       case s: InMemoryTableScanExec
         if s.relation.output.exists(_.name == "ftype") => s }
-    val finalAggs = model.collect {
-      case a: BaseAggregateExec
-        if a.aggregateExpressions.forall(e => e.mode == Final ||
-          e.mode == Complete) => a }
-    assert(featureScans.length == 1 && finalAggs.length == 1,
+    // the model's query is one narrow pass: no aggregate, join or exchange
+    val wide = model.collect {
+      case a: BaseAggregateExec => a
+      case j: BaseJoinExec => j
+      case e: ShuffleExchangeLike => e
+      case b: BroadcastExchangeLike => b
+    }
+    assert(featureScans.length == 1 && wide.isEmpty,
       s"features scanned ${featureScans.length}x, " +
-        s"${finalAggs.length} final aggregates:\n${eager.head._2.executedPlan}")
+        s"${wide.map(_.nodeName)} in the model:\n${eager.head._2.executedPlan}")
 
     // the apply plan: no shuffle anywhere (the gene ranges arrive by
     // broadcast), and no exon array deserialized per row
@@ -464,7 +492,7 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     assert(lookups.isEmpty, s"gene lookup planned in the apply plan:\n$applyPlan")
 
     val ours = jobs.asScala.count(_._2 == "annotate-one-chr")
-    assert(ours >= 1 && ours <= 6, s"$ours jobs for one annotate call")
+    assert(ours >= 1 && ours <= 2, s"$ours jobs for one annotate call")
     Seq(g, t, f, v).foreach(_.unpersist())
   }
 
@@ -488,10 +516,40 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     }
   }
 
+  test("one model over two variant frames reads each hit CDS once") {
+    val g = Seq((1L, "1", 1L, 70L), (2L, "1", 100L, 140L), (3L, "1", 150L, 190L),
+      (4L, "1", 200L, 250L), (5L, "1", 260L, 295L))
+      .toDF("gene_id", "chr", "gstart", "gstop")
+    // 10 and 11 coding and hit in exons, 12 non-coding, 13 reached only by
+    // an intronic variant, 14 reached by none; every exon is its own range
+    val t = Seq((10L, 1L, "+", false), (11L, 2L, "-", false), (12L, 3L, "+", true),
+      (13L, 4L, "+", false), (14L, 5L, "+", false))
+      .toDF("tr_id", "gene_id", "strand", "non_coding")
+    val f = Seq((10L, "EXONS", 1L, 30L), (10L, "EXONS", 41L, 60L),
+      (11L, "EXONS", 101L, 130L), (12L, "EXONS", 151L, 180L),
+      (13L, "EXONS", 201L, 230L), (14L, "EXONS", 261L, 290L))
+      .toDF("tr_id", "ftype", "fstart", "fstop")
+    val rnd = new scala.util.Random(3)
+    val counting = CountingGenome("two-frames",
+      FixedGenome(Map("1" -> Seq.fill(300)("ACGT"(rnd.nextInt(4))).mkString)))
+    val model = TranscriptAnnotator.model(g, t, f, counting)
+    assert(counting.reads.isEmpty, "the model read a CDS")
+    val frames = Seq(Seq((1L, 5L), (2L, 160L), (3L, 235L)),
+      Seq((4L, 45L), (5L, 110L), (6L, 8L), (7L, 160L)))
+    val calls = frames.flatMap { vs =>
+      TranscriptAnnotator.apply(vs.map { case (id, p) => (id, "1", p, "A", "C") }
+        .toDF("var_id", "chr", "pos", "ref_nuc", "var_nuc"), model).collect()
+        .filter(_.syn_status.isDefined).map(a => (a.var_id, a.tr_id))
+    }
+    assert(calls.sorted == Seq((1L, 10L), (4L, 10L), (5L, 11L), (6L, 10L)), calls)
+    assert(counting.reads == Map((1L, 30L) -> 1, (41L, 60L) -> 1, (101L, 130L) -> 1),
+      counting.reads)
+  }
+
   test("null gene_id or chr never matches") {
     // the old (gene_id, chr) inner join matched no null key; a variant
-    // with no chr or pos and a gene row with no gene_id, chr or gstart
-    // produce nothing
+    // with no chr or pos, a gene row with no gene_id, chr or gstart and a
+    // transcript row with no gene_id, tr_id or non_coding produce nothing
     val out = TranscriptAnnotator.annotate(
         Seq((1L, Some("1"), Some(5L), "C", "T"), (2L, None, Some(5L), "C", "T"),
           (3L, Some("1"), None, "C", "T"))
@@ -499,9 +557,11 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
         Seq((Some(1L), Some("1"), Some(1L), 18L), (None, Some("1"), Some(1L), 18L),
           (Some(1L), None, Some(1L), 18L), (Some(1L), Some("1"), None, 18L))
           .toDF("gene_id", "chr", "gstart", "gstop"),
-        Seq((10L, Some(1L), "+", false), (11L, None, "+", false))
+        Seq((Some(10L), Some(1L), "+", Some(false)), (Some(11L), None, "+", Some(false)),
+          (None, Some(1L), "+", Some(false)), (Some(12L), Some(1L), "+", None))
           .toDF("tr_id", "gene_id", "strand", "non_coding"),
-        Seq((10L, "EXONS", 1L, 9L), (11L, "EXONS", 1L, 9L))
+        Seq((Some(10L), "EXONS", 1L, 9L), (Some(11L), "EXONS", 1L, 9L),
+          (None, "EXONS", 1L, 9L), (Some(12L), "EXONS", 1L, 9L))
           .toDF("tr_id", "ftype", "fstart", "fstop"),
         genome)
       .collect()
@@ -518,4 +578,21 @@ class TranscriptAnnotatorSpec extends AnyFunSuite {
     assert(a.triplet_error == "T")
     assert(a.syn_status.contains("nonsynonymous")) // still callable at AA 2
   }
+}
+
+/** A genome that counts its reads per (start, stop) in a JVM-wide map
+  * under its tag: it travels inside the broadcast model, so it cannot
+  * hold the counts itself. */
+final case class CountingGenome(tag: String, base: FixedGenome)
+    extends TranscriptAnnotator.GenomeSource {
+  def chunk(chr: String, start: Long, stop: Long): String = {
+    CountingGenome.counts.merge((tag, start, stop), 1, (a, b) => a + b)
+    base.chunk(chr, start, stop)
+  }
+  def reads: Map[(Long, Long), Int] = CountingGenome.counts.asScala.collect {
+    case ((`tag`, s, e), n) => (s, e) -> n }.toMap
+}
+object CountingGenome {
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Int]()
 }
