@@ -213,50 +213,13 @@ object Intervals {
                              startA: String, stopA: String,
                              startB: String, stopB: String,
                              keys: Seq[String], binWidth: Long,
-                             num: Int, den: Int,
-                             bandPrune: Boolean = false): DataFrame = {
+                             num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num <= den,
       s"reciprocal fraction must be in (0, 1], got $num/$den")
-    // Optional LENGTH-BAND prune piggybacked on the bin key (valid
-    // only at the bedtools default r = 1/2, where the rule implies a
-    // size constraint the join key can carry): ov ≤ min(len) and the
-    // reciprocal test needs den·ov ≥ num·max(len), so at num/den = 1/2
-    // a match requires max(len) ≤ 2·min(len) — i.e. the EXACT
-    // log2-bands (length(bin(len))−1, minimal-binary length: no float
-    // log at band edges) differ by AT MOST 1. Banding the join key and
-    // exploding one side to band±1 prunes size-incompatible pairs
-    // BEFORE the candidate product materializes — decisive when call
-    // lengths span DECADES (real SV sets: 50 bp indels next to 100 kb
-    // CNVs would otherwise cross-product inside every coordinate bin),
-    // a measured wash-to-slight-loss when lengths share one band
-    // (synthetic one-decade lengths: the ×3 replication buys nothing —
-    // hence opt-in). Strategy, not semantics: spec proves equality
-    // with the unbanded derivation on cross-decade lengths.
-    // the prune derivation is specific to r = 1/2 — honoring the flag
-    // at another ratio would need a different band width, so a caller
-    // requesting it gets an error, not a silent unpruned plan
-    // (ADVICE r11)
-    require(!bandPrune || num * 2 == den,
-      s"bandPrune is derived for num/den = 1/2 only, got $num/$den")
-    val banded = bandPrune && num * 2 == den
-    def bandOf(len: Column): Column = length(bin(len)) - 1
-    val aB =
-      if (banded)
-        a.withColumn("__band", explode(array(
-          bandOf(col(stopA) - col(startA) + 1) - 1,
-          bandOf(col(stopA) - col(startA) + 1),
-          bandOf(col(stopA) - col(startA) + 1) + 1)))
-      else a
-    val bB =
-      if (banded) b.withColumn("__band",
-        bandOf(col(stopB) - col(startB) + 1))
-      else b
-    val extraKeys = if (banded) keys :+ "__band" else keys
     val ov = least(col(stopA), col(stopB)) -
       greatest(col(startA), col(startB)) + 1
-    val joined = RangeJoin.overlapJoined(aB, bB, startA, stopA,
-      startB, stopB, extraKeys, binWidth)
-    (if (banded) joined.drop("__band") else joined)
+    RangeJoin.overlapJoined(a, b, startA, stopA, startB, stopB, keys,
+        binWidth)
       .filter(lit(den) * ov >= lit(num) * (col(stopA) - col(startA) + 1) &&
         lit(den) * ov >= lit(num) * (col(stopB) - col(startB) + 1))
       .withColumn("ov", ov)

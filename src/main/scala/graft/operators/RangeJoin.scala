@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Distributed point-in-interval join: "which ranges contain this
   * position", for interval sides that need not fit in memory (the genic
-  * status fixup's merged gene spans, wiggle and chain blocks,
-  * nearest-feature windows, the graded interval queries). The annotator's
-  * gene lookups (the reference's GeneCache, VariantLoad3.java:682-694)
-  * are not its job: their genes ride in [[TranscriptAnnotator.model]]'s
-  * broadcast, sorted per chromosome.
+  * status fixup's merged gene spans, nearest-feature windows, the
+  * graded interval queries). The annotator's gene lookups (the
+  * reference's GeneCache, VariantLoad3.java:682-694) are not its job:
+  * their genes ride in [[TranscriptAnnotator.model]]'s broadcast,
+  * sorted per chromosome.
   *
   * The reference holds all intervals of one chromosome in a driver-side
   * HashMap. When neither side fits anywhere, a naive

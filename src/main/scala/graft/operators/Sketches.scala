@@ -411,10 +411,9 @@ object Sketches {
     *
     * Scale shape: one k-mer posexplode, ONE (id)-partitioned
     * bounded-frame window pass (w rows; sequences chunk id-locally at
-    * contig scale — the LineBlocks stitching pattern — so no frame
-    * ever exceeds a chunk), one distinct + id-sized rollup. The
-    * pos·2¹⁶ packing caps positions at 65536 per id — chunk longer
-    * sequences (documented, asserted nowhere hot).
+    * contig scale, so no frame ever exceeds a chunk), one distinct +
+    * id-sized rollup. The pos·2¹⁶ packing caps positions at 65536 per
+    * id — chunk longer sequences (documented, asserted nowhere hot).
     *
     * @return (id, n_windows, n_minimizers, density6); sequences
     *         shorter than k+w−1 have no window and emit nothing

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.RangeJoin
-
 /** UCSC `.chain` liftover-file parser → ungapped alignment blocks.
   *
   * Format (genome.ucsc.edu chain spec): a header line
@@ -20,14 +18,14 @@ import graft.operators.RangeJoin
   * target DESCENDING. tStrand is always `+` per the spec (others are
   * dropped, not guessed at).
   *
-  * Spark shape — the conservation-parser discipline throughout: index
-  * every line once ([[LineBlocks.indexed]]), lift headers into
-  * [decl_idx, next_decl) blocks via the shared two-level lead
-  * ([[LineBlocks]]), interval-join data lines to their header
-  * ([[RangeJoin]], broadcast when the header table is small), then
-  * running block offsets are a PER-CHAIN window (partitioned on the
-  * header index — never global) over the `size+dt` / `size+dq` prefix
-  * sums. Everything downstream is exact integer arithmetic.
+  * Spark shape — the conservation-parser discipline throughout: tag
+  * every line with its header's index in one carried scan
+  * ([[LineBlocks.withDeclIdx]]), equi-join data lines to the parsed
+  * header rows on it, then running block offsets are a PER-CHAIN
+  * window (partitioned on the header index — never global, and on the
+  * join's own key, so it adds no exchange) over the `size+dt` /
+  * `size+dq` prefix sums. Everything downstream is exact integer
+  * arithmetic.
   *
   * Output, one row per ungapped block:
   *  - `chain_id` (trailing id field; header line index when absent),
@@ -40,28 +38,19 @@ import graft.operators.RangeJoin
   */
 object ChainFile {
 
-  /** `binWidth` bins the LINE-INDEX interval join of data lines to
-    * their header. Chain files are header-DENSE (a header every handful
-    * of lines for single-block chains), so the right width is far below
-    * the wiggle parser's 2^16: candidates per data line ≈ binWidth /
-    * lines-per-chain (65536 paired ~16k chains against every line —
-    * measured 13.3 s vs 1.9 s at sf0.1), while a many-block chain just
-    * replicates its one interval row span/binWidth times — linear,
-    * harmless. 64 keeps both regimes cheap. */
-  def blocks(lines: Dataset[String], binWidth: Long = 64,
-             chunkWidth: Long = 1L << 20): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val idxed = LineBlocks.indexed(lines)
-    val maxIdx = idxed.count() - 1
-
+  def blocks(lines: Dataset[String]): DataFrame = {
     val isHeader = col("line").startsWith("chain ") ||
       col("line").startsWith("chain\t")
     def tok(ts: org.apache.spark.sql.Column, i: Int) =
       when(size(ts) >= i, element_at(ts, i))
     val hts = split(trim(col("line")), "\\s+")
-    val decls = idxed.filter(isHeader)
-      .select(col("idx").as("decl_idx"),
+    val tagged = LineBlocks.withDeclIdx(lines, isHeader)
+    // boundaries come from EVERY header — quarantining a malformed
+    // chain afterwards keeps its data lines from leaking into the
+    // preceding chain. tStrand is '+' by spec; anything else is
+    // malformed — drop, the codec quarantine convention.
+    val decls = tagged.filter(isHeader)
+      .select(col("decl_idx"),
         tok(hts, 2).cast("long").as("score"),
         tok(hts, 3).as("s_chr_raw"),
         tok(hts, 5).as("s_strand"),
@@ -70,7 +59,7 @@ object ChainFile {
         tok(hts, 9).cast("long").as("q_size"),
         tok(hts, 10).as("q_strand"),
         tok(hts, 11).cast("long").as("q_off"),
-        coalesce(tok(hts, 13).cast("long"), col("idx")).as("chain_id"))
+        coalesce(tok(hts, 13).cast("long"), col("decl_idx")).as("chain_id"))
       .withColumn("s_chr",
         when(col("s_chr_raw").startsWith("chr"),
           expr("substring(s_chr_raw, 4)")).otherwise(col("s_chr_raw")))
@@ -78,25 +67,12 @@ object ChainFile {
         when(col("t_chr_raw").startsWith("chr"),
           expr("substring(t_chr_raw, 4)")).otherwise(col("t_chr_raw")))
       .drop("s_chr_raw", "t_chr_raw")
-      // tiny projection (one row per chain), cached for its two
-      // consumers (block-boundary lift + the data join)
-      .cache()
-
-    // boundaries come from EVERY header — quarantining a malformed
-    // chain afterwards keeps its data lines from leaking into the
-    // preceding chain's block range. tStrand is '+' by spec; anything
-    // else is malformed — drop, the codec quarantine convention.
-    val bounds = LineBlocks.withNextIdx(decls, maxIdx, chunkWidth)
-      .withColumn("bstart", col("decl_idx") + 1)
-      .withColumn("bstop", col("next_idx") - 1)
-      .filter(col("bstart") <= col("bstop"))
       .filter(col("s_strand") === "+" && col("q_strand").isin("+", "-"))
-      .drop("next_idx")
 
     val dts = split(trim(col("line")), "\\s+")
-    val data = idxed
+    val data = tagged
       .filter(!isHeader && length(trim(col("line"))) > 0)
-      .select(col("idx"),
+      .select(col("idx"), col("decl_idx"),
         tok(dts, 1).cast("long").as("bsize"),
         coalesce(tok(dts, 2).cast("long"), lit(0L)).as("dt"),
         coalesce(tok(dts, 3).cast("long"), lit(0L)).as("dq"))
@@ -106,8 +82,7 @@ object ChainFile {
     // partitioned on the owning header, never global
     val w = Window.partitionBy("decl_idx").orderBy("idx")
       .rowsBetween(Window.unboundedPreceding, -1)
-    RangeJoin.joined(data, bounds, "idx", "bstart", "bstop",
-        keys = Nil, binWidth = binWidth)
+    data.join(decls, "decl_idx")
       .withColumn("s_cum",
         coalesce(sum(col("bsize") + col("dt")).over(w), lit(0L)))
       .withColumn("q_cum",

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * record assembly: lines carry an index, records group on
   * `line_no div 4`, and ONE bounded partial agg (4 rows per group,
   * map-side combinable) pivots the quartet into a read row. At 100 TB
-  * the index comes from the splitter (a record-aligned chunker à la
-  * [[LineBlocks]] — FASTQ's `@`-ambiguity means byte-split files must
-  * stitch at record boundaries, same as the wiggle blocks).
+  * the index is the caller's global line number
+  * ([[LineBlocks.indexed]] gives one): FASTQ's `@`-ambiguity means a
+  * byte split cannot find a record start locally, so records group on
+  * that number, never on `@`.
   *
   * Malformed records QUARANTINE, not fail (the Sam gate discipline):
   * a record missing its `@` header or `+` separator, with a

@@ -176,10 +176,15 @@ class EntrySpec extends AnyFunSuite {
   // event_funnel's windowed join is the one graded plan with a range
   // predicate that no RangeJoin call bins. sam_alignment_stats,
   // decontam_ngram and corpus_mix run the Sam and Curation rollups that
-  // streaming callers share.
-  test("oracle parity at sf0.001: annotator, funnel, SAM, decontam, corpus_mix queries") {
+  // streaming callers share. q26_conservation_parse and
+  // liftover_positions run the wiggle and chain parsers' carried
+  // declaration scan; sv_reciprocal_overlap runs the reciprocal-overlap
+  // filter over RangeJoin.overlapJoined.
+  test("oracle parity at sf0.001: annotator, funnel, SAM, decontam, " +
+      "corpus_mix, wiggle, chain and SV-overlap queries") {
     val names = Seq("q24_annotate_variants", "q32_verify_aa", "variant_dnds",
-      "event_funnel", "sam_alignment_stats", "decontam_ngram", "corpus_mix")
+      "event_funnel", "sam_alignment_stats", "decontam_ngram", "corpus_mix",
+      "q26_conservation_parse", "liftover_positions", "sv_reciprocal_overlap")
     val canRun =
       try new ProcessBuilder("python3", "-c", "import duckdb").start().waitFor() == 0
       catch { case _: Exception => false }

@@ -316,12 +316,12 @@ class ExtendedOpsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("reciprocalOverlapPairs length-band prune equals brute force") {
+  test("reciprocalOverlapPairs equals brute force on cross-decade lengths") {
     import graft.operators.Intervals
     // deterministic pseudo-random intervals with lengths spanning
-    // decades (1..~4100) — the regime the log2 band prune targets;
-    // brute-force the reciprocal rule driver-side and require exact
-    // pair-set equality (banding is strategy, not semantics)
+    // decades (1..~4100), so many pairs overlap without being size
+    // compatible; brute-force the reciprocal rule driver-side and
+    // require exact pair-set equality
     val aRows = (0 until 60).map { i =>
       val chr = i % 3L
       val start = (i * 137L) % 5000
@@ -345,8 +345,7 @@ class ExtendedOpsSpec extends AnyFunSuite {
         aRows.toDF("chr", "id_a", "a_start", "a_stop"),
         bRows.toDF("chr", "id_b", "b_start", "b_stop"),
         "a_start", "a_stop", "b_start", "b_stop",
-        keys = Seq("chr"), binWidth = 256, num = 1, den = 2,
-        bandPrune = true)
+        keys = Seq("chr"), binWidth = 256, num = 1, den = 2)
       .select("id_a", "id_b", "ov")
       .as[(Long, Long, Long)].collect().toSet
     assert(got == brute)

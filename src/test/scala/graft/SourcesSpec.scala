@@ -36,23 +36,39 @@ class SourcesSpec extends AnyFunSuite {
     assert(out == Set(("3", 7L), ("3", 8L)))
   }
 
-  test("wiggle: chunked lead stitches blocks across chunk boundaries") {
-    // chunkWidth=2 puts consecutive declarations in different idx-chunks,
-    // exercising the per-chunk-firsts stitch path; interleaved chrs prove
-    // blocks end at the next declaration of ANY chromosome
+  /** `lines` as ordered Datasets of 1, 2 and 3 partitions, of one line
+    * per partition (most of them holding no declaration), and of one
+    * line per partition with an empty partition before each. */
+  private def slicings(lines: Seq[String]) =
+    Seq(1, 2, 3, lines.size, 2 * lines.size).map(n =>
+      n -> spark.sparkContext.parallelize(lines, n).toDS())
+
+  test("wiggle: blocks stay whole across partition boundaries") {
+    // interleaved chrs prove blocks end at the next declaration of ANY
+    // chromosome
     val lines = Seq(
       "fixedStep chrom=chr1 start=10 step=1",
       "0.1",
       "fixedStep chrom=chr2 start=20 step=2",
       "0.2", "0.3",
       "fixedStep chrom=chr1 start=30 step=1",
-      "0.4").toDS()
-    for (cw <- Seq(2L, 3L, 1L << 20)) {
-      val out = Conservation.parseFixedStep(lines, chunkWidth = cw).collect()
+      "0.4")
+    for ((n, ds) <- slicings(lines)) {
+      val out = Conservation.parseFixedStep(ds).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
       assert(out == Set(
         ("1", 10L, 0.1), ("2", 20L, 0.2), ("2", 22L, 0.3), ("1", 30L, 0.4)),
-        s"chunkWidth=$cw")
+        s"$n partitions")
+    }
+  }
+
+  test("wiggle: lines before the first declaration are dropped") {
+    val lines = Seq("0.7", "", "0.8",
+      "fixedStep chrom=chr4 start=5 step=2", "0.1", "0.2")
+    for ((n, ds) <- slicings(lines)) {
+      val out = Conservation.parseFixedStep(ds).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(out == Set(("4", 5L, 0.1), ("4", 7L, 0.2)), s"$n partitions")
     }
   }
 
@@ -97,18 +113,30 @@ class SourcesSpec extends AnyFunSuite {
     assert(lift(31L, b2) == 24L && lift(40L, b2) == 33L)
   }
 
-  test("chain: chunked lead stitches chains across chunk boundaries") {
+  test("chain: chains stay whole across partition boundaries") {
     import graft.sources.ChainFile
     val lines = Seq(
       "chain 1 chr1 1000 + 0 4 chrQ 100 + 0 4 1",
       "4",
       "chain 1 chr1 1000 + 50 54 chrQ 100 + 10 14 2",
-      "4").toDS()
-    for (cw <- Seq(1L, 2L, 1L << 20)) {
-      val b = ChainFile.blocks(lines, chunkWidth = cw).collect()
+      "4")
+    for ((n, ds) <- slicings(lines)) {
+      val b = ChainFile.blocks(ds).collect()
         .map(r => (r.getAs[Long]("chain_id"), r.getAs[Long]("s_start"),
           r.getAs[Long]("t_first"))).toSet
-      assert(b == Set((1L, 1L, 1L), (2L, 51L, 11L)), s"chunkWidth=$cw")
+      assert(b == Set((1L, 1L, 1L), (2L, 51L, 11L)), s"$n partitions")
+    }
+  }
+
+  test("chain: lines before the first header are dropped") {
+    import graft.sources.ChainFile
+    val lines = Seq("7 2 2", "", "9",
+      "chain 1 chr1 1000 + 0 4 chrQ 100 + 0 4 1", "4")
+    for ((n, ds) <- slicings(lines)) {
+      val b = ChainFile.blocks(ds).collect()
+        .map(r => (r.getAs[Long]("chain_id"), r.getAs[Long]("s_start"),
+          r.getAs[Long]("s_stop"), r.getAs[Long]("t_first"))).toSet
+      assert(b == Set((1L, 1L, 4L, 1L)), s"$n partitions")
     }
   }
 
@@ -159,6 +187,11 @@ class SourcesSpec extends AnyFunSuite {
 
   test("wiggle: empty input yields empty output (no NPE)") {
     assert(Conservation.parseFixedStep(spark.emptyDataset[String]).count() == 0)
+  }
+
+  test("chain: empty input yields empty output (no NPE)") {
+    import graft.sources.ChainFile
+    assert(ChainFile.blocks(spark.emptyDataset[String]).count() == 0)
   }
 
   // ---- Polyphen.parseResults / loadPredictions ----
